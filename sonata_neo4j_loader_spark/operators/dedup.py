@@ -146,30 +146,60 @@ def _affine_params(num_hashes: int, seed: int) -> list[tuple[int, int]]:
     return out
 
 
-def minhash_signature(
-    shingles: Column, num_hashes: int = 32, seed: int = 42
-) -> Column:
-    """MinHash signature (array<bigint> of length ``num_hashes``).
-
-    One string hash per shingle (xxhash64 masked to 31 bits), then the
-    classic affine family h_i(x) = (a_i·x + b_i) mod (2^31−1) — the 31-bit
-    mask keeps a_i·x inside a 64-bit long under ANSI mode, and the string
-    hashing cost is paid once, not ``num_hashes`` times.
-
-    NOTE: callers should bind ``shingles`` to a *projected column*, not an
-    inline expression — Catalyst inlines expression arguments into every
-    signature branch (see :func:`minhash_lsh_candidates`).
-    """
-    hashed = F.transform(
+def _shingle_hashes(shingles: str, seed: int) -> Column:
+    """One 31-bit string hash per shingle (xxhash64 masked to 31 bits) —
+    the mask keeps the affine family's a_i·x inside a 64-bit long under
+    ANSI mode, and the string hashing cost is paid once, not once per
+    signature row."""
+    return F.transform(
         shingles, lambda s: F.xxhash64(s, F.lit(seed)).bitwiseAND(F.lit(0x7FFFFFFF))
     )
-    params = _affine_params(num_hashes, seed)
+
+
+def _signature(hashes: str, num_hashes: int, seed: int) -> Column:
+    """MinHash signature (array<bigint> of length ``num_hashes``) over a
+    :func:`_shingle_hashes` column: the classic affine family
+    h_i(x) = (a_i·x + b_i) mod (2^31−1), minimized per row.
+
+    ``hashes`` must name a *projected column*, not an inline expression —
+    Catalyst would inline the expression into every one of the
+    ``num_hashes`` branches and recompute the shingle pipeline in each.
+    """
 
     def affine(a: int, b: int):
         return lambda h: F.pmod(a * h + b, F.lit(_MERSENNE31))
 
     return F.array(
-        *[F.array_min(F.transform(hashed, affine(a, b))) for (a, b) in params]
+        *[
+            F.array_min(F.transform(hashes, affine(a, b)))
+            for (a, b) in _affine_params(num_hashes, seed)
+        ]
+    )
+
+
+def _band_buckets(sig: str, num_hashes: int, bands: int) -> Column:
+    """Explode a signature column into one ``(band, bucket)`` struct per
+    band, ``bucket`` hashing the band's ``num_hashes/bands`` signature rows:
+    two docs are LSH candidates iff they share a (band, bucket)."""
+    rows_per_band = num_hashes // bands
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    F.xxhash64(
+                        F.concat_ws(
+                            ",",
+                            *[
+                                F.element_at(sig, b * rows_per_band + r + 1)
+                                for r in range(rows_per_band)
+                            ],
+                        )
+                    ).alias("bucket"),
+                )
+                for b in range(bands)
+            ]
+        )
     )
 
 
@@ -226,12 +256,10 @@ def banded_postings(
     """Banded MinHash-LSH postings ``(_id, band, bucket)`` — one row per
     (doc, band), where ``bucket`` hashes the band's signature slice.
 
-    The shared core of :func:`minhash_lsh_candidates` (self-join pairing)
-    and :func:`build_minhash_index` / :func:`minhash_incremental_duplicates`
-    (persisted-index probing): two docs are LSH candidates iff they share a
-    (band, bucket) posting.
+    Persisted by :func:`build_minhash_index` and probed by
+    :func:`minhash_incremental_duplicates`; :func:`minhash_near_duplicates`
+    builds the same postings with its verify payload attached.
     """
-    rows_per_band = num_hashes // bands
     # Two projection steps: shingles materialize once per row, then the 31-bit
     # shingle hashes once, and only then the num_hashes signature branches —
     # passing the shingle expression inline would make Catalyst recompute the
@@ -240,79 +268,11 @@ def banded_postings(
         _spread(df.select(F.col(id_col).alias("_id"), text_col), "_id"),
         text_col,
         shingle_k,
-    ).select(
-        "_id",
-        F.transform(
-            "shingles", lambda s: F.xxhash64(s, F.lit(seed)).bitwiseAND(F.lit(0x7FFFFFFF))
-        ).alias("hs"),
-    )
-    params = _affine_params(num_hashes, seed)
-
-    def affine(a: int, b: int):
-        return lambda h: F.pmod(a * h + b, F.lit(_MERSENNE31))
-
-    sigs = hashed.select(
-        "_id",
-        F.array(
-            *[F.array_min(F.transform("hs", affine(a, b))) for (a, b) in params]
-        ).alias("sig"),
-    )
+    ).select("_id", _shingle_hashes("shingles", seed).alias("hs"))
+    sigs = hashed.select("_id", _signature("hs", num_hashes, seed).alias("sig"))
     return sigs.select(
-        "_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            F.concat_ws(
-                                ",",
-                                *[
-                                    F.element_at("sig", b * rows_per_band + r + 1)
-                                    for r in range(rows_per_band)
-                                ],
-                            )
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
+        "_id", _band_buckets("sig", num_hashes, bands).alias("bb")
     ).select("_id", "bb.band", "bb.bucket")
-
-
-def minhash_lsh_candidates(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_k: int = 5,
-    num_hashes: int = 32,
-    bands: int = 8,
-    seed: int = 42,
-    max_bucket_size: int | None = 1000,
-) -> DataFrame:
-    """Candidate near-dup pairs via banded MinHash-LSH.
-
-    signature → ``bands`` bands of ``num_hashes/bands`` rows; docs agreeing
-    on any full band share a bucket; within-bucket self-join emits pairs
-    (id_a < id_b), deduped across bands. Buckets larger than
-    ``max_bucket_size`` are dropped (degenerate content); at 10^12 docs this
-    bound is what keeps the band-join skew-free.
-    """
-    banded = banded_postings(
-        df, id_col, text_col, shingle_k, num_hashes, bands, seed
-    )
-    bounded = drop_hot_buckets(
-        banded, ["band", "bucket"], max_bucket_size, "minhash_lsh_candidates"
-    )
-    a = bounded.select("band", "bucket", F.col("_id").alias("id_a"))
-    b = bounded.select("band", "bucket", F.col("_id").alias("id_b"))
-    return (
-        a.join(b, ["band", "bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
 
 
 def jaccard_verify(
@@ -402,9 +362,10 @@ def minhash_near_duplicates(
 ) -> DataFrame:
     """MinHash-LSH candidates verified by true Jaccard ≥ threshold.
 
-    Output is IDENTICAL to ``jaccard_verify(minhash_lsh_candidates(...))``
-    — same bounded-bucket candidate pairs, same exact string-shingle
-    Jaccard — but the plan follows guide §8: decide with small rows, move
+    Output is IDENTICAL to running ``jaccard_verify`` on every pair that
+    shares a :func:`banded_postings` bucket of ``2..max_bucket_size``
+    members — same candidate pairs, same exact string-shingle Jaccard —
+    but the plan follows guide §8: decide with small rows, move
     heavy rows once. The r05 shape attached the full shingle arrays
     (~1.6 KB/doc) to EVERY candidate pair before the exact verify; at sf1.0
     that was 9.9 M pairs of which only 2,544 were real (99.97% false
@@ -442,11 +403,10 @@ def minhash_near_duplicates(
     Measured sf1.0 (50 K docs, local[32], noop sink, min-of-2): 61.5 s →
     9.5 s, byte-identical 2,544-pair output. ``max_bucket_size=None``
     disables the bucket bound (exact small-scale mode, same contract as
-    :func:`minhash_lsh_candidates`).
+    :func:`drop_hot_buckets`).
     """
     from pyspark.sql import Window
 
-    rows_per_band = num_hashes // bands
     nwords = _BITMAP_WORDS
     nbits = nwords * 64
     sh = add_shingles(
@@ -457,9 +417,7 @@ def minhash_near_duplicates(
     hashed = sh.select(
         "_id",
         F.coalesce(F.size("shingles"), F.lit(0)).alias("n"),
-        F.transform(
-            "shingles", lambda s: F.xxhash64(s, F.lit(seed)).bitwiseAND(F.lit(0x7FFFFFFF))
-        ).alias("hs"),
+        _shingle_hashes("shingles", seed).alias("hs"),
     )
     word_cols = [
         F.coalesce(
@@ -472,43 +430,12 @@ def minhash_near_duplicates(
         ).alias(f"_bm{w}")
         for w in range(nwords)
     ]
-    params = _affine_params(num_hashes, seed)
-
-    def affine(a: int, b: int):
-        return lambda h: F.pmod(a * h + b, F.lit(_MERSENNE31))
-
     sigs = hashed.select(
-        "_id",
-        "n",
-        *word_cols,
-        F.array(
-            *[F.array_min(F.transform("hs", affine(a, b))) for (a, b) in params]
-        ).alias("sig"),
+        "_id", "n", *word_cols, _signature("hs", num_hashes, seed).alias("sig")
     )
     bm_names = [f"_bm{w}" for w in range(nwords)]
     posts = sigs.select(
-        "_id",
-        "n",
-        *bm_names,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            F.concat_ws(
-                                ",",
-                                *[
-                                    F.element_at("sig", b * rows_per_band + r + 1)
-                                    for r in range(rows_per_band)
-                                ],
-                            )
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
+        "_id", "n", *bm_names, _band_buckets("sig", num_hashes, bands).alias("bb")
     ).select("_id", "n", *bm_names, "bb.band", "bb.bucket")
     if max_bucket_size is not None:
         _LOG.info(
@@ -859,7 +786,7 @@ def simhash_near_duplicates(
     Skew bound: a (chunk, val) bucket holding p docs yields p² join rows
     on one shuffle key — short/templated corpora collapse to few simhash
     values, so web scale needs the same hot-bucket bound as
-    :func:`minhash_lsh_candidates`. Buckets larger than
+    :func:`minhash_near_duplicates`. Buckets larger than
     ``max_bucket_size`` are dropped via the aggregate-then-semi-join
     pattern (not a window); a doc in a degenerate bucket usually shares a
     *different*, smaller chunk bucket with its true near-dups, and the

@@ -29,15 +29,14 @@ def link_mentions(
     entities: DataFrame,
     strategy: str = "broadcast",
     salt_buckets: int = 8,
-    surface_col: str = "surface",
 ) -> DataFrame:
     """mentions(..., surface) ⋈ entities -> mentions + (entity_id, entity_type)."""
     if strategy == "broadcast":
-        return mentions.join(F.broadcast(entities), surface_col, "inner")
+        return mentions.join(F.broadcast(entities), "surface", "inner")
     if strategy == "salted":
         salted_mentions = mentions.withColumn(
             "_salt",
-            F.pmod(F.xxhash64(F.col("doc_id"), F.col(surface_col)), F.lit(salt_buckets)).cast(
+            F.pmod(F.xxhash64(F.col("doc_id"), F.col("surface")), F.lit(salt_buckets)).cast(
                 "int"
             ),
         )
@@ -45,6 +44,6 @@ def link_mentions(
             "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
         )
         return salted_mentions.join(
-            salted_entities, [surface_col, "_salt"], "inner"
+            salted_entities, ["surface", "_salt"], "inner"
         ).drop("_salt")
     raise ValueError(f"unknown strategy: {strategy}")

@@ -5,11 +5,12 @@ sclass labels, population names, morphology media refs) and synapse
 statements in document text. Two interchangeable implementations, tested
 for equality:
 
-* ``impl='arrow'`` (default) — vectorized ``pandas_udf``: regex runs as
-  pandas C-backed ``str.extractall`` over Arrow record batches, zero
-  per-row Python loops (north rule).
-* ``impl='native'`` — pure ``pyspark.sql.functions`` (``regexp_extract_all``
-  inside whole-stage codegen), the everything-JVM fast path.
+* ``impl='native'`` (default) — pure ``pyspark.sql.functions``
+  (``regexp_extract_all`` inside whole-stage codegen), the everything-JVM
+  fast path.
+* ``impl='arrow'`` — vectorized ``pandas_udf``: regex runs as pandas
+  C-backed ``str.findall`` over Arrow record batches, zero per-row Python
+  loops (north rule); kept as the reference twin.
 
 The reference has no mention detection (its entities arrive pre-structured
 from HDF5, ``circuit/data_extraction.py:52-58``); the *vocabulary* of what
@@ -155,17 +156,18 @@ def _extract_node_attrs(doc_text: pd.Series) -> pd.Series:
     return out
 
 
-def extract_documents(parsed: DataFrame, impl: str = "arrow") -> DataFrame:
+def extract_documents(parsed: DataFrame, impl: str = "native") -> DataFrame:
     """ONE pass over document text -> compact extraction frame.
 
     Output: (doc_id, media_refs, mentions array<struct>, synapse struct,
     node_attrs map<string,string> — layer/region property payloads).
-    Both pandas UDFs sit in the same projection, so Spark fuses them into a
-    single ArrowEvalPython node — the text crosses the Arrow boundary once.
-    The result is ~100× smaller than the raw text, which is what makes it
-    the *correct* thing to persist at 100 TB: downstream branches (mention
-    linking and synapse assembly) re-read this compact frame instead of
-    re-scanning + re-parsing + re-regexing the full corpus once each.
+    With ``impl='arrow'`` the pandas UDFs sit in the same projection, so
+    Spark fuses them into a single ArrowEvalPython node — the text crosses
+    the Arrow boundary once. The result is ~100× smaller than the raw
+    text, which is what makes it the *correct* thing to persist at 100 TB:
+    downstream branches (mention linking and synapse assembly) re-read
+    this compact frame instead of re-scanning + re-parsing + re-regexing
+    the full corpus once each.
     """
     if impl == "arrow":
         return parsed.select(
@@ -312,22 +314,20 @@ def attribute_pairs_from_extracted(extracted: DataFrame) -> DataFrame:
     paired INSIDE each extraction row — zero shuffle.
 
     The compact extraction frame already co-locates every mention of a
-    document in one row, so the subject×object pairing that
-    ``triples.neuron_attribute_triples`` expresses as a corpus-scale
-    doc_id self-join (a full shuffle of both mention sides) is really a
-    per-row array cross product: neuron-kind mentions × everything else
-    (media refs ride along as kind='media', exactly as in
-    :func:`mentions_from_extracted`). Downstream, both surfaces link via
+    document in one row, so the subject×object pairing that a doc_id
+    self-join of linked mentions would express (a corpus-scale shuffle of
+    both mention sides) is really a per-row array cross product:
+    neuron-kind mentions × everything else (media refs ride along as
+    kind='media', exactly as in :func:`mentions_from_extracted`). Downstream, both surfaces link via
     broadcast joins and the final (subj, pred, obj) dedup is the ONLY
     exchange — and it map-side-combines to dimension size. At 100 TB the
     removed shuffle is corpus-scale; this one is the difference between
     shuffling every mention row and shuffling the distinct triple set.
 
     ASSUMES ``doc_id`` uniquely identifies an extraction row. Pairing here
-    is per ROW, while ``triples.neuron_attribute_triples`` pairs per
-    ``doc_id`` — if a corpus carried duplicate doc_id rows, the self-join
-    form would also produce cross-ROW pairs within the id and the two
-    paths would diverge. ``parse.parse_documents`` preserves input
+    is per ROW, while a doc_id self-join pairs per ``doc_id`` — if a
+    corpus carried duplicate doc_id rows, the self-join form would also
+    produce cross-ROW pairs within the id and the two would diverge. ``parse.parse_documents`` preserves input
     cardinality, so uniqueness holds whenever the source corpus is keyed
     by doc_id (all engine sources are); corpora that are not must be
     exact-deduped first (operators/dedup.py). The arrow-vs-native equality
@@ -364,26 +364,3 @@ def synapses_from_extracted(extracted: DataFrame) -> DataFrame:
         .where(F.col("src_surface").isNotNull() & F.col("tgt_surface").isNotNull())
     )
 
-
-def detect_mentions(parsed: DataFrame, impl: str = "arrow") -> DataFrame:
-    """parsed documents -> (doc_id, kind, surface) mention rows.
-
-    Media refs are mentions too (kind='media', surface=the ref) — the
-    reference stores morphology as a plain node attribute
-    (``nodes_A.h5.txt`` dataset ``morphology``). Standalone convenience
-    over :func:`extract_documents`; Catalyst prunes the unused synapse
-    half of the extraction projection.
-    """
-    return mentions_from_extracted(extract_documents(parsed, impl))
-
-
-def detect_synapses(parsed: DataFrame, impl: str = "arrow") -> DataFrame:
-    """parsed documents -> one row per synapse statement.
-
-    Output: (doc_id, src_surface, tgt_surface, props map, afferent_section_type);
-    docs without a synapse statement are dropped. Multiset semantics: one
-    output row per document, duplicates preserved (Cypher CREATE,
-    reference ``circuit/neo4j_operations.py:391``). Standalone convenience
-    over :func:`extract_documents`; the mention half prunes away.
-    """
-    return synapses_from_extracted(extract_documents(parsed, impl))

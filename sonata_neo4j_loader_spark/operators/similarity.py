@@ -385,8 +385,8 @@ def embedding_near_duplicates(
     Skew bound: a dense cluster of near-identical embeddings — exactly the
     expected input for a near-dup pass — lands in ONE (band, bucket) key
     and yields p² join rows there. Buckets larger than ``max_bucket_size``
-    are dropped via aggregate-then-semi-join (same pattern as
-    ``dedup.minhash_lsh_candidates``); a vector in a degenerate bucket can
+    are dropped via aggregate-then-semi-join (``dedup.drop_hot_buckets``);
+    a vector in a degenerate bucket can
     still pair through its other, smaller band buckets.
     ``max_bucket_size=None`` disables the bound (exact small-scale mode,
     what the DuckDB brute-force oracle reproduces). NOT silent: opt-out

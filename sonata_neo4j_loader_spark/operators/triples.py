@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import linking, mentions
+
 # mention kind -> predicate for neuron attribute triples
 ATTRIBUTE_PREDICATES: dict[str, str] = {
     "mtype": "HAS_MTYPE",
@@ -35,45 +37,47 @@ ATTRIBUTE_PREDICATES: dict[str, str] = {
 }
 
 
-def neuron_attribute_triples(linked: DataFrame) -> DataFrame:
-    """linked mentions -> deduped neuron-attribute triples (MERGE semantics).
+def attribute_triples(
+    extracted: DataFrame,
+    entities: DataFrame,
+    strategy: str = "broadcast",
+    salt_buckets: int = 8,
+) -> DataFrame:
+    """Extraction frame -> deduped neuron-attribute triples (MERGE semantics).
 
-    Within each document, the neuron mention is the subject and every
-    co-mentioned attribute entity is an object. The doc_id equi-join stands
-    in for Cypher's per-row ``MATCH (n:Neuron {..}) MATCH (g {name: ..})``
-    pattern (reference ``neo4j_operations.py:216-221``): the "join" to the
-    group is free because the group name *is* the key (SURVEY.md §2.4).
+    The one attribute-triple path, shared by the batch plan and the
+    streaming ingest. Within each document the neuron mention is the
+    subject and every co-mentioned attribute entity an object — Cypher's
+    per-row ``MATCH (n:Neuron {..}) MATCH (g {name: ..})`` pattern
+    (reference ``neo4j_operations.py:216-221``). The pairing happens inside
+    the extraction row (``mentions.attribute_pairs_from_extracted``), so no
+    corpus-scale doc_id join runs; both surfaces then link against
+    ``entities``, whose ids must already be canonical.
     """
-    subjects = linked.where(F.col("kind") == "neuron").select(
-        "doc_id", F.col("entity_id").alias("subj")
-    )
-    pred_map = F.create_map(
-        *[x for k, v in ATTRIBUTE_PREDICATES.items() for x in (F.lit(k), F.lit(v))]
-    )
-    objects = linked.where(F.col("kind") != "neuron").select(
-        "doc_id",
-        pred_map[F.col("kind")].alias("pred"),
-        F.col("entity_id").alias("obj"),
-    )
-    return (
-        subjects.join(objects, "doc_id")
-        .select("subj", "pred", "obj")
-        .where(F.col("pred").isNotNull())
-        .dropDuplicates(["subj", "pred", "obj"])
-    )
+    pairs = mentions.attribute_pairs_from_extracted(extracted)
+    for side in ("subj", "obj"):
+        pairs = (
+            linking.link_mentions(
+                pairs.withColumnRenamed(f"{side}_surface", "surface"),
+                entities,
+                strategy=strategy,
+                salt_buckets=salt_buckets,
+            )
+            .withColumnRenamed("entity_id", side)
+            .drop("surface", "entity_type")
+        )
+    return neuron_attribute_triples_from_pairs(pairs)
 
 
 def neuron_attribute_triples_from_pairs(pairs_linked: DataFrame) -> DataFrame:
     """Linked per-document pairs (subj, kind, obj) -> deduped attribute triples.
 
-    The shuffle-free twin of :func:`neuron_attribute_triples`: pairing
-    happened inside the extraction row (``mentions.
-    attribute_pairs_from_extracted``) and both surfaces are already
-    linked/canonicalized, so all that remains is the kind→predicate map
-    and the MERGE dedup. The dropDuplicates is the only exchange in the
-    whole branch, and partial aggregation shrinks it to the distinct
-    triple set (dimension-sized) before any bytes move. Output is
-    row-identical to the self-join formulation (equality-tested).
+    Both surfaces are already linked/canonicalized, so all that remains is
+    the kind→predicate map and the MERGE dedup. The dropDuplicates is the
+    only exchange in the whole branch, and partial aggregation shrinks it
+    to the distinct triple set (dimension-sized) before any bytes move.
+    Output is row-identical to a doc_id self-join of linked mentions
+    (tests/test_triples_golden.py keeps that join as its reference).
     """
     pred_map = F.create_map(
         *[x for k, v in ATTRIBUTE_PREDICATES.items() for x in (F.lit(k), F.lit(v))]

@@ -92,13 +92,12 @@ def build_triples(
     parsed = parsed.where(F.col("spans_valid"))
     violations = parse.audit_span_invariant(documents, parsed.select("doc_id", "spans"))
 
-    # stage 2: mention detection (Arrow-batched by default). ONE fused
-    # pass over the text (both UDFs in one ArrowEvalPython node) into a
-    # compact extraction frame, persisted — the mention and synapse
-    # branches then each read ~100×-smaller rows instead of re-scanning +
-    # re-parsing + re-regexing the corpus once per branch. Persisting the
-    # *extraction* (not the parsed text) is the 100 TB-safe choice: it's
-    # dimension-sized relative to the corpus.
+    # stage 2: mention detection (native JVM regexps by default). ONE
+    # fused pass over the text into a compact extraction frame, persisted
+    # — the mention and synapse branches then each read ~100×-smaller rows
+    # instead of re-scanning + re-parsing + re-regexing the corpus once
+    # per branch. Persisting the *extraction* (not the parsed text) is the
+    # 100 TB-safe choice: it's dimension-sized relative to the corpus.
     extracted = mentions.extract_documents(parsed, impl=cfg.mention_impl).persist()
     mention_rows = mentions.mentions_from_extracted(extracted)
     synapse_rows = mentions.synapses_from_extracted(extracted)
@@ -155,27 +154,13 @@ def build_triples(
     neurons = neurons.persist()
 
     # stage 5b: attribute triples, restricted to surviving neurons.
-    # Pair-first shape: subject×object pairing happens INSIDE each
-    # extraction row (array cross product — the frame co-locates a doc's
-    # mentions), then both surfaces link via broadcast and the MERGE dedup
-    # is the branch's only exchange. The doc_id self-join formulation
-    # (triples.neuron_attribute_triples, kept for the streaming path)
-    # shuffles every mention row twice; this shuffles only the distinct
-    # triple set. Equality of the two shapes is pytest-pinned.
-    pairs = mentions.attribute_pairs_from_extracted(extracted)
-    pairs = linking.link_mentions(
-        pairs.withColumnRenamed("subj_surface", "surface"),
-        entities,
-        strategy=cfg.link_strategy,
-        salt_buckets=cfg.salt_buckets,
-    ).withColumnRenamed("entity_id", "subj").drop("surface", "entity_type")
-    pairs = linking.link_mentions(
-        pairs.withColumnRenamed("obj_surface", "surface"),
-        entities,
-        strategy=cfg.link_strategy,
-        salt_buckets=cfg.salt_buckets,
-    ).withColumnRenamed("entity_id", "obj").drop("surface", "entity_type")
-    attr = triples.neuron_attribute_triples_from_pairs(pairs)
+    # Pair-first shape (triples.attribute_triples): subject×object pairing
+    # happens INSIDE each extraction row, both surfaces link via broadcast,
+    # and the MERGE dedup is the branch's only exchange — it shuffles the
+    # distinct triple set, never every mention row.
+    attr = triples.attribute_triples(
+        extracted, entities, cfg.link_strategy, cfg.salt_buckets
+    )
     attr = attr.join(
         F.broadcast(neurons.withColumnRenamed("neuron_id", "subj"))
         if cfg.broadcast_neurons
@@ -185,26 +170,18 @@ def build_triples(
     ).persist()
 
     # stage 5c: synapse endpoints -> canonical ids -> endpoint-existence joins
-    src_link = (
-        linking.link_mentions(
-            synapse_rows.withColumnRenamed("src_surface", "surface"),
-            entities,
-            strategy=cfg.link_strategy,
-            salt_buckets=cfg.salt_buckets,
+    both_link = synapse_rows
+    for side in ("src", "tgt"):
+        both_link = (
+            linking.link_mentions(
+                both_link.withColumnRenamed(f"{side}_surface", "surface"),
+                entities,
+                strategy=cfg.link_strategy,
+                salt_buckets=cfg.salt_buckets,
+            )
+            .withColumnRenamed("entity_id", f"{side}_id")
+            .drop("surface", "entity_type")
         )
-        .withColumnRenamed("entity_id", "src_id")
-        .drop("surface", "entity_type")
-    )
-    both_link = (
-        linking.link_mentions(
-            src_link.withColumnRenamed("tgt_surface", "surface"),
-            entities,
-            strategy=cfg.link_strategy,
-            salt_buckets=cfg.salt_buckets,
-        )
-        .withColumnRenamed("entity_id", "tgt_id")
-        .drop("surface", "entity_type")
-    )
     syn = triples.synapse_triples(both_link, neurons, cfg.broadcast_neurons)
     syn = sampling.sample_by_hash(syn, "doc_id", cfg.edge_proportion, cfg.seed)
     syn = syn.persist()

@@ -7,9 +7,12 @@ process only NEW document files, exactly once, resumable.
 
 Design: ``readStream`` on the documents directory + ``foreachBatch``.
 Per-document triple derivation is self-contained (every triple comes from
-one doc), so each micro-batch runs the identical batch operators (parse ->
-mentions -> link -> canonicalize -> attribute triples) and appends to the
-sink — no stream-stream join or watermark state is needed. The streaming
+one doc), so each micro-batch runs the batch plan's own attribute-triple
+path (parse -> extract -> ``triples.attribute_triples``: pair inside the
+row, link against the canonical dictionary, MERGE dedup) and appends to
+the sink — no stream-stream join or watermark state is needed. As in the
+batch plan, the alias→canonical rewrite is applied to the DICTIONARY, once
+per drain, not to every micro-batch's linked rows. The streaming
 checkpoint records which input files are done; a killed/restarted run
 (``trigger(availableNow=True)``) picks up where it left off without
 reprocessing — the streaming twin of the batch sink's manifest resume
@@ -25,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import canonicalize, linking, mentions, parse, triples
+from ..operators import canonicalize, mentions, parse, triples
 
 
 def start_incremental_attribute_triples(
@@ -35,8 +38,6 @@ def start_incremental_attribute_triples(
     alias_edges: DataFrame | None,
     output_dir: str,
     checkpoint_dir: str,
-    mention_impl: str = "native",
-    max_files_per_trigger: int | None = None,
 ):
     """Drain all currently-available new documents into the triple sink.
 
@@ -45,27 +46,20 @@ def start_incremental_attribute_triples(
     """
     from ..datagen.documents import DOC_SCHEMA
 
-    mapping = (
-        canonicalize.connected_components(alias_edges).persist()
-        if alias_edges is not None
-        else None
-    )
+    mapping = None
+    if alias_edges is not None:
+        mapping = canonicalize.connected_components(alias_edges).persist()
+        entities = canonicalize.apply_canonical_mapping(
+            entities, mapping, "entity_id"
+        ).persist()
 
-    reader = spark.readStream.schema(DOC_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(corpus_dir)
+    stream = spark.readStream.schema(DOC_SCHEMA).parquet(corpus_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         parsed = parse.parse_documents(batch_df).where(F.col("spans_valid"))
-        linked = linking.link_mentions(
-            mentions.detect_mentions(parsed, impl=mention_impl), entities
-        )
-        if mapping is not None:
-            linked = canonicalize.apply_canonical_mapping(linked, mapping, "entity_id")
-        attr = triples.neuron_attribute_triples(linked).withColumn(
-            "batch_id", F.lit(batch_id)
-        )
+        attr = triples.attribute_triples(
+            mentions.extract_documents(parsed), entities
+        ).withColumn("batch_id", F.lit(batch_id))
         attr.write.mode("append").parquet(output_dir)
 
     try:
@@ -78,9 +72,10 @@ def start_incremental_attribute_triples(
         query.awaitTermination()
     finally:
         # the sink is parquet on disk; nothing downstream reads through the
-        # cached mapping, so holding it past the drain would leak one cached
-        # frame per call in a long-lived session
+        # cached mapping or dictionary, so holding them past the drain
+        # would leak two cached frames per call in a long-lived session
         if mapping is not None:
+            entities.unpersist()
             mapping.unpersist()
     return query
 

@@ -68,7 +68,9 @@ def test_dimension_join_broadcasts(spark):
     from sonata_neo4j_loader_spark.operators import mentions
 
     linked = linking.link_mentions(
-        mentions.detect_mentions(parsed), dg.fixture_entities(spark), strategy="broadcast"
+        mentions.mentions_from_extracted(mentions.extract_documents(parsed)),
+        dg.fixture_entities(spark),
+        strategy="broadcast",
     )
     assert "BroadcastHashJoin" in _plan(linked)
 
@@ -222,24 +224,17 @@ def test_pair_first_attr_branch_single_exchange(spark):
     # dedup); the pairing is per-row and both link joins broadcast
     from sonata_neo4j_loader_spark.datagen import documents as dg
     from sonata_neo4j_loader_spark.operators import (
-        canonicalize, linking, mentions, parse, triples,
+        canonicalize, mentions, parse, triples,
     )
 
     docs = dg.fixture_documents(spark)
     parsed = parse.parse_documents(docs).where(F.col("spans_valid"))
     ext = mentions.extract_documents(parsed)
     mapping = canonicalize.connected_components(dg.fixture_alias_edges(spark))
-    entities = dg.fixture_entities(spark)
-    pairs = mentions.attribute_pairs_from_extracted(ext)
-    pairs = linking.link_mentions(
-        pairs.withColumnRenamed("subj_surface", "surface"), entities
-    ).withColumnRenamed("entity_id", "subj").drop("surface", "entity_type")
-    pairs = linking.link_mentions(
-        pairs.withColumnRenamed("obj_surface", "surface"), entities
-    ).withColumnRenamed("entity_id", "obj").drop("surface", "entity_type")
-    pairs = canonicalize.apply_canonical_mapping(pairs, mapping, "subj")
-    pairs = canonicalize.apply_canonical_mapping(pairs, mapping, "obj")
-    plan = _plan(triples.neuron_attribute_triples_from_pairs(pairs))
+    entities = canonicalize.apply_canonical_mapping(
+        dg.fixture_entities(spark), mapping, "entity_id"
+    )
+    plan = _plan(triples.attribute_triples(ext, entities))
     assert plan.count("Exchange hashpartitioning") == 1, plan
 
 

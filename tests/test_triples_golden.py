@@ -179,11 +179,40 @@ def test_rich_aggregates(outputs):
         assert dist == pytest.approx(stats["afferent_distribution"])
 
 
+def _self_join_attribute_triples(linked):
+    """Reference: pair every neuron mention with every co-mentioned
+    attribute entity of the same doc_id (Cypher's per-row MATCH pattern as
+    a self-join), then map kind -> predicate and MERGE-dedup."""
+    from pyspark.sql import functions as F
+
+    from sonata_neo4j_loader_spark.operators import triples
+
+    subjects = linked.where(F.col("kind") == "neuron").select(
+        "doc_id", F.col("entity_id").alias("subj")
+    )
+    pred_map = F.create_map(
+        *[x for k, v in triples.ATTRIBUTE_PREDICATES.items()
+          for x in (F.lit(k), F.lit(v))]
+    )
+    objects = linked.where(F.col("kind") != "neuron").select(
+        "doc_id",
+        pred_map[F.col("kind")].alias("pred"),
+        F.col("entity_id").alias("obj"),
+    )
+    return (
+        subjects.join(objects, "doc_id")
+        .select("subj", "pred", "obj")
+        .where(F.col("pred").isNotNull())
+        .dropDuplicates(["subj", "pred", "obj"])
+    )
+
+
 def test_pair_first_attr_equals_self_join_shape(spark):
-    # the pair-first attribute branch (pairing inside the extraction row,
-    # zero-shuffle) must be row-identical to the doc_id self-join
-    # formulation on a corpus with aliases, media refs, multi-neuron docs
-    # and noise — both on fixture docs and a synthetic slice
+    # the pair-first attribute path (pairing inside the extraction row,
+    # linking against the canonicalized dictionary) must be row-identical
+    # to the doc_id self-join over linked mentions canonicalized after
+    # linking, on a corpus with aliases, media refs, multi-neuron docs and
+    # noise — both on fixture docs and a synthetic slice
     from pyspark.sql import functions as F
 
     from sonata_neo4j_loader_spark.operators import (
@@ -212,19 +241,11 @@ def test_pair_first_attr_equals_self_join_shape(spark):
             mapping, "entity_id",
         )
         old = {(r.subj, r.pred, r.obj)
-               for r in triples.neuron_attribute_triples(linked).collect()}
+               for r in _self_join_attribute_triples(linked).collect()}
 
-        pairs = mentions.attribute_pairs_from_extracted(ext)
-        pairs = linking.link_mentions(
-            pairs.withColumnRenamed("subj_surface", "surface"), entities
-        ).withColumnRenamed("entity_id", "subj").drop("surface", "entity_type")
-        pairs = linking.link_mentions(
-            pairs.withColumnRenamed("obj_surface", "surface"), entities
-        ).withColumnRenamed("entity_id", "obj").drop("surface", "entity_type")
-        pairs = canonicalize.apply_canonical_mapping(pairs, mapping, "subj")
-        pairs = canonicalize.apply_canonical_mapping(pairs, mapping, "obj")
+        canonical = canonicalize.apply_canonical_mapping(entities, mapping, "entity_id")
         new = {(r.subj, r.pred, r.obj)
-               for r in triples.neuron_attribute_triples_from_pairs(pairs).collect()}
+               for r in triples.attribute_triples(ext, canonical).collect()}
 
         assert new == old
         assert len(new) > 0

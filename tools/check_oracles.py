@@ -18,13 +18,14 @@ Usage: python tools/check_oracles.py [--jobs N] [--staged] [name ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import threading
 from concurrent.futures import ThreadPoolExecutor
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from sonata_neo4j_loader_spark.session import get_spark  # noqa: E402
