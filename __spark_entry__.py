@@ -95,14 +95,47 @@ def _drained_sink(
     return sink
 
 
-# single-slot memo: (session weakref, outputs). Keyed to ONE session at a
-# time so a driver that cycles sessions never pins dead sessions' persisted
-# frames (the old dict-per-session cache grew without eviction). A WEAKREF
-# (not id()) identifies the session: CPython recycles a dead session's
-# address, and an id collision would hand a new session plans bound to the
-# dead one.
-_KG_OUTPUTS_CACHE: list = [None, None]
-_KG_OUTPUTS_LOCK = threading.Lock()
+# single-slot memos: name -> (session weakref, key, value). One session at a
+# time, so a driver that cycles sessions never pins dead sessions' persisted
+# frames. A WEAKREF (not id()) identifies the session: CPython recycles a
+# dead session's address, and an id collision would hand a new session plans
+# bound to the dead one.
+_SESSION_MEMO: dict[str, tuple] = {}
+_SESSION_MEMO_LOCKS: dict[str, threading.Lock] = {}
+
+
+def _unpersist_all(value) -> None:
+    for v in value.values() if isinstance(value, dict) else [value]:
+        for df in v if isinstance(v, list) else [v]:
+            try:
+                df.unpersist()
+            except Exception:
+                pass
+
+
+def _session_memo(spark: SparkSession, name: str, key, build: Callable[[], object]):
+    """``build()``'s persisted result, memoized for the CURRENT session and
+    ``key`` (any input the build reads beyond the session).
+
+    Lock-guarded per name: the parallel oracle checker can issue concurrent
+    cold calls, and every losing build's persisted frames would leak for the
+    session's lifetime. A displaced entry whose session is STILL LIVE (a
+    same-session ``key`` switch, or two sessions alternating in one process)
+    is unpersisted; a dead session's frames die with the session.
+    """
+    import weakref
+
+    with _SESSION_MEMO_LOCKS.setdefault(name, threading.Lock()):
+        cached = _SESSION_MEMO.get(name)
+        if cached is not None:
+            ref, cached_key, value = cached
+            if ref() is spark and cached_key == key:
+                return value
+            if ref() is not None:
+                _unpersist_all(value)
+        value = build()
+        _SESSION_MEMO[name] = (weakref.ref(spark), key, value)
+        return value
 
 
 def _kg_outputs(spark: SparkSession) -> dict:
@@ -113,40 +146,15 @@ def _kg_outputs(spark: SparkSession) -> dict:
     driver's long-lived session (duplicate caches, repeated plan
     builds). The outputs are read-only downstream, so one build per
     session is both correct and what a user of the library would do.
-    A new session evicts the previous entry (fixture-scale caches; the
-    dropped frames are released with their session). Lock-guarded: the
-    driver contract runs queries sequentially, but the parallel oracle
-    checker can issue concurrent cold calls — without the lock both
-    threads build and the loser's persisted frames leak.
     """
-    import weakref
 
-    with _KG_OUTPUTS_LOCK:
-        return _kg_outputs_locked(spark, weakref)
-
-
-def _kg_outputs_locked(spark: SparkSession, weakref) -> dict:
-    ref = _KG_OUTPUTS_CACHE[0]
-    if ref is None or ref() is not spark:
-        # eviction hygiene: if the displaced entry's session is STILL LIVE
-        # (two sessions alternating in one process), its persisted frames
-        # would otherwise linger for that session's lifetime — walk the
-        # outputs and unpersist. A dead session's frames need nothing.
-        if ref is not None and ref() is not None:
-            for v in _KG_OUTPUTS_CACHE[1].values():
-                for df in v if isinstance(v, list) else [v]:
-                    try:
-                        df.unpersist()
-                    except Exception:
-                        pass
+    def build() -> dict:
         docs = dg.fixture_documents(spark)
-        _KG_OUTPUTS_CACHE[:] = [
-            weakref.ref(spark),
-            pipeline.build_triples(
-                spark, docs, dg.fixture_entities(spark), dg.fixture_alias_edges(spark)
-            ),
-        ]
-    return _KG_OUTPUTS_CACHE[1]
+        return pipeline.build_triples(
+            spark, docs, dg.fixture_entities(spark), dg.fixture_alias_edges(spark)
+        )
+
+    return _session_memo(spark, "kg_outputs", None, build)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -1074,46 +1082,20 @@ def sampled_docs_exact_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (session weakref, sf_dir, pairs DataFrame): minhash_near_dups and
-# minhash_dup_survivors both need the verified pair set — the heaviest
-# query family's full LSH+verify pipeline. Persisting the (tiny) pair
-# RESULT once per session halves its cost across the two driver rows;
-# weakref key as in _KG_OUTPUTS_CACHE.
-_MINHASH_PAIRS_CACHE: list = [None, None, None]
-_MINHASH_PAIRS_LOCK = threading.Lock()
-
-
 def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # lock-guarded like _kg_outputs: the parallel oracle checker can hit
-    # this cold from several threads (three consumers: minhash_near_dups,
-    # minhash_dup_survivors, staged docs_split_leakproof) — without the
-    # lock each cold thread runs the heaviest LSH+verify build and the
-    # losers' persisted frames leak for the session's lifetime
-    import weakref
+    """The verified minhash pair set, memoized per session and ``sf_dir``:
+    minhash_near_dups, minhash_dup_survivors and the staged
+    docs_split_leakproof all need the heaviest query family's full
+    LSH+verify pipeline, and persisting its (tiny) RESULT once per session
+    pays that cost once."""
 
-    with _MINHASH_PAIRS_LOCK:
-        return _minhash_pairs_locked(spark, sf_dir, weakref)
-
-
-def _minhash_pairs_locked(spark: SparkSession, sf_dir: str, weakref) -> DataFrame:
-    ref = _MINHASH_PAIRS_CACHE[0]
-    if ref is None or ref() is not spark or _MINHASH_PAIRS_CACHE[1] != sf_dir:
-        # eviction hygiene (same rule as _kg_outputs): if the displaced
-        # entry's session is STILL LIVE — same-session sf_dir switch OR two
-        # sessions alternating in one process — release its persisted frame,
-        # or the cache block lingers for that session's lifetime. A dead
-        # session's frames die with the session; nothing to do there.
-        if ref is not None and ref() is not None:
-            try:
-                _MINHASH_PAIRS_CACHE[2].unpersist()
-            except Exception:
-                pass
+    def build() -> DataFrame:
         docs = _t(spark, sf_dir, "documents")
-        pairs = dedup.minhash_near_duplicates(
+        return dedup.minhash_near_duplicates(
             docs, "doc_id", "text", threshold=0.6
         ).persist()
-        _MINHASH_PAIRS_CACHE[:] = [weakref.ref(spark), sf_dir, pairs]
-    return _MINHASH_PAIRS_CACHE[2]
+
+    return _session_memo(spark, "minhash_pairs", sf_dir, build)
 
 
 def stratified_docs_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -70,10 +70,8 @@ def _small_star(edges: DataFrame) -> DataFrame:
 #: 5M → 500K. The old bound let "auto" pull a ~100+ MB pandas frame and
 #: run a 5M-element single-core union-find on a possibly small driver;
 #: 500K keeps the probe ~10 MB while still covering every realistic
-#: broadcastable alias set. Override via SPARK_GRAFT_LOCAL_CC_MAX_EDGES.
-import os as _os
-
-LOCAL_CC_MAX_EDGES = int(_os.environ.get("SPARK_GRAFT_LOCAL_CC_MAX_EDGES", 500_000))
+#: broadcastable alias set.
+LOCAL_CC_MAX_EDGES = 500_000
 
 
 def _local_union_find(spark, us, vs, id_type: T.DataType) -> DataFrame:
@@ -127,15 +125,19 @@ def connected_components(
     ``canonical_id`` is the min member of the node's component. Isolated
     nodes (no alias) simply never appear — callers coalesce to identity.
 
-    ``strategy``: 'distributed' = alternating-star contraction (any scale);
-    'local' = driver union-find (broadcast-sized alias sets only); 'auto' =
-    count the edges and pick (≙ Spark's own broadcast-vs-SMJ threshold
-    decision). Both paths return identical mappings (tested).
+    ``strategy``: 'auto' counts the edges and runs the driver union-find
+    when there are at most ``LOCAL_CC_MAX_EDGES`` of them (≙ Spark's own
+    broadcast-vs-SMJ threshold decision), else the alternating-star
+    contraction; 'distributed' always runs the contraction (any scale).
+    Both paths return identical mappings (tested). Any other value raises
+    ``ValueError``.
     """
+    if strategy not in ("auto", "distributed"):
+        raise ValueError(f"unknown connected_components strategy: {strategy!r}")
     raw = alias_edges.select(F.col(a_col).alias("u"), F.col(b_col).alias("v")).where(
         F.col("u") != F.col("v")
     )
-    if strategy in ("auto", "local"):
+    if strategy == "auto":
         # single size-probe job: fetch at most MAX+1 edges; a full count is
         # never needed to decide the path
         probe = raw.limit(LOCAL_CC_MAX_EDGES + 1).toPandas()
@@ -145,11 +147,6 @@ def connected_components(
                 probe["u"].tolist(),
                 probe["v"].tolist(),
                 raw.schema["u"].dataType,
-            )
-        if strategy == "local":
-            raise ValueError(
-                f"alias edge set exceeds local budget ({LOCAL_CC_MAX_EDGES}); "
-                "use strategy='distributed'"
             )
     edges = raw.distinct().localCheckpoint(eager=True)
     prev_fp = None

@@ -30,64 +30,17 @@ from .text import add_shingles, fingerprint, normalized_text
 _LOG = logging.getLogger(__name__)
 
 
-def _parse_bytes_conf(value: str) -> int:
-    """Spark byte-conf string ('134217728b', '8m', '1g', ...) -> bytes."""
-    s = value.strip().lower()
-    if s.endswith("b"):
-        s = s[:-1]
-    mult = 1
-    for suffix, m in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("t", 1 << 40)):
-        if s.endswith(suffix):
-            s = s[: -len(suffix)]
-            mult = m
-            break
-    return int(float(s) * mult)
-
-
 def _spread(df: DataFrame, key: str) -> DataFrame:
     """Repartition compute-heavy inputs that arrive under-partitioned.
 
     A small parquet file scans as a single partition; shingling/hashing is
     CPU-bound, so one task would serialize the whole job. Hash-partition on
     the id so results stay deterministic. No-op when the input already has
-    enough parallelism (the 10^12-doc case).
-
-    The partition-count probe (``df.rdd.getNumPartitions()`` — there is no
-    DataFrame-level equivalent) forces a driver-side plan conversion, so a
-    large scan gets to skip it when a SOUND lower bound already proves
-    parallelism: scan partitions ≥ total_file_bytes / maxPartitionBytes
-    (FilePartition bin-packing never packs more than maxPartitionBytes of
-    file bytes into one split), so once the statable input bytes reach
-    ``target × maxPartitionBytes`` the probe is unnecessary. File COUNT is
-    deliberately not used — 100 near-empty part files plus one fat one
-    bin-pack into few splits. Inputs whose bytes can't be cheaply statted
-    (remote object stores, local relations) just probe — the probe is
-    correct, only the plan-conversion cost is being avoided.
+    enough parallelism (the 10^12-doc case). The partition-count probe
+    (``df.rdd.getNumPartitions()`` — there is no DataFrame-level
+    equivalent) costs one driver-side plan conversion per call.
     """
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    files = df.inputFiles()
-    if files and not df.isLocal():
-        import os
-        from urllib.parse import unquote, urlparse
-
-        total: int | None = 0
-        for f in files:
-            parsed = urlparse(f)
-            if parsed.scheme not in ("", "file"):
-                total = None
-                break
-            try:
-                total += os.path.getsize(unquote(parsed.path))
-            except OSError:
-                total = None
-                break
-        if total is not None:
-            max_pb = _parse_bytes_conf(
-                str(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b"))
-            )
-            if total >= target * max_pb:
-                return df
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target, key)
     return df
@@ -275,56 +228,30 @@ def banded_postings(
     ).select("_id", "bb.band", "bb.bucket")
 
 
-def jaccard_verify(
-    candidates: DataFrame,
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_k: int = 5,
-    threshold: float = 0.8,
-    join_hint: str | None = None,
+def _scored_jaccard(
+    pairs: DataFrame, left_id: str, right_id: str, threshold: float
 ) -> DataFrame:
-    """True shingle-Jaccard on candidate pairs; keep pairs ≥ threshold.
+    """Exact Jaccard of ``pairs``' joined duplicate-free shingle arrays
+    ``sh_a``/``sh_b``; keeps ``(left_id, right_id, jaccard)`` ≥ threshold.
 
-    ``join_hint`` controls how the shingle-array side meets the pairs:
-    ``None`` leaves the planner free (fine when the corpus side is small),
-    ``'shuffle_hash'`` forces a shuffled hash join — the safe shape when
-    the shingle arrays are the HEAVY side: the planner's size estimate of
-    a computed array column is rows-based and routinely makes AQE build a
-    broadcast HashedRelation out of the *arrays* (a single-threaded
-    multi-hundred-MB build measured 23.4 s vs 9.5 s shuffled-hash at sf1.0
-    — OPTIMIZATION_r06.md), and at corpus scale that broadcast is the
-    8 GB-cap wall; shuffled-hash keeps both sides partitioned and builds
-    per-partition tables in parallel (guide §3.1).
+    ONE array_intersect per pair (r06): the withColumn(jaccard)+where
+    shape evaluated intersect AND union twice each — Catalyst substitutes
+    the jaccard alias into the filter and turns it into a join condition,
+    then the output projection recomputes it (4 heavy array passes per
+    matched pair; plan-verified in plans/r06/minhash_near_dups_after.txt
+    operator (45)/(47)). Now: |A∪B| = |A| + |B| − |A∩B| (both sides are
+    add_shingles outputs, hence duplicate-free, so the sizes ARE set
+    cardinalities — identical ints, identical double division, identical
+    round), and the intersect size is materialized ONCE behind a
+    gen_barrier so the threshold filter compares cheap ints instead of
+    re-running the intersect inside the join.
     """
-    sh = add_shingles(
-        _spread(df.select(F.col(id_col), text_col), id_col), text_col, shingle_k
-    ).select(id_col, "shingles")
-    if join_hint:
-        sh = sh.hint(join_hint)
-    a = sh.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"))
-    b = sh.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b"))
-    # ONE array_intersect per pair (r06): the withColumn(jaccard)+where
-    # shape evaluated intersect AND union twice each — Catalyst substitutes
-    # the jaccard alias into the filter and turns it into a join condition,
-    # then the output projection recomputes it (4 heavy array passes per
-    # matched pair; plan-verified in plans/r06/minhash_near_dups_after.txt
-    # operator (45)/(47)). Now: |A∪B| = |A| + |B| − |A∩B| (both sides are
-    # add_shingles outputs, hence duplicate-free, so the sizes ARE set
-    # cardinalities — identical ints, identical double division, identical
-    # round), and the intersect size is materialized ONCE behind a
-    # gen_barrier so the threshold filter compares cheap ints instead of
-    # re-running the intersect inside the join.
-    scored = (
-        candidates.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            gen_barrier(F.size(F.array_intersect("sh_a", "sh_b"))).alias("_m"),
-            F.size("sh_a").alias("_na"),
-            F.size("sh_b").alias("_nb"),
-        )
+    scored = pairs.select(
+        left_id,
+        right_id,
+        gen_barrier(F.size(F.array_intersect("sh_a", "sh_b"))).alias("_m"),
+        F.size("sh_a").alias("_na"),
+        F.size("sh_b").alias("_nb"),
     )
     return (
         scored.withColumn(
@@ -334,7 +261,41 @@ def jaccard_verify(
             ),
         )
         .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+        .select(left_id, right_id, "jaccard")
+    )
+
+
+def jaccard_verify(
+    candidates: DataFrame,
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    shingle_k: int = 5,
+    threshold: float = 0.8,
+) -> DataFrame:
+    """True shingle-Jaccard on candidate pairs; keep pairs ≥ threshold.
+
+    The shingle-array side meets the pairs through a forced shuffled hash
+    join, the safe shape because the shingle arrays are the HEAVY side:
+    the planner's size estimate of a computed array column is rows-based
+    and routinely makes AQE build a broadcast HashedRelation out of the
+    *arrays* (a single-threaded multi-hundred-MB build measured 23.4 s vs
+    9.5 s shuffled-hash at sf1.0 — OPTIMIZATION_r06.md), and at corpus
+    scale that broadcast is the 8 GB-cap wall; shuffled-hash keeps both
+    sides partitioned and builds per-partition tables in parallel
+    (guide §3.1).
+    """
+    sh = (
+        add_shingles(
+            _spread(df.select(F.col(id_col), text_col), id_col), text_col, shingle_k
+        )
+        .select(id_col, "shingles")
+        .hint("shuffle_hash")
+    )
+    a = sh.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"))
+    b = sh.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b"))
+    return _scored_jaccard(
+        candidates.join(a, "id_a").join(b, "id_b"), "id_a", "id_b", threshold
     )
 
 
@@ -490,9 +451,7 @@ def minhash_near_duplicates(
         .select("id_a", "id_b")
         .distinct()
     )
-    return jaccard_verify(
-        cands, df, id_col, text_col, shingle_k, threshold, join_hint="shuffle_hash"
-    )
+    return jaccard_verify(cands, df, id_col, text_col, shingle_k, threshold)
 
 
 def build_minhash_index(
@@ -652,29 +611,11 @@ def minhash_incremental_duplicates(
     hist_sh = add_shingles(hist_cand, text_col, meta.shingle_k).select(
         "hist_id", F.col("shingles").alias("sh_b")
     )
-    # single-eval size-formula verify — same shape (and rationale) as
-    # jaccard_verify: one barriered intersect per pair, |A∪B| from the
-    # duplicate-free sizes, threshold filter over materialized ints.
-    scored = (
-        cands.join(new_sh, "new_id")
-        .join(hist_sh, "hist_id")
-        .select(
-            "new_id",
-            "hist_id",
-            gen_barrier(F.size(F.array_intersect("sh_a", "sh_b"))).alias("_m"),
-            F.size("sh_a").alias("_na"),
-            F.size("sh_b").alias("_nb"),
-        )
-    )
-    return (
-        scored.withColumn(
-            "jaccard",
-            F.round(
-                F.col("_m") / (F.col("_na") + F.col("_nb") - F.col("_m")), 6
-            ),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("new_id", "hist_id", "jaccard")
+    return _scored_jaccard(
+        cands.join(new_sh, "new_id").join(hist_sh, "hist_id"),
+        "new_id",
+        "hist_id",
+        threshold,
     )
 
 

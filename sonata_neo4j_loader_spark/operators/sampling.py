@@ -245,16 +245,14 @@ def restrict_edges_to_neurons(
     neurons: DataFrame,
     src_col: str = "subj",
     tgt_col: str = "obj",
-    broadcast_neurons: bool = True,
 ) -> DataFrame:
-    """Keep edges whose BOTH endpoints are in ``neurons`` (two semi-joins).
+    """Keep edges whose BOTH endpoints are in ``neurons`` (two broadcast
+    semi-joins: ``neurons`` is the dimension side).
 
     ≙ the reference's isin-mask pair (data_extraction.py:167-173), minus
     the driver-side set materialization.
     """
-    n = neurons.select(F.col("neuron_id"))
-    if broadcast_neurons:
-        n = F.broadcast(n)
+    n = F.broadcast(neurons.select(F.col("neuron_id")))
     return edges.join(
         n.withColumnRenamed("neuron_id", src_col), src_col, "left_semi"
     ).join(n.withColumnRenamed("neuron_id", tgt_col), tgt_col, "left_semi")

@@ -8,13 +8,18 @@ edges → aggregates) become parallel branches off shared cached frames.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import aggregate, canonicalize, linking, mentions, parse, sampling, triples
 from ..sinks import materialize as mat
+
+
+#: Sampling seed for both ``sample_by_hash`` calls — the reference fixes
+#: it too (data_extraction.py:74).
+SAMPLE_SEED = 42
 
 
 @dataclass
@@ -24,7 +29,6 @@ class PipelineConfig:
     node_proportion: float = 1.0
     edge_proportion: float = 1.0
     node_set_pops: list[str] | None = None
-    seed: int = 42
     # 'native' (pure-JVM regexp, default) | 'arrow' (pandas-UDF batches).
     # The two are row-identical (tests/test_triples_golden.py runs both).
     # Optimization r06 flipped the default to native per guide §4.1 —
@@ -34,11 +38,7 @@ class PipelineConfig:
     # worker pool's scheduling variance from the hot path entirely.
     mention_impl: str = "native"  # 'native' | 'arrow'
     link_strategy: str = "broadcast"  # 'broadcast' | 'salted'
-    cc_strategy: str = "auto"  # 'auto' | 'local' | 'distributed'
     salt_buckets: int = 8
-    broadcast_neurons: bool = True
-    rich_aggregates: bool = True
-    group_attrs: list[str] = field(default_factory=lambda: ["HAS_MTYPE", "HAS_SCLASS"])
 
 
 def build_triples(
@@ -73,9 +73,7 @@ def build_triples(
     # applied per matched dictionary row either way. The per-frame
     # apply_canonical_mapping calls are gone from the hot path.
     if alias_edges is not None:
-        mapping = canonicalize.connected_components(
-            alias_edges, strategy=cfg.cc_strategy
-        ).persist()
+        mapping = canonicalize.connected_components(alias_edges).persist()
         entities = canonicalize.apply_canonical_mapping(entities, mapping, "entity_id")
 
     # The dictionary is dimension-sized and reused by three link passes —
@@ -150,7 +148,9 @@ def build_triples(
     neuron_ids = neuron_ids.select(F.col("entity_id").alias("neuron_id"))
     neurons = neuron_ids.distinct()
     neurons = sampling.filter_node_set(neurons, cfg.node_set_pops)
-    neurons = sampling.sample_by_hash(neurons, "neuron_id", cfg.node_proportion, cfg.seed)
+    neurons = sampling.sample_by_hash(
+        neurons, "neuron_id", cfg.node_proportion, SAMPLE_SEED
+    )
     neurons = neurons.persist()
 
     # stage 5b: attribute triples, restricted to surviving neurons.
@@ -162,11 +162,7 @@ def build_triples(
         extracted, entities, cfg.link_strategy, cfg.salt_buckets
     )
     attr = attr.join(
-        F.broadcast(neurons.withColumnRenamed("neuron_id", "subj"))
-        if cfg.broadcast_neurons
-        else neurons.withColumnRenamed("neuron_id", "subj"),
-        "subj",
-        "left_semi",
+        F.broadcast(neurons.withColumnRenamed("neuron_id", "subj")), "subj", "left_semi"
     ).persist()
 
     # stage 5c: synapse endpoints -> canonical ids -> endpoint-existence joins
@@ -182,45 +178,38 @@ def build_triples(
             .withColumnRenamed("entity_id", f"{side}_id")
             .drop("surface", "entity_type")
         )
-    syn = triples.synapse_triples(both_link, neurons, cfg.broadcast_neurons)
-    syn = sampling.sample_by_hash(syn, "doc_id", cfg.edge_proportion, cfg.seed)
+    syn = triples.synapse_triples(both_link, neurons)
+    syn = sampling.sample_by_hash(syn, "doc_id", cfg.edge_proportion, SAMPLE_SEED)
     syn = syn.persist()
 
-    # stage 5d: aggregates per group attribute. When the rich variant runs
-    # for a pred, the default (avg conductance/delay) variant is a pure
-    # projection of the rich result — deriving it there instead of
+    # stage 5d: aggregates per group attribute — rich for MTYPE, plain for
+    # SCLASS. The default (avg conductance/delay) MTYPE variant is a pure
+    # projection of the rich result: deriving it there instead of
     # re-joining + re-aggregating the synapse frame saves one full pass
-    # per rich pred (same grouping key, identical values).
-    agg_frames: list[DataFrame] = []
-    for pred in cfg.group_attrs:
-        groups = attr.where(F.col("pred") == pred).select(
+    # (same grouping key, identical values).
+    def groups(pred: str) -> DataFrame:
+        return attr.where(F.col("pred") == pred).select(
             F.col("subj").alias("neuron_id"), F.col("obj").alias("group")
         )
-        prefix = pred.removeprefix("HAS_")
-        if cfg.rich_aggregates and pred == "HAS_MTYPE":
-            # persist: two consumers (the projection below + the rich frame
-            # itself), group-pair-sized output — without it the aggregation
-            # pass over the synapse frame would run once per consumer
-            rich = aggregate.rich_aggregated_synapse_triples(
-                syn, groups, prefix, cfg.broadcast_neurons
-            ).persist()
-            agg_frames.append(
-                rich.select(
-                    "subj",
-                    F.lit(f"AGGREGATED_SYNAPSE_{prefix}").alias("pred"),
-                    "obj",
-                    "n_synapses",
-                    "avg_conductance",
-                    "avg_delay",
-                )
-            )
-            agg_frames.append(rich)
-        else:
-            agg_frames.append(
-                aggregate.aggregated_synapse_triples(
-                    syn, groups, prefix, cfg.broadcast_neurons
-                )
-            )
+
+    # persist: two consumers (the projection below + the rich frame
+    # itself), group-pair-sized output — without it the aggregation pass
+    # over the synapse frame would run once per consumer
+    rich = aggregate.rich_aggregated_synapse_triples(
+        syn, groups("HAS_MTYPE"), "MTYPE"
+    ).persist()
+    agg_frames = [
+        rich.select(
+            "subj",
+            F.lit("AGGREGATED_SYNAPSE_MTYPE").alias("pred"),
+            "obj",
+            "n_synapses",
+            "avg_conductance",
+            "avg_delay",
+        ),
+        rich,
+        aggregate.aggregated_synapse_triples(syn, groups("HAS_SCLASS"), "SCLASS"),
+    ]
 
     # node property payloads (SET n += node / SET p += population):
     # dimension-sized (one row per graph node), left-joined onto the node

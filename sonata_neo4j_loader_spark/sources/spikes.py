@@ -120,7 +120,6 @@ def edges_between_spiked_neurons(
     spikes: DataFrame,
     src_col: str = "subj",
     tgt_col: str = "obj",
-    broadcast_spikers: bool = True,
 ) -> DataFrame:
     """End-to-end ≙ ``extract_edges_between_spiked_neurons``
     (base_simulation_loader.py:84-117): distinct spikers
@@ -129,7 +128,7 @@ def edges_between_spiked_neurons(
     (``drop_duplicates(subset=["source_node_id","target_node_id"])``, :106).
 
     The reference materializes the spiker set on the driver (a Python
-    ``set``) — here it is two semi-joins, broadcast when dimension-sized.
+    ``set``) — here it is two broadcast semi-joins.
 
     Note: when ``edges`` carries columns beyond the endpoint pair, the
     surviving row per pair is arbitrary (as in the reference, where pandas
@@ -139,9 +138,7 @@ def edges_between_spiked_neurons(
     from ..operators.sampling import restrict_edges_to_neurons
 
     spikers = distinct_spikers(spikes)
-    restricted = restrict_edges_to_neurons(
-        edges, spikers, src_col, tgt_col, broadcast_neurons=broadcast_spikers
-    )
+    restricted = restrict_edges_to_neurons(edges, spikers, src_col, tgt_col)
     return restricted.dropDuplicates([src_col, tgt_col])
 
 

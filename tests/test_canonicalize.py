@@ -32,7 +32,7 @@ EXPECTED = {
 }
 
 
-@pytest.mark.parametrize("strategy", ["local", "distributed"])
+@pytest.mark.parametrize("strategy", ["distributed"])
 def test_cc_strategies_agree(spark, strategy):
     edges = spark.createDataFrame(EDGES, "alias_a string, alias_b string")
     got = {
@@ -49,6 +49,13 @@ def test_cc_auto_picks_local_for_small(spark):
         for r in canonicalize.connected_components(edges, strategy="auto").collect()
     }
     assert got == EXPECTED
+
+
+@pytest.mark.parametrize("strategy", ["local", "distirbuted", ""])
+def test_cc_rejects_unknown_strategy(spark, strategy):
+    edges = spark.createDataFrame(EDGES, "alias_a string, alias_b string")
+    with pytest.raises(ValueError, match="strategy"):
+        canonicalize.connected_components(edges, strategy=strategy)
 
 
 def test_cc_auto_goes_distributed_above_edge_budget(spark, monkeypatch):

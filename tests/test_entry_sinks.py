@@ -8,6 +8,8 @@ results stay identical.
 
 from __future__ import annotations
 
+import os
+
 import __spark_entry__ as entry
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -41,4 +43,14 @@ def test_minhash_pairs_memo_reused_within_session(spark):
     a = entry.minhash_near_dups(spark, "/root/testdata/sf0.001")
     b = entry.minhash_near_dups(spark, "/root/testdata/sf0.001")
     assert a is b  # same persisted frame, no second LSH build
-    assert entry._MINHASH_PAIRS_CACHE[0]() is spark
+    assert entry._SESSION_MEMO["minhash_pairs"][0]() is spark
+
+
+def test_minhash_pairs_memo_evicts_on_sf_dir_switch(spark):
+    # a same-session sf_dir switch replaces the memo slot; the displaced
+    # pair frame must be unpersisted, not left pinned for the session
+    a = entry.minhash_near_dups(spark, SF_DIR)
+    assert a.is_cached
+    b = entry.minhash_near_dups(spark, os.path.join(os.path.dirname(SF_DIR), "sf0.01"))
+    assert b.is_cached
+    assert not a.is_cached

@@ -2,8 +2,14 @@
 
 Usage: python tools/capture_plans.py <tag> [query ...]
   tag      = 'before' | 'after' (file suffix)
-  queries  = names from __spark_entry__.queries(); default = bench HEADLINE
-             plus the cold-minhash build.
+  queries  = names from __spark_entry__.queries(), or ``entry`` for the
+             flagship KG query; default = bench HEADLINE plus the
+             cold-minhash build.
+
+Next to each formatted plan it writes ``<name>_<tag>.optimized.txt``: the
+optimized logical plan with expression ids (``#12``, ``#12L``) and
+``plan_id=N`` stripped. Those numbers differ between processes even for an
+identical plan, so two checkouts' stripped plans compare with ``diff``.
 
 Plans are captured at $SPARK_GRAFT_SF_DIR (default sf0.1) with the same
 session config bench.py uses, so plan shapes match the measured runs.
@@ -12,6 +18,7 @@ session config bench.py uses, so plan shapes match the measured runs.
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 # repo-relative so a worktree capture imports the WORKTREE's code
@@ -44,6 +51,11 @@ def cold_minhash(spark, sf_dir):
     return dedup.minhash_near_duplicates(docs, "doc_id", "text", threshold=0.6)
 
 
+def normalized_optimized_plan(df) -> str:
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return re.sub(r"plan_id=\d+", "", re.sub(r"#\d+L?", "", plan))
+
+
 def main() -> None:
     tag = sys.argv[1] if len(sys.argv) > 1 else "before"
     names = sys.argv[2:] or HEADLINE
@@ -60,8 +72,12 @@ def main() -> None:
     out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r06")
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
-        fn = cold_minhash if name == "minhash_near_dups" else qs[name]
-        df = fn(spark, sf_dir)
+        if name == "entry":
+            df = entry_mod.entry(spark)
+        elif name == "minhash_near_dups":
+            df = cold_minhash(spark, sf_dir)
+        else:
+            df = qs[name](spark, sf_dir)
         plan = df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
         )
@@ -69,6 +85,8 @@ def main() -> None:
         with open(path, "w") as f:
             f.write(plan)
         print(f"wrote {path} ({len(plan)} bytes)")
+        with open(os.path.join(out_dir, f"{name}_{tag}.optimized.txt"), "w") as f:
+            f.write(normalized_optimized_plan(df))
 
 
 if __name__ == "__main__":
