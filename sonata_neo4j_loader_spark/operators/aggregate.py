@@ -10,8 +10,10 @@ single edge; SURVEY.md §3.2 flags this, and tests here pin the intended
 per-pair behavior instead.
 
 Physical shape: synapses (fact) join the neuron→group map (dimension,
-broadcast) twice, then one partial+final hash aggregation on the pair key.
-One shuffle total on (src_group, tgt_group).
+broadcast) twice, then hash aggregation. The plain variant aggregates once
+on the pair key: one shuffle on (src_group, tgt_group). The rich variant
+aggregates twice, on (pair, afferent type) and then on the pair, with no
+join after either aggregation.
 """
 
 from __future__ import annotations
@@ -92,22 +94,22 @@ def rich_aggregated_synapse_triples(
     ≙ intended semantics of ``scripts/load_circuit.py:511-545``: per-pair
     ``avg`` over every measure, plus ``collect(afferent_section_type)``
     reduced to a relative-frequency map (``apoc.map.fromPairs`` →
-    ``map_from_entries``). The distribution is computed with a second
-    grouping on (pair, type) + a pair-total join — no giant
-    ``collect_list`` per pair, which would hotspot on skewed pairs at
-    scale.
+    ``map_from_entries``). Two aggregations and no join: the first groups
+    on (pair, type), the second on the pair, and the distribution is the
+    pair's list of level-1 (type, count) rows divided by ``n_synapses``.
+    That list holds one entry per distinct type, so it is bounded by the
+    type domain, not by the pair's synapse count, and a skewed pair
+    cannot make it large.
     """
     joined = _with_groups(synapses, neuron_groups, broadcast_groups)
 
-    # ONE pass over the fact frame (optimization r06): the r05 shape
-    # aggregated `joined` twice — once for the per-pair averages, once for
-    # the per-(pair, type) distribution counts — re-running the corpus
-    # join + scan per consumer. Aggregating at the FINER key first
-    # (pair, afferent_section_type) lets both outputs derive from the
-    # level-1 frame, which is dimension-sized (pairs × |type domain|):
-    # avg_m = sum(sum_m)/sum(cnt_m) per pair (identical semantics — avg
-    # ignores nulls, all-null groups stay null because sum of nulls is
-    # null), and the distribution counts are the level-1 rows themselves.
+    # Level 1 aggregates at the finer key, so the fact frame is scanned
+    # once and both outputs derive from a dimension-sized frame
+    # (pairs × |type domain|). avg_m = sum(_sum_m) / sum(_n_m) per pair has
+    # avg's semantics: nulls are ignored, and an all-null measure stays
+    # null because a sum of nulls is null. Level 2 collects the typed
+    # (type, count) rows in the same pass that sums the totals, so the
+    # frequencies need neither a pair-total join nor a third grouping.
     level1 = joined.groupBy("src_group", "tgt_group", "afferent_section_type").agg(
         F.count(F.lit(1)).alias("_cnt"),
         *[
@@ -119,41 +121,40 @@ def rich_aggregated_synapse_triples(
             for m in RICH_MEASURES
         ],
     )
-    avgs = level1.groupBy("src_group", "tgt_group").agg(
+    pairs = level1.groupBy("src_group", "tgt_group").agg(
         F.sum("_cnt").alias("n_synapses"),
         *[
             (F.sum(f"_sum_{m}") / F.sum(f"_n_{m}")).alias(f"avg_{m}")
             for m in RICH_MEASURES
         ],
+        F.collect_list(
+            F.when(
+                F.col("afferent_section_type").isNotNull(),
+                F.struct(
+                    F.col("afferent_section_type").alias("type"),
+                    F.col("_cnt").alias("cnt"),
+                ),
+            )
+        ).alias("_types"),
     )
-    by_type = level1.where(F.col("afferent_section_type").isNotNull()).select(
-        "src_group",
-        "tgt_group",
-        "afferent_section_type",
-        F.col("_cnt").alias("cnt"),
-    )
-    # window-free normalization: totals come from the avgs frame (n_synapses)
-    totals = avgs.select("src_group", "tgt_group", "n_synapses")
-    dist = (
-        by_type.join(totals, ["src_group", "tgt_group"])
-        .withColumn("freq", F.col("cnt") / F.col("n_synapses"))
-        .groupBy("src_group", "tgt_group")
-        .agg(
-            F.map_from_entries(
-                F.sort_array(
-                    F.collect_list(F.struct("afferent_section_type", "freq"))
+    # Untyped synapses count in n_synapses but get no map entry; a pair
+    # with no typed synapse at all keeps a NULL map rather than an empty one.
+    distribution = F.when(
+        F.size("_types") > 0,
+        F.map_from_entries(
+            F.sort_array(
+                F.transform(
+                    "_types",
+                    lambda e: F.struct(e["type"], e["cnt"] / F.col("n_synapses")),
                 )
-            ).alias("afferent_distribution")
-        )
+            )
+        ),
     )
-    return (
-        avgs.join(dist, ["src_group", "tgt_group"], "left")
-        .select(
-            F.col("src_group").alias("subj"),
-            F.lit(f"AGGREGATED_SYNAPSE_RICH_{group_prefix}").alias("pred"),
-            F.col("tgt_group").alias("obj"),
-            "n_synapses",
-            *[f"avg_{m}" for m in RICH_MEASURES],
-            "afferent_distribution",
-        )
+    return pairs.select(
+        F.col("src_group").alias("subj"),
+        F.lit(f"AGGREGATED_SYNAPSE_RICH_{group_prefix}").alias("pred"),
+        F.col("tgt_group").alias("obj"),
+        "n_synapses",
+        *[f"avg_{m}" for m in RICH_MEASURES],
+        distribution.alias("afferent_distribution"),
     )

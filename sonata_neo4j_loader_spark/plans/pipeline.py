@@ -263,8 +263,13 @@ def dry_run_report(outputs: dict[str, DataFrame]) -> dict[str, int]:
     ``input("Do you want to proceed …")`` before the edge import). A
     distributed job can't block on stdin; instead callers inspect this
     report and re-run with lower ``edge_proportion``/``node_proportion``
-    if the sizes are unacceptable. Counts run against the pipeline's
-    persisted frames, so the report costs one pass, not a rebuild.
+    if the sizes are unacceptable. The attribute, synapse and MTYPE
+    aggregate counts read the pipeline's persisted frames. ``nodes``, the
+    SCLASS aggregate and ``invariant_violations`` are not persisted, so
+    their counts re-run their plans: ``nodes`` re-derives the linked
+    mentions from the persisted extraction frame, the SCLASS aggregate
+    re-joins the persisted synapse frame, and the audit re-parses the input
+    documents.
     """
     return {
         "nodes": outputs["nodes"].count(),

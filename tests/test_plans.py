@@ -289,3 +289,36 @@ def test_q21_aggregates_share_one_exchange(spark):
     # dimension-sized s_name aggregation
     assert plan.count("Exchange hashpartitioning") == 2, plan
     assert not re.search(r"hashpartitioning\([^)]*l_suppkey", plan), plan
+
+
+def test_rich_aggregate_has_no_join_above_an_aggregate(spark):
+    # the rich group-pair aggregate is two aggregations over the joined
+    # synapse frame; the distribution must come out of the second one, not
+    # from joining pair totals or a distribution frame back onto an
+    # aggregate. The tree string lists parents before children, so every
+    # logical Aggregate line must come before the first logical Join line.
+    # The SCLASS variant is planned because the pipeline caches the MTYPE
+    # one, and a cache hit would hide the plan behind an InMemoryRelation.
+    import re
+
+    from sonata_neo4j_loader_spark.datagen import documents as dg
+    from sonata_neo4j_loader_spark.operators import aggregate
+    from sonata_neo4j_loader_spark.plans import pipeline
+
+    out = pipeline.build_triples(
+        spark, dg.fixture_documents(spark), dg.fixture_entities(spark),
+        dg.fixture_alias_edges(spark),
+    )
+    groups = out["attribute_triples"].where(F.col("pred") == "HAS_SCLASS").select(
+        F.col("subj").alias("neuron_id"), F.col("obj").alias("group")
+    )
+    rich = aggregate.rich_aggregated_synapse_triples(
+        out["synapse_triples"], groups, "SCLASS"
+    )
+    lines = rich._jdf.queryExecution().optimizedPlan().toString().splitlines()
+    # logical operators only: the physical plans cached frames embed are
+    # named HashAggregate / BroadcastHashJoin and never match
+    aggs = [i for i, line in enumerate(lines) if re.match(r"[\s:|+-]*Aggregate \[", line)]
+    joins = [i for i, line in enumerate(lines) if re.match(r"[\s:|+-]*Join ", line)]
+    assert len(aggs) == 2 and joins, "\n".join(lines)
+    assert max(aggs) < min(joins), "\n".join(lines)

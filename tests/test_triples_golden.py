@@ -171,12 +171,48 @@ def test_rich_aggregates(outputs):
         if df.select("pred").first()["pred"] == "AGGREGATED_SYNAPSE_RICH_MTYPE"
     )
     rows = {(r["subj"], r["obj"]): r for r in agg.collect()}
+    assert set(rows) == {(f"mtype:{a}", f"mtype:{b}") for a, b in golden}
     for (a, b), stats in golden.items():
         r = rows[(f"mtype:{a}", f"mtype:{b}")]
+        assert r["n_synapses"] == stats["n_synapses"]
         for m in fixture.EDGE_PROPS:
             assert r[f"avg_{m}"] == pytest.approx(stats[f"avg_{m}"], abs=1e-9), m
         dist = r["afferent_distribution"]
         assert dist == pytest.approx(stats["afferent_distribution"])
+
+
+def test_rich_aggregate_null_afferent_type(spark):
+    # untyped synapses count towards n_synapses and every average but get
+    # no distribution entry; a pair with no typed synapse keeps a NULL map
+    from sonata_neo4j_loader_spark.operators import aggregate
+
+    props = {"conductance": 1.0, "delay": 2.0}
+    synapses = spark.createDataFrame(
+        [
+            ("n1", "n2", props, "soma"),
+            ("n1", "n2", {"conductance": 2.0, "delay": 2.0}, "soma"),
+            ("n1", "n2", {"conductance": 6.0, "delay": 2.0}, None),
+            ("n1", "n3", props, None),
+            ("n1", "n3", props, None),
+        ],
+        "subj string, obj string, props map<string,double>, "
+        "afferent_section_type string",
+    )
+    groups = spark.createDataFrame(
+        [("n1", "A"), ("n2", "B"), ("n3", "C")], "neuron_id string, group string"
+    )
+    rows = {
+        (r["subj"], r["obj"]): r
+        for r in aggregate.rich_aggregated_synapse_triples(synapses, groups).collect()
+    }
+    assert set(rows) == {("A", "B"), ("A", "C")}
+    typed, untyped = rows[("A", "B")], rows[("A", "C")]
+    assert typed["n_synapses"] == 3
+    assert typed["avg_conductance"] == pytest.approx(3.0)
+    assert typed["afferent_distribution"] == pytest.approx({"soma": 2 / 3})
+    assert untyped["n_synapses"] == 2
+    assert untyped["afferent_distribution"] is None
+    assert untyped["avg_u_syn"] is None
 
 
 def _self_join_attribute_triples(linked):

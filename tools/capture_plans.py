@@ -7,9 +7,11 @@ Usage: python tools/capture_plans.py <tag> [query ...]
              cold-minhash build.
 
 Next to each formatted plan it writes ``<name>_<tag>.optimized.txt``: the
-optimized logical plan with expression ids (``#12``, ``#12L``) and
-``plan_id=N`` stripped. Those numbers differ between processes even for an
-identical plan, so two checkouts' stripped plans compare with ``diff``.
+optimized logical plan with expression ids (``#12``, ``#12L``),
+``plan_id=N`` and lambda variable numbers (``lambda x_12``) stripped. Those
+numbers differ between processes even for an identical plan (lambda
+variables are numbered by a session-wide counter, so any lambda built
+earlier shifts them), so two checkouts' stripped plans compare with ``diff``.
 
 Plans are captured at $SPARK_GRAFT_SF_DIR (default sf0.1) with the same
 session config bench.py uses, so plan shapes match the measured runs.
@@ -53,6 +55,7 @@ def cold_minhash(spark, sf_dir):
 
 def normalized_optimized_plan(df) -> str:
     plan = df._jdf.queryExecution().optimizedPlan().toString()
+    plan = re.sub(r"(lambda x_)\d+", r"\1", plan)
     return re.sub(r"plan_id=\d+", "", re.sub(r"#\d+L?", "", plan))
 
 
