@@ -1,10 +1,11 @@
 """Deduplication operators for training-data pipelines.
 
 Exact (hash-groupBy), MinHash+LSH, SimHash, and n-gram-Jaccard near-dup —
-all pure DataFrame/column expressions (no Python UDFs): shingling,
-MinHash signatures, banding, and Hamming distances are built from
-``transform``/``aggregate``/``xxhash64`` higher-order expressions that stay
-inside whole-stage codegen.
+all pure DataFrame/column expressions (no Python UDFs). Shingling and
+SimHash use the ``transform``/``aggregate`` higher-order functions, which
+Spark evaluates interpreted (they are ``CodegenFallback``); the MinHash
+signature and bitmap are therefore aggregates over the exploded shingle
+hashes, which run in generated code.
 
 Scale design (the part that matters at 10^12 docs):
 
@@ -109,50 +110,88 @@ def _shingle_hashes(shingles: str, seed: int) -> Column:
     )
 
 
-def _signature(hashes: str, num_hashes: int, seed: int) -> Column:
-    """MinHash signature (array<bigint> of length ``num_hashes``) over a
-    :func:`_shingle_hashes` column: the classic affine family
-    h_i(x) = (a_i·x + b_i) mod (2^31−1), minimized per row.
+# Verify-prefilter bitmap width: 32 longs = 2048 bits per document. Wide
+# enough that the union-popcount upper bound (see minhash_near_duplicates)
+# rejects ~99% of false LSH candidates at the bench corpus's similarity
+# profile (16 words already rejected ~97%; 32 measured equal-or-faster
+# end-to-end because the exact-verify join shrinks further), still small
+# enough (256 B/posting) that carrying it through the band-bucket
+# self-join costs ~1/6 of carrying the shingle arrays. The bound is
+# lossless at ANY width — width only tunes selectivity.
+_BITMAP_WORDS = 32
 
-    ``hashes`` must name a *projected column*, not an inline expression —
-    Catalyst would inline the expression into every one of the
-    ``num_hashes`` branches and recompute the shingle pipeline in each.
+
+def _minhash_postings(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    shingle_k: int,
+    num_hashes: int,
+    bands: int,
+    seed: int,
+) -> DataFrame:
+    """``(_id, n, _bm0.._bm31, band, bucket)``: one row per (doc, band).
+
+    ``n`` is the distinct-shingle count, ``_bm*`` the shingle membership
+    bitmap words, and ``bucket`` hashes the band's ``num_hashes/bands`` rows
+    of the MinHash signature h_i(x) = min over shingles of
+    (a_i·x + b_i) mod (2^31−1). Two docs are LSH candidates iff they share
+    a (band, bucket). Columns nobody selects are pruned out of the plan, so
+    :func:`banded_postings` never computes the bitmap.
+
+    Signature and bitmap come from ONE aggregation over the exploded
+    shingle hashes, not from per-row higher-order functions: Spark runs
+    ``transform``/``aggregate``/``array_min`` interpreted (they are
+    ``CodegenFallback``), which made 64 lambda passes per document, while
+    ``min``/``bit_or`` aggregates run in generated code. ``explode_outer``
+    keeps a NULL-text doc as one NULL-hash row, so its signature rows stay
+    NULL and its bitmap words 0. Precondition: ids are unique — the
+    aggregation groups by id, as ``jaccard_verify``'s id joins already
+    assume. ``_spread``'s hash partitioning on ``_id`` satisfies the
+    grouping, so it adds no exchange there.
+
+    Aggregates and band structs are written as SQL text, one call per
+    aggregate and one for all the bands: built as Column trees they cost
+    hundreds of py4j calls per plan.
     """
-
-    def affine(a: int, b: int):
-        return lambda h: F.pmod(a * h + b, F.lit(_MERSENNE31))
-
-    return F.array(
-        *[
-            F.array_min(F.transform(hashes, affine(a, b)))
-            for (a, b) in _affine_params(num_hashes, seed)
-        ]
-    )
-
-
-def _band_buckets(sig: str, num_hashes: int, bands: int) -> Column:
-    """Explode a signature column into one ``(band, bucket)`` struct per
-    band, ``bucket`` hashing the band's ``num_hashes/bands`` signature rows:
-    two docs are LSH candidates iff they share a (band, bucket)."""
+    nbits = _BITMAP_WORDS * 64
     rows_per_band = num_hashes // bands
-    return F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.xxhash64(
-                        F.concat_ws(
-                            ",",
-                            *[
-                                F.element_at(sig, b * rows_per_band + r + 1)
-                                for r in range(rows_per_band)
-                            ],
-                        )
-                    ).alias("bucket"),
-                )
-                for b in range(bands)
-            ]
-        )
+    # n and hs are projected before the explode, so an exploded row carries
+    # two scalars and not the doc's shingle array
+    hashed = add_shingles(
+        _spread(df.select(F.col(id_col).alias("_id"), text_col), "_id"),
+        text_col,
+        shingle_k,
+    ).select(
+        "_id",
+        F.coalesce(F.size("shingles"), F.lit(0)).alias("n"),
+        _shingle_hashes("shingles", seed).alias("hs"),
+    )
+    sig = [
+        f"min(pmod({a} * h + {b}, {_MERSENNE31})) AS _s{i}"
+        for i, (a, b) in enumerate(_affine_params(num_hashes, seed))
+    ]
+    words = [
+        f"coalesce(bit_or(if((h % {nbits}) div 64 = {w}, "
+        f"shiftleft(cast(1 as bigint), cast(h % 64 as int)), NULL)), 0) AS _bm{w}"
+        for w in range(_BITMAP_WORDS)
+    ]
+    per_doc = (
+        hashed.select("_id", "n", F.explode_outer("hs").alias("h"))
+        .groupBy("_id", "n")
+        .agg(*[F.expr(e) for e in sig + words])
+    )
+    band_structs = ", ".join(
+        f"named_struct('band', {b}, 'bucket', xxhash64(concat_ws(',', "
+        + ", ".join(f"_s{b * rows_per_band + r}" for r in range(rows_per_band))
+        + ")))"
+        for b in range(bands)
+    )
+    return per_doc.selectExpr(
+        "_id",
+        "n",
+        *[f"_bm{w}" for w in range(_BITMAP_WORDS)],
+        f"inline(array({band_structs}))",
     )
 
 
@@ -211,21 +250,12 @@ def banded_postings(
 
     Persisted by :func:`build_minhash_index` and probed by
     :func:`minhash_incremental_duplicates`; :func:`minhash_near_duplicates`
-    builds the same postings with its verify payload attached.
+    builds the same postings with its verify payload attached. Ids must be
+    unique: two documents sharing one would be hashed as one.
     """
-    # Two projection steps: shingles materialize once per row, then the 31-bit
-    # shingle hashes once, and only then the num_hashes signature branches —
-    # passing the shingle expression inline would make Catalyst recompute the
-    # whole substring/transform tree in every branch.
-    hashed = add_shingles(
-        _spread(df.select(F.col(id_col).alias("_id"), text_col), "_id"),
-        text_col,
-        shingle_k,
-    ).select("_id", _shingle_hashes("shingles", seed).alias("hs"))
-    sigs = hashed.select("_id", _signature("hs", num_hashes, seed).alias("sig"))
-    return sigs.select(
-        "_id", _band_buckets("sig", num_hashes, bands).alias("bb")
-    ).select("_id", "bb.band", "bb.bucket")
+    return _minhash_postings(
+        df, id_col, text_col, shingle_k, num_hashes, bands, seed
+    ).select("_id", "band", "bucket")
 
 
 def _scored_jaccard(
@@ -299,17 +329,6 @@ def jaccard_verify(
     )
 
 
-# Verify-prefilter bitmap width: 32 longs = 2048 bits per document. Wide
-# enough that the union-popcount upper bound (see minhash_near_duplicates)
-# rejects ~99% of false LSH candidates at the bench corpus's similarity
-# profile (16 words already rejected ~97%; 32 measured equal-or-faster
-# end-to-end because the exact-verify join shrinks further), still small
-# enough (256 B/posting) that carrying it through the band-bucket
-# self-join costs ~1/6 of carrying the shingle arrays. The bound is
-# lossless at ANY width — width only tunes selectivity.
-_BITMAP_WORDS = 32
-
-
 def minhash_near_duplicates(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -333,10 +352,10 @@ def minhash_near_duplicates(
     positives paying two array joins plus a per-pair ``array_intersect``).
     This shape:
 
-    * carries a 1024-bit *shingle membership bitmap* — 16 scalar long
-      columns, not an array, so the pair filter stays inside whole-stage
-      codegen — plus the distinct-shingle count through the band-bucket
-      self-join (128 B/posting vs 1.6 KB);
+    * carries a 2048-bit *shingle membership bitmap* — ``_BITMAP_WORDS``
+      = 32 scalar long columns, not an array, so the pair filter stays
+      inside whole-stage codegen — plus the distinct-shingle count through
+      the band-bucket self-join (256 B/posting vs 1.6 KB);
     * prunes pairs with two LOSSLESS bounds evaluated per co-occurrence:
       the AllPairs size bound (J ≥ t ⇒ min(n_a,n_b) ≥ t·max(n_a,n_b)) and
       the bitmap union bound — every set bit of ``bm_a|bm_b`` is hit by ≥1
@@ -368,36 +387,9 @@ def minhash_near_duplicates(
     """
     from pyspark.sql import Window
 
-    nwords = _BITMAP_WORDS
-    nbits = nwords * 64
-    sh = add_shingles(
-        _spread(df.select(F.col(id_col).alias("_id"), text_col), "_id"),
-        text_col,
-        shingle_k,
-    ).select("_id", "shingles")
-    hashed = sh.select(
-        "_id",
-        F.coalesce(F.size("shingles"), F.lit(0)).alias("n"),
-        _shingle_hashes("shingles", seed).alias("hs"),
+    posts = _minhash_postings(
+        df, id_col, text_col, shingle_k, num_hashes, bands, seed
     )
-    word_cols = [
-        F.coalesce(
-            F.expr(
-                f"aggregate(hs, cast(0 as bigint), (acc, h) -> "
-                f"if((h % {nbits}) div 64 = {w}, "
-                f"acc | shiftleft(cast(1 as bigint), cast(h % 64 as int)), acc))"
-            ),
-            F.lit(0),
-        ).alias(f"_bm{w}")
-        for w in range(nwords)
-    ]
-    sigs = hashed.select(
-        "_id", "n", *word_cols, _signature("hs", num_hashes, seed).alias("sig")
-    )
-    bm_names = [f"_bm{w}" for w in range(nwords)]
-    posts = sigs.select(
-        "_id", "n", *bm_names, _band_buckets("sig", num_hashes, bands).alias("bb")
-    ).select("_id", "n", *bm_names, "bb.band", "bb.bucket")
     if max_bucket_size is not None:
         _LOG.info(
             "minhash_near_duplicates: dropping buckets larger than %d members "
@@ -410,28 +402,21 @@ def minhash_near_duplicates(
             .where((F.col("_bn") >= 2) & (F.col("_bn") <= max_bucket_size))
             .drop("_bn")
         )
-    a = posts.select(
-        "band",
-        "bucket",
-        F.col("_id").alias("id_a"),
-        F.col("n").alias("n_a"),
-        *[F.col(f"_bm{w}").alias(f"_a{w}") for w in range(nwords)],
+    a, b = (
+        posts.selectExpr(
+            "band",
+            "bucket",
+            f"_id AS id_{side}",
+            f"n AS n_{side}",
+            *[f"_bm{w} AS _{side}{w}" for w in range(_BITMAP_WORDS)],
+        )
+        for side in "ab"
     )
-    b = posts.select(
-        "band",
-        "bucket",
-        F.col("_id").alias("id_b"),
-        F.col("n").alias("n_b"),
-        *[F.col(f"_bm{w}").alias(f"_b{w}") for w in range(nwords)],
-    )
-    na, nb = F.col("n_a"), F.col("n_b")
-    size_ok = (na >= nb * F.lit(threshold) - F.lit(1e-9)) & (
-        nb >= na * F.lit(threshold) - F.lit(1e-9)
-    )
-    or_pop = None
-    for w in range(nwords):
-        word = F.bit_count(F.col(f"_a{w}").bitwiseOR(F.col(f"_b{w}")))
-        or_pop = word if or_pop is None else or_pop + word
+    # the threshold as a double literal, the type the pruning arithmetic
+    # had when it was built from Column objects
+    t = f"{float(threshold)!r}D"
+    size_ok = f"n_a >= n_b * {t} - 1e-9D AND n_b >= n_a * {t} - 1e-9D"
+    or_pop = " + ".join(f"bit_count(_a{w} | _b{w})" for w in range(_BITMAP_WORDS))
     # Single-reference form of the union bound (r06b): with
     # m_ub = n_a+n_b−or_pop, the bound  m_ub ≥ t·(n_a+n_b−m_ub)  is
     # algebraically  or_pop ≤ (n_a+n_b)/(1+t).  The two-reference form
@@ -442,12 +427,13 @@ def minhash_near_duplicates(
     # or_pop ≤ popcount-bound ≤ |A∪B|; the 1e-9 slack (≥ the old form's
     # effective slack 1e-9/(1+t)) only ever ADMITS extra candidates,
     # which the exact verify rejects — output identical.
-    ub_ok = or_pop.cast("double") <= (na + nb).cast("double") / F.lit(
-        1.0 + threshold
-    ) + F.lit(1e-9)
+    ub_ok = (
+        f"cast({or_pop} as double) <= "
+        f"cast(n_a + n_b as double) / {float(1.0 + threshold)!r}D + 1e-9D"
+    )
     cands = (
         a.join(b, ["band", "bucket"])
-        .where((F.col("id_a") < F.col("id_b")) & size_ok & ub_ok)
+        .where(f"id_a < id_b AND {size_ok} AND {ub_ok}")
         .select("id_a", "id_b")
         .distinct()
     )

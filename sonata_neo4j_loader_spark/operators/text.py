@@ -181,39 +181,6 @@ def add_shingles(
     )
 
 
-def dup_ngram_fraction(col: str = "text", n: int = 1) -> Column:
-    """Repeated-n-gram fraction: 1 − distinct/total word n-grams (0 for
-    docs too short to have any) — the repetition signal behind the
-    Gopher/C4-style "repeated lines / repeated n-grams" cleaning rules.
-    Pure JVM array expressions on top of :func:`word_ngrams`."""
-    grams = word_ngrams(col, n)
-    total = F.size(grams)
-    return (
-        F.when(
-            total > 0,
-            F.lit(1.0) - F.size(F.array_distinct(grams)) / total.cast("double"),
-        )
-        .otherwise(F.lit(0.0))
-        .alias(f"dup_{n}gram_frac")
-    )
-
-
-def mean_word_length(col: str = "text") -> Column:
-    """Mean character length of whitespace words (0 for blank docs)."""
-    toks = word_ngrams(col, 1)
-    return (
-        F.when(
-            F.size(toks) > 0,
-            F.aggregate(
-                toks, F.lit(0.0), lambda acc, t: acc + F.length(t).cast("double")
-            )
-            / F.size(toks).cast("double"),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("mean_word_len")
-    )
-
-
 def quality_rule_flags(
     df,
     id_col: str = "doc_id",

@@ -12,16 +12,21 @@ Semantics:
 
 * events are folded per user in event-time order; a gap > ``gap`` closes
   the current session;
-* a session is EMITTED (append mode) only when it is provably closed —
-  either a later event arrived > gap after it, or the event-time timeout
-  fired (watermark passed ``last_event + gap``);
+* a session is EMITTED (append mode) only when it is provably closed: no
+  row the watermark still admits can reach it. A later event > gap after
+  it is not enough on its own — a tolerated-late row can land in the gap
+  and bridge the two — so the session is held until the user's latest
+  event minus the watermark delay, or the event-time timeout (watermark
+  past ``last_event + gap``), is beyond ``last_event + gap``;
 * the trailing open session is held in the state store with an event-time
-  timeout, so state is bounded: one open session per active user, and
-  idle users' state is reaped by the timeout;
+  timeout, plus at most one gap-closed session still waiting to be
+  provably closed (with ``delay <= gap`` a second one is always already
+  past the bound), so state is bounded and idle users' state is reaped by
+  the timeout;
 * late events (above the watermark — Spark drops the rest before the
-  operator) that sort before the open session's last event merge into it
-  (the session start moves back if needed), mirroring what the batch
-  twin's full-ordering window would have produced.
+  operator) merge into whichever held session they reach (its start moves
+  back if needed, and they can join two held sessions), mirroring what
+  the batch twin's full-ordering window would have produced.
 
 The per-batch kernel is vectorized (numpy ``reduceat`` over gap-split
 segments) — no per-row Python beyond the segment bookkeeping, which is
@@ -62,13 +67,20 @@ SESSION_SCHEMA = T.StructType(
     ]
 )
 
-# open-session state: (start_ns, last_ns, n_events, sum_value)
+# held sessions, each (start_ns, last_ns, n_events, sum_value): the open
+# session, then the gap-closed one not yet provably closed (null if none).
+# A checkpoint holding the earlier open-session-only state does not resume
+# under this schema; restart such a stream from a new checkpoint.
 STATE_SCHEMA = T.StructType(
     [
-        T.StructField("start_ns", T.LongType(), True),
-        T.StructField("last_ns", T.LongType(), True),
-        T.StructField("n_events", T.LongType(), True),
-        T.StructField("sum_value", T.DoubleType(), True),
+        T.StructField(f"{prefix}{name}", kind, True)
+        for prefix in ("", "p_")
+        for name, kind in (
+            ("start_ns", T.LongType()),
+            ("last_ns", T.LongType()),
+            ("n_events", T.LongType()),
+            ("sum_value", T.DoubleType()),
+        )
     ]
 )
 
@@ -87,96 +99,71 @@ def _session_frame(user: int, rows: list[tuple[int, int, int, float]]) -> pd.Dat
     )
 
 
-def make_sessionizer(gap_seconds: float):
+def make_sessionizer(gap_seconds: float, delay_seconds: float):
     """Build the per-group stateful kernel for ``applyInPandasWithState``."""
     gap_ns = int(gap_seconds * _NS)
+    delay_ns = int(delay_seconds * _NS)
 
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         user = key[0]
+        held = []
+        if state.exists:
+            st = state.get
+            held = [tuple(st[4:]), tuple(st[:4])] if st[4] is not None else [tuple(st[:4])]
+        wm_ns = state.getCurrentWatermarkMs() * 1_000_000
 
         if state.hasTimedOut:
-            # watermark passed last_event + gap: the open session is final
-            start_ns, last_ns, n, total = state.get
+            # watermark passed the earliest held session's last_event + gap
+            closed = [h for h in held if h[1] + gap_ns < wm_ns]
+            held = held[len(closed):]
+        else:
+            ev = pd.concat(list(pdfs))
+            ts = ev["event_time"].to_numpy(dtype="datetime64[ns]").astype("int64")
+            # held sessions join the batch as items spanning [start, last]:
+            # a session is a chain of events within gap of each other, so
+            # splitting the start-sorted items wherever a start lies > gap
+            # past every earlier item's last is the batch twin's split
+            # (explicit dtypes: an empty held list would make numpy promote
+            # the int64 nanoseconds to float64 and lose precision)
+            def col(i: int, batch: np.ndarray) -> np.ndarray:
+                return np.concatenate((np.array([h[i] for h in held], batch.dtype), batch))
+
+            starts = col(0, ts)
+            order = np.argsort(starts, kind="mergesort")
+            starts = starts[order]
+            lasts = col(1, ts)[order]
+            counts = col(2, np.ones(len(ts), "int64"))[order]
+            sums = col(3, ev["value"].to_numpy(dtype="float64"))[order]
+            run_last = np.maximum.accumulate(lasts)
+            seg_starts = np.concatenate(([0], np.flatnonzero(starts[1:] - run_last[:-1] > gap_ns) + 1))
+            seg_ends = np.concatenate((seg_starts[1:], [len(starts)])) - 1
+            sessions = list(
+                zip(
+                    starts[seg_starts].tolist(),
+                    run_last[seg_ends].tolist(),
+                    np.add.reduceat(counts, seg_starts).tolist(),
+                    np.add.reduceat(sums, seg_starts).tolist(),
+                )
+            )
+            # every row still to come is >= the user's latest event - delay;
+            # with delay <= gap (sessionize_stream's precondition) at most
+            # one gap-closed session stays within reach of such a row
+            bound = int(run_last[-1]) - delay_ns
+            closed = [x for x in sessions[:-1] if x[1] + gap_ns < bound]
+            held = sessions[len(closed):]
+
+        if held:
+            pending = held[0] if len(held) == 2 else (None,) * 4
+            state.update(tuple(held[-1]) + tuple(pending))
+            # event-time timeout at the earliest held last + gap; must stay
+            # above the watermark
+            state.setTimeoutTimestamp(
+                max(held[0][1] // 1_000_000 + int(gap_seconds * 1000), wm_ns // 1_000_000 + 1)
+            )
+        else:
             state.remove()
-            yield _session_frame(user, [(start_ns, last_ns, n, total)])
-            return
-
-        ev = pd.concat(list(pdfs)).sort_values("event_time", kind="mergesort")
-        ts = ev["event_time"].to_numpy(dtype="datetime64[ns]").astype("int64")
-        vals = ev["value"].to_numpy(dtype="float64")
-
-        closed: list[tuple[int, int, int, float]] = []
-        state_last = None
-        if state.exists:
-            start_ns, last_ns, n, total = state.get
-            if ts[0] - last_ns > gap_ns:
-                closed.append((start_ns, last_ns, n, total))
-                start_ns, last_ns, n, total = ts[0], ts[0], 0, 0.0
-            else:
-                # batch continues (or, for tolerated-late rows, merges
-                # into) the open session — start moves back if a late row
-                # predates it, and the state's last event keeps counting
-                # for gap/end math even when the late row sorts before it
-                state_last = last_ns
-            start_ns = min(start_ns, int(ts[0]))
-        else:
-            start_ns, last_ns, n, total = int(ts[0]), int(ts[0]), 0, 0.0
-
-        # vectorized gap split: the session's "last seen" at step i is
-        # max(prev batch event, state's last event) — a late row below the
-        # open session's last must not shrink the effective gap anchor.
-        # After any split the state anchor is dominated by construction
-        # (a split requires ts[i] > state_last + gap), so one maximum is
-        # safe for the whole batch.
-        prev_eff = ts[:-1]
-        if state_last is not None:
-            prev_eff = np.maximum(prev_eff, state_last)
-        bounds = np.flatnonzero(ts[1:] - prev_eff > gap_ns) + 1
-        seg_starts = np.concatenate(([0], bounds))
-        seg_counts = np.diff(np.concatenate((seg_starts, [len(ts)])))
-        seg_sums = np.add.reduceat(vals, seg_starts)
-        seg_first = ts[seg_starts]
-        seg_last = ts[np.concatenate((seg_starts[1:], [len(ts)])) - 1]
-
-        def merged_last(i: int) -> int:
-            # segment 0 may merge with the open state whose last event can
-            # exceed every batch row in it
-            if i == 0 and state_last is not None:
-                return max(int(seg_last[0]), state_last)
-            return int(seg_last[i])
-
-        # every segment except the last is closed by the gap that follows it
-        for i in range(len(seg_starts) - 1):
-            if i == 0:
-                closed.append(
-                    (start_ns, merged_last(0), n + int(seg_counts[0]), total + float(seg_sums[0]))
-                )
-            else:
-                closed.append(
-                    (int(seg_first[i]), int(seg_last[i]), int(seg_counts[i]), float(seg_sums[i]))
-                )
-        li = len(seg_starts) - 1
-        if li == 0:
-            open_state = (
-                start_ns,
-                merged_last(0),
-                n + int(seg_counts[li]),
-                total + float(seg_sums[li]),
-            )
-        else:
-            open_state = (
-                int(seg_first[li]),
-                int(seg_last[li]),
-                int(seg_counts[li]),
-                float(seg_sums[li]),
-            )
-        state.update(open_state)
-        # event-time timeout at last + gap; must stay above the watermark
-        wm_ms = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(max(open_state[1] // 1_000_000 + int(gap_seconds * 1000), wm_ms + 1))
-
         if closed:
             yield _session_frame(user, closed)
 
@@ -234,12 +221,13 @@ def sessionize_stream(
     """readStream over an event directory -> closed-session stream.
 
     Requires ``watermark_delay <= gap_seconds``. Under that bound the
-    stream provably equals the batch gap-sessionization: a tolerated-late
-    row r satisfies r >= max_seen - delay >= last - gap, so it can never
-    be more than one gap below any event it must order against — every
-    merge the kernel makes is one the full batch ordering makes too. With
-    delay > gap, a late row older than the open session's span minus the
-    gap would merge here but split in batch, silently diverging.
+    stream provably equals the batch gap-sessionization: every admitted
+    row r satisfies r >= max_seen - delay, a session is emitted only once
+    its last + gap is below that bound (so no admitted row can reach it),
+    and until then every row merges into the held sessions exactly as the
+    full batch ordering would. The bound also keeps the state to the open
+    session plus at most one gap-closed one. With delay > gap, late rows
+    could reach sessions already emitted, silently diverging.
     """
     if _delay_seconds(watermark_delay) > gap_seconds:
         raise ValueError(
@@ -252,7 +240,7 @@ def sessionize_stream(
         stream.withWatermark("event_time", watermark_delay)
         .groupBy("user_id")
         .applyInPandasWithState(
-            make_sessionizer(gap_seconds),
+            make_sessionizer(gap_seconds, _delay_seconds(watermark_delay)),
             outputStructType=SESSION_SCHEMA,
             stateStructType=STATE_SCHEMA,
             outputMode="append",

@@ -275,6 +275,39 @@ def test_minhash_verify_single_intersect_no_union(spark):
     assert "array_union" not in plan
 
 
+def test_minhash_postings_run_no_lambda_over_shingle_hashes(spark):
+    # the MinHash signature and bitmap are min/bit_or aggregates over the
+    # exploded shingle hashes: higher-order functions are CodegenFallback
+    # and ran 64 interpreted lambda passes per document. The only lambdas
+    # left are the shingling transform (over a position sequence) and the
+    # shingle-hash transform (over the shingle array). banded_postings
+    # selects no bitmap word, so column pruning must drop every bit_or.
+    from sonata_neo4j_loader_spark.operators import dedup
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    key = "spark.sql.debug.maxToStringFields"  # wide projections truncate
+    old = spark.conf.get(key)
+    spark.conf.set(key, 100000)
+    try:
+        near, post = (
+            df._jdf.queryExecution().optimizedPlan().toString()
+            for df in (
+                dedup.minhash_near_duplicates(docs, "doc_id", "text", threshold=0.6),
+                dedup.banded_postings(docs, "doc_id", "text"),
+            )
+        )
+    finally:
+        spark.conf.set(key, old)
+    for plan in (near, post):
+        assert "array_min" not in plan
+        assert "aggregate(" not in plan
+        lambdas = plan.count("lambdafunction(")
+        allowed = plan.count("transform(sequence(") + plan.count("transform(shingles#")
+        assert lambdas == allowed, (lambdas, allowed)
+    assert "bit_or" in near
+    assert "bit_or" not in post
+
+
 def test_q21_aggregates_share_one_exchange(spark):
     # r06 third pass: the pair-level and order-level aggregates ride ONE
     # exchange (the explicit orderkey repartition satisfies both

@@ -1,8 +1,9 @@
 """Stateful streaming sessionization: gap-close, timeout-close, state reap.
 
 Three drains over a growing event directory prove the contract:
-1. a session is emitted as soon as a later event closes it by gap —
-   within one batch or across batches;
+1. a session is emitted once a later event closes it by gap and no row
+   the watermark still admits can bridge that gap — within one batch or
+   across batches;
 2. an open session survives in the state store across drains;
 3. the event-time timeout (watermark past last_event + gap) finalizes an
    open session with no further events — idle-user state is reaped.
@@ -121,6 +122,22 @@ def test_late_event_merges_without_shrinking_session(spark, tmp_path):
     _write(spark, src, [(ts(2), 7, 4.0), (ts(35), 7, 8.0)])
     got = _drain(spark, src, out, ckpt)
     assert got == [(7, ts(0), ts(5), 3, 7.0)]
+
+
+def test_late_event_bridges_a_gap_closed_session(spark, tmp_path):
+    """A later event more than a gap away does not prove a session closed:
+    a tolerated-late row can still land in the gap and join the two, as
+    the batch ordering does. Batch 1 holds 00:00 and 00:11 (11 min > the
+    10 min gap); the late 00:07 (above the 00:06 watermark) bridges them."""
+    src = str(tmp_path / "events")
+    out = str(tmp_path / "sessions")
+    ckpt = str(tmp_path / "ckpt")
+
+    _write(spark, src, [(ts(0), 7, 1.0), (ts(11), 7, 2.0)])
+    assert _drain(spark, src, out, ckpt) == []
+
+    _write(spark, src, [(ts(7), 7, 4.0), (ts(40), 7, 8.0)])
+    assert _drain(spark, src, out, ckpt) == [(7, ts(0), ts(11), 3, 7.0)]
 
 
 def test_gap_and_timeout_sessionization(spark, tmp_path):
