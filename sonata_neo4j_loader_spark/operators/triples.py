@@ -134,17 +134,6 @@ def synapse_triples(
     )
 
 
-def population_nodes(linked: DataFrame) -> DataFrame:
-    """Distinct Population entity rows (≙ bulk_insert_population_nodes,
-    reference ``neo4j_operations.py:297-320``)."""
-    return (
-        linked.where(F.col("kind") == "population")
-        .select(F.col("entity_id").alias("entity_id"))
-        .distinct()
-        .withColumn("label", F.lit("Population"))
-    )
-
-
 # mention kind -> node property key, ≙ the attribute column names the
 # reference discovers in the h5 node storage (data_extraction.py:52-58)
 # and copies onto the node wholesale with ``SET n += node``

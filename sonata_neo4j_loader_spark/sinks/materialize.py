@@ -24,10 +24,14 @@ distributed write:
   rewrites finished partitions, and a *changed input* invalidates exactly
   the partitions it touches.
 
-Scale posture: the fingerprint pass is a single ``groupBy(part)`` hash
-aggregation (partial+final, no row explosion); the write is ONE Spark job
-covering all pending partitions via dynamic partition overwrite — never a
-driver-side loop of per-partition jobs.
+Scale posture: the commit decision costs ONE fingerprint collect (a
+single ``groupBy(part)`` partial+final hash aggregation, at most
+``num_buckets`` rows) and ONE manifest collect; pending, skipped, vacated
+and the next commit sequence are then plain set logic on the driver. The
+write is ONE Spark job covering all pending partitions via dynamic
+partition overwrite — never a driver-side loop of per-partition jobs. So
+the input is evaluated once on an unchanged re-run and twice on a cold
+commit (fingerprints, then the write).
 """
 
 from __future__ import annotations
@@ -36,7 +40,8 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -122,21 +127,22 @@ def _manifest_path(table_path: str) -> str:
     return f"{table_path}/{MANIFEST_DIR}"
 
 
-def read_manifest(spark: SparkSession, table_path: str) -> DataFrame | None:
-    try:
-        return spark.read.schema(MANIFEST_SCHEMA).parquet(_manifest_path(table_path))
-    except Exception:
-        return None
-
-
-def committed_partitions(spark: SparkSession, table_path: str) -> DataFrame | None:
+def committed_partitions(spark: SparkSession, table_path: str) -> dict[int, Row] | None:
     """Latest manifest row per partition (highest committed_seq wins —
-    ≙ Iceberg's current-snapshot view of a partition)."""
-    manifest = read_manifest(spark, table_path)
-    if manifest is None:
+    ≙ Iceberg's current-snapshot view of a partition), or ``None`` before
+    the first commit.
+
+    Only a missing manifest means "nothing committed": any other read
+    failure (a corrupt or foreign file under ``_manifest``) is raised, never
+    mistaken for a cold table that would be re-committed from seq 1.
+    """
+    try:
+        rows = spark.read.schema(MANIFEST_SCHEMA).parquet(_manifest_path(table_path)).collect()
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         return None
-    latest = manifest.groupBy(PART_COL).agg(F.max("committed_seq").alias("committed_seq"))
-    return manifest.join(latest, [PART_COL, "committed_seq"], "inner")
+    return {r[PART_COL]: r for r in sorted(rows, key=lambda r: r["committed_seq"])}
 
 
 def materialize(
@@ -158,50 +164,27 @@ def materialize(
     t0 = time.monotonic()
 
     bucketed = with_bucket(df, key_cols, num_buckets)
-    fresh = partition_fingerprints(bucketed)
+    # both dicts hold at most num_buckets entries: the commit decision
+    # below is plain set logic on the driver
+    fresh = {r[PART_COL]: r for r in partition_fingerprints(bucketed).collect()}
+    done = committed_partitions(spark, table_path) or {}
 
-    done = committed_partitions(spark, table_path)
-    vacated_ids: list[int] = []
-    if done is not None:
-        # a partition is done iff its committed fingerprint matches the
-        # fingerprint of *today's* input for that partition
-        pending = (
-            fresh.alias("f")
-            .join(
-                done.select(PART_COL, "input_fingerprint").alias("d"),
-                [PART_COL, "input_fingerprint"],
-                "left_anti",
-            )
-        )
-        next_seq = (
-            done.agg(F.max("committed_seq")).collect()[0][0] or 0
-        ) + 1
-        # committed partitions ABSENT from the new input: dynamic
-        # overwrite can only replace partitions it has rows for, so an
-        # emptied bucket keeps its stale files — tombstone it in the
-        # manifest (row_count 0) instead; read_materialized and the audit
-        # treat it as invisible, and a later input that repopulates the
-        # bucket fingerprint-mismatches the tombstone and rewrites it.
-        # row_count > 0 keeps re-runs idempotent (never re-tombstone).
-        vacated_ids = sorted(
-            r[PART_COL]
-            for r in done.where(F.col("row_count") > 0)
-            .join(fresh.select(PART_COL), PART_COL, "left_anti")
-            .select(PART_COL)
-            .collect()
-        )
-    else:
-        pending = fresh
-        next_seq = 1
-
-    # pending partition ids: bounded by num_buckets (small), safe to collect
-    pending_rows = pending.collect()
-    pending_rows.sort(key=lambda r: r[PART_COL])
-    if limit_parts is not None:
-        pending_rows = pending_rows[:limit_parts]
-    pending_ids = [r[PART_COL] for r in pending_rows]
-    all_parts = [r[PART_COL] for r in fresh.select(PART_COL).collect()]
-    skipped = sorted(set(all_parts) - set(pending_ids))
+    # a partition is done iff its committed fingerprint matches the
+    # fingerprint of *today's* input for that partition
+    skipped = sorted(
+        p for p, r in fresh.items()
+        if p in done and done[p]["input_fingerprint"] == r["input_fingerprint"]
+    )
+    pending_ids = sorted(fresh.keys() - set(skipped))[:limit_parts]
+    # committed partitions ABSENT from the new input: dynamic overwrite can
+    # only replace partitions it has rows for, so an emptied bucket keeps
+    # its stale files — tombstone it in the manifest (row_count 0) instead;
+    # read_materialized and the audit treat it as invisible, and a later
+    # input that repopulates the bucket fingerprint-mismatches the
+    # tombstone and rewrites it. row_count > 0 keeps re-runs idempotent
+    # (never re-tombstone).
+    vacated_ids = sorted(p for p, r in done.items() if r["row_count"] > 0 and p not in fresh)
+    next_seq = max((r["committed_seq"] for r in done.values()), default=0) + 1
 
     rows_written = 0
     if pending_ids:
@@ -215,22 +198,22 @@ def materialize(
             .mode("overwrite")
             .parquet(table_path)
         )
-        rows_written = sum(r["row_count"] for r in pending_rows)
+        rows_written = sum(fresh[p]["row_count"] for p in pending_ids)
 
     wall_ms = int((time.monotonic() - t0) * 1000)
     manifest_rows = [
         (
-            int(r[PART_COL]),
-            r["input_fingerprint"],
-            int(r["row_count"]),
+            p,
+            fresh[p]["input_fingerprint"],
+            fresh[p]["row_count"],
             wall_ms,
             stage,
             run_id,
             next_seq,
         )
-        for r in pending_rows
+        for p in pending_ids
     ] + [
-        (int(p), "<vacated>", 0, wall_ms, stage, run_id, next_seq)
+        (p, "<vacated>", 0, wall_ms, stage, run_id, next_seq)
         for p in vacated_ids
     ]
     if manifest_rows:
@@ -266,13 +249,7 @@ def visible_parts(spark: SparkSession, table_path: str) -> list[int]:
     done = committed_partitions(spark, table_path)
     if done is None:
         raise FileNotFoundError(f"no manifest at {table_path}")
-    return sorted(
-        r[PART_COL]
-        for r in done.where(F.col("row_count") > 0)
-        .select(PART_COL)
-        .distinct()
-        .collect()
-    )
+    return sorted(p for p, r in done.items() if r["row_count"] > 0)
 
 
 def read_materialized(spark: SparkSession, table_path: str) -> DataFrame:
@@ -297,17 +274,19 @@ def verify_against_manifest(spark: SparkSession, table_path: str) -> DataFrame:
     done = committed_partitions(spark, table_path)
     if done is None:
         raise FileNotFoundError(f"no manifest at {table_path}")
+    # tombstoned partitions are not visible, so their (dead) on-disk files
+    # are not drift — audit only the partitions a read would return
+    expected = spark.createDataFrame(
+        [(p, r["row_count"]) for p, r in done.items() if r["row_count"] > 0],
+        T.StructType([MANIFEST_SCHEMA[PART_COL], MANIFEST_SCHEMA["row_count"]]),
+    )
     actual = (
         spark.read.parquet(table_path)
         .groupBy(PART_COL)
         .agg(F.count(F.lit(1)).alias("actual_rows"))
     )
-    # tombstoned partitions are not visible, so their (dead) on-disk files
-    # are not drift — audit only the partitions a read would return
     return (
-        done.where(F.col("row_count") > 0)
-        .select(PART_COL, "row_count")
-        .join(actual, PART_COL, "left")
+        expected.join(actual, PART_COL, "left")
         .where(
             F.col("actual_rows").isNull() | (F.col("actual_rows") != F.col("row_count"))
         )

@@ -17,21 +17,21 @@ from sonata_neo4j_loader_spark.sinks import materialize as mat
 N_BUCKETS = 8
 
 
+def _triples(spark, n):
+    # deterministic synthetic triple table with a map-typed props column
+    return spark.range(0, n).select(
+        F.concat(F.lit("neuron:P:"), F.col("id")).alias("subj"),
+        F.lit("SYNAPSES_ONTO").alias("pred"),
+        F.concat(F.lit("neuron:P:"), (F.col("id") * 7 % 500)).alias("obj"),
+        F.create_map(
+            F.lit("conductance"), (F.col("id") % 13).cast("double")
+        ).alias("props"),
+    )
+
+
 @pytest.fixture(scope="module")
 def triples_df(spark):
-    # deterministic synthetic triple table with a map-typed props column
-    return (
-        spark.range(0, 500)
-        .select(
-            F.concat(F.lit("neuron:P:"), F.col("id")).alias("subj"),
-            F.lit("SYNAPSES_ONTO").alias("pred"),
-            F.concat(F.lit("neuron:P:"), (F.col("id") * 7 % 500)).alias("obj"),
-            F.create_map(
-                F.lit("conductance"), (F.col("id") % 13).cast("double")
-            ).alias("props"),
-        )
-        .localCheckpoint()
-    )
+    return _triples(spark, 500).localCheckpoint()
 
 
 def _sorted_rows(df):
@@ -63,6 +63,8 @@ def test_kill_and_resume_skips_finished_partitions(spark, triples_df, tmp_path):
     # run 1 dies after committing 3 of 8 partitions
     rep1 = mat.materialize(triples_df, path, ["subj", "obj"], N_BUCKETS, limit_parts=3)
     assert len(rep1.partitions_written) == 3
+    # skipped means "fingerprint matched the manifest", not "not reached"
+    assert rep1.partitions_skipped == []
 
     # resume: the 3 finished partitions are skipped, the 5 pending complete
     rep2 = mat.materialize(triples_df, path, ["subj", "obj"], N_BUCKETS)
@@ -81,7 +83,7 @@ def test_partial_table_is_invisible_until_committed(spark, triples_df, tmp_path)
     # only the 2 committed partitions are readable (manifest-gated snapshot)
     out = mat.read_materialized(spark, path)
     committed = mat.committed_partitions(spark, path)
-    expected = sum(r.row_count for r in committed.collect())
+    expected = sum(r.row_count for r in committed.values())
     assert out.count() == expected < 500
 
 
@@ -111,6 +113,31 @@ def test_changed_input_invalidates_only_touched_partitions(spark, triples_df, tm
 
     out = mat.read_materialized(spark, path)
     assert _sorted_rows(out) == _sorted_rows(changed)
+
+
+def test_input_evaluated_twice_cold_once_on_rerun(spark, tmp_path):
+    """The commit decision is driver-side set logic over one fingerprint
+    collect: a cold commit evaluates the input twice (fingerprints, then the
+    write) and an unchanged re-run once (fingerprints only)."""
+    evals = spark.sparkContext.accumulator(0)
+
+    def bump(i):
+        evals.add(1)
+        return i
+
+    n = 40
+    tick = F.udf(bump, "long").asNondeterministic()
+    # the counted column is the bucket key, so no pass can prune it away
+    df = spark.range(0, n).withColumn("k", tick("id"))
+    path = str(tmp_path / "counted")
+
+    mat.materialize(df, path, ["k"], N_BUCKETS)
+    assert evals.value == 2 * n
+
+    evals.value = 0
+    rep = mat.materialize(df, path, ["k"], N_BUCKETS)
+    assert rep.partitions_written == []
+    assert evals.value == n
 
 
 def test_fingerprint_stable_across_partitioning(spark, triples_df):
@@ -155,3 +182,59 @@ def test_refresh_vacates_emptied_partitions(spark, tmp_path):
     assert rep3.partitions_written == [victim]
     assert {r.k for r in mat.read_materialized(spark, path).collect()} == set(range(40))
     assert mat.verify_against_manifest(spark, path).count() == 0
+
+
+# (part, input_fingerprint, row_count) of the first 40 rows of the triple
+# table at 8 buckets, as committed by the anti-join version of the sink.
+# Resuming must keep matching them, or every table committed before the
+# change would be rewritten from scratch.
+FROZEN_MANIFEST = [
+    (0, "-14354118194159953040", 5),
+    (1, "608834203869406475", 4),
+    (2, "3091054858677621871", 6),
+    (3, "-19736775070617357972", 6),
+    (4, "8386519990324772363", 1),
+    (5, "-12354370361979041450", 5),
+    (6, "-11603510020808720579", 7),
+    (7, "4234187541074421051", 6),
+]
+
+
+def test_frozen_manifest_resumes_without_rewriting(spark, tmp_path):
+    df = _triples(spark, 40)
+    path = str(tmp_path / "frozen")
+    mat.with_bucket(df, ["subj", "obj"], N_BUCKETS).write.partitionBy(mat.PART_COL).parquet(path)
+    spark.createDataFrame(
+        [(p, fp, n, 0, "triples", "frozen", 1) for p, fp, n in FROZEN_MANIFEST],
+        mat.MANIFEST_SCHEMA,
+    ).write.parquet(f"{path}/{mat.MANIFEST_DIR}")
+
+    rep = mat.materialize(df, path, ["subj", "obj"], N_BUCKETS)
+    assert rep.partitions_written == [] and rep.partitions_vacated == []
+    assert rep.partitions_skipped == list(range(N_BUCKETS))
+    assert _sorted_rows(mat.read_materialized(spark, path)) == _sorted_rows(df)
+    assert mat.verify_against_manifest(spark, path).count() == 0
+
+    # a cold commit today writes the same manifest rows, same schema
+    fresh = str(tmp_path / "fresh")
+    mat.materialize(df, fresh, ["subj", "obj"], N_BUCKETS)
+    manifest = spark.read.parquet(f"{fresh}/{mat.MANIFEST_DIR}")
+    # Parquet reads every column back nullable: compare names and types
+    assert [(f.name, f.dataType) for f in manifest.schema] == [
+        (f.name, f.dataType) for f in mat.MANIFEST_SCHEMA
+    ]
+    assert sorted(
+        (r.part, r.input_fingerprint, r.row_count) for r in manifest.collect()
+    ) == FROZEN_MANIFEST
+
+
+def test_unreadable_manifest_raises_instead_of_recommitting(spark, tmp_path):
+    """Only a missing manifest means "nothing committed"; a foreign file
+    under ``_manifest`` must fail the commit, not restart it from seq 1."""
+    path = tmp_path / "corrupt"
+    (path / mat.MANIFEST_DIR).mkdir(parents=True)
+    (path / mat.MANIFEST_DIR / "part-00000.parquet").write_text("not parquet\n")
+
+    with pytest.raises(Exception):
+        mat.materialize(_triples(spark, 40), str(path), ["subj", "obj"], N_BUCKETS)
+    assert not any(p.name.startswith(f"{mat.PART_COL}=") for p in path.iterdir())
