@@ -3109,9 +3109,10 @@ def oracle_sql() -> dict[str, str]:
                        0) AS prefix
               FROM t
             )
+            -- CAST: SUM(BIGINT) yields HUGEINT (int128); align to Spark's BIGINT
             SELECT doc_id, n_tokens,
-                   prefix // 256 AS bin_id,
-                   prefix % 256 AS bin_offset
+                   CAST(prefix // 256 AS BIGINT) AS bin_id,
+                   CAST(prefix % 256 AS BIGINT) AS bin_offset
             FROM p
         """,
         # list-twin of quality_rule_flags: same tokenization (lowercased
@@ -4129,7 +4130,8 @@ def staged_oracle_sql() -> dict[str, str]:
               SELECT doc_id,
                      list(tid ORDER BY i) AS token_ids,
                      count(*) AS n_tokens,
-                     sum(CASE WHEN tid = -1 THEN 1 ELSE 0 END) AS n_unk
+                     -- CAST: sum() yields HUGEINT; align to Spark's BIGINT
+                     CAST(sum(CASE WHEN tid = -1 THEN 1 ELSE 0 END) AS BIGINT) AS n_unk
               FROM enc GROUP BY doc_id
             )
             SELECT d.doc_id,

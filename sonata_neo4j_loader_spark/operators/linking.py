@@ -47,3 +47,13 @@ def link_mentions(
             salted_entities, ["surface", "_salt"], "inner"
         ).drop("_salt")
     raise ValueError(f"unknown strategy: {strategy}")
+
+
+def link_surfaces(
+    surfaces: DataFrame, entities: DataFrame, strategy: str = "broadcast"
+) -> DataFrame:
+    """distinct surfaces(surface) ⋈ entities. A distinct set has no hot keys
+    to split (nor a ``doc_id`` to salt with): ``salted`` is a plain join."""
+    if strategy == "broadcast":
+        entities = F.broadcast(entities)
+    return surfaces.join(entities, "surface", "inner")

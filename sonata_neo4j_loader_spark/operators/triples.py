@@ -37,22 +37,22 @@ ATTRIBUTE_PREDICATES: dict[str, str] = {
 }
 
 
-def attribute_triples(
+def linked_attribute_pairs(
     extracted: DataFrame,
     entities: DataFrame,
     strategy: str = "broadcast",
     salt_buckets: int = 8,
 ) -> DataFrame:
-    """Extraction frame -> deduped neuron-attribute triples (MERGE semantics).
+    """Extraction frame -> linked neuron×attribute pairs (doc_id, subj, kind, obj).
 
-    The one attribute-triple path, shared by the batch plan and the
-    streaming ingest. Within each document the neuron mention is the
-    subject and every co-mentioned attribute entity an object — Cypher's
-    per-row ``MATCH (n:Neuron {..}) MATCH (g {name: ..})`` pattern
-    (reference ``neo4j_operations.py:216-221``). The pairing happens inside
-    the extraction row (``mentions.attribute_pairs_from_extracted``), so no
+    Within each document the neuron mention is the subject and every
+    co-mentioned entity an object — Cypher's per-row ``MATCH (n:Neuron
+    {..}) MATCH (g {name: ..})`` pattern (reference
+    ``neo4j_operations.py:216-221``). The pairing happens inside the
+    extraction row (``mentions.attribute_pairs_from_extracted``), so no
     corpus-scale doc_id join runs; both surfaces then link against
-    ``entities``, whose ids must already be canonical.
+    ``entities``, whose ids must already be canonical. The attribute
+    triples and the node payloads are both projections of this frame.
     """
     pairs = mentions.attribute_pairs_from_extracted(extracted)
     for side in ("subj", "obj"):
@@ -66,7 +66,27 @@ def attribute_triples(
             .withColumnRenamed("entity_id", side)
             .drop("surface", "entity_type")
         )
-    return neuron_attribute_triples_from_pairs(pairs)
+    return pairs
+
+
+def attribute_triples(
+    extracted: DataFrame,
+    entities: DataFrame,
+    strategy: str = "broadcast",
+    salt_buckets: int = 8,
+) -> DataFrame:
+    """Extraction frame -> deduped neuron-attribute triples (MERGE semantics):
+    the streaming ingest's entry to the batch plan's one attribute path."""
+    return neuron_attribute_triples_from_pairs(
+        linked_attribute_pairs(extracted, entities, strategy, salt_buckets)
+    )
+
+
+def _lookup(mapping: dict[str, str], col: F.Column) -> F.Column:
+    """``mapping[col]`` as a literal-map lookup (NULL for unmapped keys)."""
+    return F.create_map(
+        *[x for k, v in mapping.items() for x in (F.lit(k), F.lit(v))]
+    )[col]
 
 
 def neuron_attribute_triples_from_pairs(pairs_linked: DataFrame) -> DataFrame:
@@ -79,12 +99,9 @@ def neuron_attribute_triples_from_pairs(pairs_linked: DataFrame) -> DataFrame:
     Output is row-identical to a doc_id self-join of linked mentions
     (tests/test_triples_golden.py keeps that join as its reference).
     """
-    pred_map = F.create_map(
-        *[x for k, v in ATTRIBUTE_PREDICATES.items() for x in (F.lit(k), F.lit(v))]
-    )
     return (
         pairs_linked.select(
-            "subj", pred_map[F.col("kind")].alias("pred"), "obj"
+            "subj", _lookup(ATTRIBUTE_PREDICATES, F.col("kind")).alias("pred"), "obj"
         )
         .where(F.col("pred").isNotNull())
         .dropDuplicates(["subj", "pred", "obj"])
@@ -152,41 +169,64 @@ def _strip_entity_prefix(col: F.Column) -> F.Column:
     return F.regexp_replace(col, "^[^:]+:", "")
 
 
-def neuron_properties(linked: DataFrame, extracted: DataFrame) -> DataFrame:
-    """Per-neuron property map ≙ the reference's ``SET n += node``.
+# dictionary entity type -> node label ≙ reference node labels: Neuron
+# (neo4j_operations.py:338), NodeGroup:MType / NodeGroup:SClass (:186),
+# Population (:312)
+NODE_LABELS: dict[str, str] = {
+    "neuron": "Neuron",
+    "mtype": "MType",
+    "etype": "EType",
+    "sclass": "SClass",
+    "population": "Population",
+    "morphology": "Morphology",
+}
 
-    Two value sources, unioned per document and keyed to the document's
-    neuron mention:
 
-    * co-mentioned entities (mtype/etype/sclass/population/morphology) —
-      the canonical entity id sans type prefix;
-    * plain attribute spans (layer/region) from the extraction frame's
-      ``node_attrs`` map — these are properties only, never dictionary
-      entities (reference stores them as h5 datasets, nodes_A.h5.txt).
+def nodes_from_pairs(
+    pairs_linked: DataFrame,
+    extracted: DataFrame,
+    entities: DataFrame,
+    strategy: str = "broadcast",
+    salt_buckets: int = 8,
+) -> DataFrame:
+    """The ``nodes`` table (entity_id, label, properties map<string,string>)
+    from the unsampled :func:`linked_attribute_pairs`.
 
-    Conflicting values for one (neuron, key) resolve to ``max`` —
-    deterministic under any partitioning, unlike the reference's
-    last-write-wins ``SET n +=`` which depends on UNWIND order.
-
-    Output: (entity_id, properties map<string,string>).
+    * label: every entity a distinct mention surface links to, from its
+      dictionary ``entity_type`` (``min`` if canonicalization merged types),
+      so no shuffle order can pick it.
+    * neuron properties ≙ ``SET n += node`` (neo4j_operations.py:339): each
+      paired entity under its ``PROPERTY_KEYS`` key (bare id), plus the
+      layer/region spans of every row mentioning the neuron. Conflicts
+      resolve to ``max`` — deterministic, unlike the reference's UNWIND-order
+      last write.
+    * population properties ≙ ``SET p += population`` (neo4j_operations.py:316,
+      data_extraction.py:66-72): {name, size = distinct paired neurons}.
+    * other nodes: NULL map.
     """
-    subjects = linked.where(F.col("kind") == "neuron").select(
-        "doc_id", F.col("entity_id").alias("entity_id")
+    surfaces = mentions.mentions_from_extracted(extracted).select("surface").distinct()
+    labels = (
+        linking.link_surfaces(surfaces, entities, strategy)
+        .groupBy("entity_id")
+        .agg(F.min(_lookup(NODE_LABELS, F.col("entity_type"))).alias("label"))
+        .where(F.col("label").isNotNull())
     )
-    key_map = F.create_map(
-        *[x for k, v in PROPERTY_KEYS.items() for x in (F.lit(k), F.lit(v))]
-    )
-    from_entities = linked.where(F.col("kind") != "neuron").select(
-        "doc_id",
-        key_map[F.col("kind")].alias("key"),
-        _strip_entity_prefix(F.col("entity_id")).alias("value"),
+    from_pairs = pairs_linked.select(
+        F.col("subj").alias("entity_id"),
+        _lookup(PROPERTY_KEYS, F.col("kind")).alias("key"),
+        _strip_entity_prefix(F.col("obj")).alias("value"),
     ).where(F.col("key").isNotNull())
-    from_attrs = extracted.select(
-        "doc_id", F.explode("node_attrs").alias("key", "value")
+    neuron_mentions = F.filter("mentions", lambda m: m["kind"] == F.lit("neuron"))
+    attr_rows = (
+        extracted.select("doc_id", "mentions", F.explode("node_attrs").alias("key", "value"))
+        .select("doc_id", "key", "value", F.explode(neuron_mentions).alias("_m"))
+        .select("doc_id", "key", "value", F.col("_m.surface").alias("surface"))
     )
-    pairs = from_entities.unionByName(from_attrs)
-    return (
-        subjects.join(pairs, "doc_id")
+    from_attrs = linking.link_mentions(
+        attr_rows, entities, strategy=strategy, salt_buckets=salt_buckets
+    ).select("entity_id", "key", "value")
+    neuron_props = (
+        from_pairs.unionByName(from_attrs)
         .groupBy("entity_id", "key")
         .agg(F.max("value").alias("value"))
         .groupBy("entity_id")
@@ -196,67 +236,16 @@ def neuron_properties(linked: DataFrame, extracted: DataFrame) -> DataFrame:
             ).alias("properties")
         )
     )
-
-
-def population_properties(linked: DataFrame) -> DataFrame:
-    """Per-population property map ≙ ``SET p += population``
-    (neo4j_operations.py:316; payload built at data_extraction.py:66-72:
-    {name, size}). Size = distinct member neurons observed in the corpus —
-    the document-world analogue of ``population.size``. String-typed map
-    (Neo4j properties are heterogeneous; typed columns live in the flat
-    contract queries).
-    """
-    pops = linked.where(F.col("kind") == "population").select(
-        "doc_id", F.col("entity_id").alias("entity_id")
-    )
-    members = linked.where(F.col("kind") == "neuron").select(
-        "doc_id", F.col("entity_id").alias("member_id")
-    )
-    return (
-        pops.join(members, "doc_id")
-        .groupBy("entity_id")
-        .agg(F.countDistinct("member_id").alias("size"))
+    population_props = (
+        pairs_linked.where(F.col("kind") == "population")
+        .groupBy(F.col("obj").alias("entity_id"))
+        .agg(F.countDistinct("subj").cast("string").alias("size"))
         .select(
             "entity_id",
-            F.map_from_entries(
-                F.array(
-                    F.struct(
-                        F.lit("name").alias("key"),
-                        _strip_entity_prefix(F.col("entity_id")).alias("value"),
-                    ),
-                    F.struct(
-                        F.lit("size").alias("key"),
-                        F.col("size").cast("string").alias("value"),
-                    ),
-                )
+            F.create_map(
+                F.lit("name"), _strip_entity_prefix(F.col("entity_id")),
+                F.lit("size"), F.col("size"),
             ).alias("properties"),
         )
     )
-
-
-def node_properties(linked: DataFrame, extracted: DataFrame) -> DataFrame:
-    """Union of neuron + population property payloads, one row per node."""
-    return neuron_properties(linked, extracted).unionByName(
-        population_properties(linked)
-    )
-
-
-def node_table(linked: DataFrame) -> DataFrame:
-    """All distinct graph nodes with labels — the ``nodes`` output table.
-
-    Labels ≙ reference node labels: Neuron (neo4j_operations.py:338),
-    NodeGroup:MType / NodeGroup:SClass (:186), Population (:312).
-    """
-    label_map = F.create_map(
-        F.lit("neuron"), F.lit("Neuron"),
-        F.lit("mtype"), F.lit("MType"),
-        F.lit("etype"), F.lit("EType"),
-        F.lit("sclass"), F.lit("SClass"),
-        F.lit("population"), F.lit("Population"),
-        F.lit("media"), F.lit("Morphology"),
-    )
-    return (
-        linked.select(F.col("entity_id"), label_map[F.col("kind")].alias("label"))
-        .where(F.col("label").isNotNull())
-        .dropDuplicates(["entity_id"])
-    )
+    return labels.join(neuron_props.unionByName(population_props), "entity_id", "left")

@@ -57,7 +57,8 @@ def build_triples(
       * ``attribute_triples`` — deduped neuron-attribute triples
       * ``synapse_triples``   — multiset SYNAPSES_ONTO with props
       * ``aggregate_triples`` — AGGREGATED_SYNAPSE_* rows
-      * ``node_properties``   — (entity_id, properties) standalone table
+      * ``node_properties``   — (entity_id, properties) of the nodes that
+        carry a payload: a projection of ``nodes``
       * ``invariant_violations`` — docs whose span sequence broke (audit)
     """
     cfg = config or PipelineConfig()
@@ -97,38 +98,19 @@ def build_triples(
     # per branch. Persisting the *extraction* (not the parsed text) is the
     # 100 TB-safe choice: it's dimension-sized relative to the corpus.
     extracted = mentions.extract_documents(parsed, impl=cfg.mention_impl).persist()
-    mention_rows = mentions.mentions_from_extracted(extracted)
     synapse_rows = mentions.synapses_from_extracted(extracted)
 
-    # stage 3+4: entity linking against the canonical dictionary (the
-    # alias→canonical rewrite already happened dictionary-side above, so
-    # linked ids are canonical by construction).
-    linked = linking.link_mentions(
-        mention_rows, entities, strategy=cfg.link_strategy, salt_buckets=cfg.salt_buckets
-    )
-    # NOT persisted: linked is corpus-scale (one row per mention) and,
-    # since the attribute branch went pair-first, the triple path's only
-    # use of it is the dimension-sized `neurons` distinct below (itself
-    # persisted). The node outputs (node_table/node_properties) re-derive
-    # it with one extra broadcast-join pass over the compact cached
-    # extraction frame WHEN they are materialized — at 100 TB, re-reading
-    # a compact cache twice beats pinning tens of billions of wide
-    # mention rows in executor storage. Cache dimension-sized frames;
-    # recompute corpus-sized narrow derivations.
+    # stages 3-5 link against the canonical dictionary (the alias→canonical
+    # rewrite already happened dictionary-side above, so linked ids are
+    # canonical by construction). No corpus-scale frame of linked mentions
+    # exists: each branch links the narrowest rows it needs — distinct
+    # surfaces, per-row neuron×attribute pairs, synapse endpoints.
 
-    # stage 5a: neuron universe + sampling / node-set restriction.
-    # Optimization r06 (guide §2.3, shuffle keys not payloads): the r05
-    # shape derived the universe as known_neurons(linked) — exploding ALL
-    # mentions of every document (media refs included) through the link
-    # join and distinct-ing the corpus-scale result — even though the
-    # timed triple path needs nothing else from `linked`. Instead explode
-    # only the neuron-kind mentions, take the distinct SURFACES first
-    # (map-side combine over a dictionary-sized set), and run the link +
-    # canonical joins on that dimension-sized frame. Row-identical:
-    # distinct-before-join equals distinct-after-join for an inner
-    # equi-join keyed on the distinct column, and kind='media' rows can
-    # never match kind='neuron'. `linked` is still the source for the
-    # node outputs below, which materialize outside the triple path.
+    # stage 5a: neuron universe + sampling / node-set restriction. Only the
+    # neuron-kind mentions are exploded, and their distinct SURFACES are
+    # linked: the distinct map-side-combines to a dictionary-sized set
+    # before the join, and distinct-before-join equals distinct-after-join
+    # for an inner equi-join keyed on the distinct column.
     neuron_surf = (
         extracted.select(
             F.explode(
@@ -138,15 +120,11 @@ def build_triples(
         .select(F.col("_m.surface").alias("surface"))
         .distinct()
     )
-    if cfg.link_strategy == "broadcast":
-        neuron_ids = neuron_surf.join(F.broadcast(entities), "surface", "inner")
-    else:
-        # distinct surfaces have no hot keys — a plain shuffle join is the
-        # salted strategy's equivalent here (salting exists to split heavy
-        # repeated surfaces, which a distinct set cannot contain)
-        neuron_ids = neuron_surf.join(entities, "surface", "inner")
-    neuron_ids = neuron_ids.select(F.col("entity_id").alias("neuron_id"))
-    neurons = neuron_ids.distinct()
+    neurons = (
+        linking.link_surfaces(neuron_surf, entities, cfg.link_strategy)
+        .select(F.col("entity_id").alias("neuron_id"))
+        .distinct()
+    )
     neurons = sampling.filter_node_set(neurons, cfg.node_set_pops)
     neurons = sampling.sample_by_hash(
         neurons, "neuron_id", cfg.node_proportion, SAMPLE_SEED
@@ -154,14 +132,15 @@ def build_triples(
     neurons = neurons.persist()
 
     # stage 5b: attribute triples, restricted to surviving neurons.
-    # Pair-first shape (triples.attribute_triples): subject×object pairing
-    # happens INSIDE each extraction row, both surfaces link via broadcast,
-    # and the MERGE dedup is the branch's only exchange — it shuffles the
-    # distinct triple set, never every mention row.
-    attr = triples.attribute_triples(
+    # Pair-first shape (triples.linked_attribute_pairs): subject×object
+    # pairing happens INSIDE each extraction row, both surfaces link via
+    # broadcast, and the MERGE dedup is the branch's only exchange — it
+    # shuffles the distinct triple set, never every mention row. The
+    # unsampled pairs also feed the node payloads below.
+    pairs = triples.linked_attribute_pairs(
         extracted, entities, cfg.link_strategy, cfg.salt_buckets
     )
-    attr = attr.join(
+    attr = triples.neuron_attribute_triples_from_pairs(pairs).join(
         F.broadcast(neurons.withColumnRenamed("neuron_id", "subj")), "subj", "left_semi"
     ).persist()
 
@@ -211,18 +190,22 @@ def build_triples(
         aggregate.aggregated_synapse_triples(syn, groups("HAS_SCLASS"), "SCLASS"),
     ]
 
-    # node property payloads (SET n += node / SET p += population):
-    # dimension-sized (one row per graph node), left-joined onto the node
-    # table — broadcast-sized relative to the corpus, never a wide shuffle.
-    node_props = triples.node_properties(linked, extracted)
-    nodes = triples.node_table(linked).join(node_props, "entity_id", "left")
+    # nodes + payloads (SET n += node / SET p += population) from the same
+    # unsampled pairs: dimension-sized (one row per graph node), no doc_id
+    # join. NOT persisted: persist() plans eagerly, and a caller that only
+    # plans or never reads `nodes` would pay for it.
+    nodes = triples.nodes_from_pairs(
+        pairs, extracted, entities, cfg.link_strategy, cfg.salt_buckets
+    )
 
     return {
         "nodes": nodes,
         "attribute_triples": attr,
         "synapse_triples": syn,
         "aggregate_triples": agg_frames,
-        "node_properties": node_props,
+        "node_properties": nodes.where(F.col("properties").isNotNull()).select(
+            "entity_id", "properties"
+        ),
         "invariant_violations": violations,
     }
 
@@ -266,10 +249,10 @@ def dry_run_report(outputs: dict[str, DataFrame]) -> dict[str, int]:
     if the sizes are unacceptable. The attribute, synapse and MTYPE
     aggregate counts read the pipeline's persisted frames. ``nodes``, the
     SCLASS aggregate and ``invariant_violations`` are not persisted, so
-    their counts re-run their plans: ``nodes`` re-derives the linked
-    mentions from the persisted extraction frame, the SCLASS aggregate
-    re-joins the persisted synapse frame, and the audit re-parses the input
-    documents.
+    their counts re-run their plans: ``nodes`` re-links the distinct
+    mention surfaces and the neuron×attribute pairs of the persisted
+    extraction frame, the SCLASS aggregate re-joins the persisted synapse
+    frame, and the audit re-parses the input documents.
     """
     return {
         "nodes": outputs["nodes"].count(),

@@ -355,3 +355,23 @@ def test_rich_aggregate_has_no_join_above_an_aggregate(spark):
     joins = [i for i, line in enumerate(lines) if re.match(r"[\s:|+-]*Join ", line)]
     assert len(aggs) == 2 and joins, "\n".join(lines)
     assert max(aggs) < min(joins), "\n".join(lines)
+
+
+def test_nodes_plan_has_no_doc_id_join(spark):
+    # node payloads derive from the per-row neuron×attribute pairs and
+    # distinct surfaces; no join may pair mentions through doc_id
+    import re
+
+    from sonata_neo4j_loader_spark.datagen import documents as dg
+    from sonata_neo4j_loader_spark.plans import pipeline
+
+    out = pipeline.build_triples(
+        spark,
+        dg.fixture_documents(spark),
+        dg.fixture_entities(spark),
+        dg.fixture_alias_edges(spark),
+    )
+    plan = out["nodes"]._jdf.queryExecution().optimizedPlan().toString()
+    joins = [line for line in plan.splitlines() if re.search(r"\bJoin\b", line)]
+    assert joins, plan
+    assert not [line for line in joins if "doc_id#" in line], plan

@@ -285,3 +285,131 @@ def test_pair_first_attr_equals_self_join_shape(spark):
 
         assert new == old
         assert len(new) > 0
+
+
+def _doc_id_join_node_outputs(linked, extracted):
+    """Reference: the node outputs as a doc_id join over every linked
+    mention. Labels come from the mention kind, a neuron's properties pair
+    it with every co-mentioned entity and plain attribute span of its
+    doc_id, and a population's size counts the neurons co-mentioned with
+    it. Returns (nodes, node_properties)."""
+    from pyspark.sql import functions as F
+
+    from sonata_neo4j_loader_spark.operators import triples
+
+    def lookup(mapping, col):
+        return F.create_map(*[x for k, v in mapping.items() for x in (F.lit(k), F.lit(v))])[col]
+
+    def strip(col):
+        return F.regexp_replace(col, "^[^:]+:", "")
+
+    kind_labels = {
+        "neuron": "Neuron", "mtype": "MType", "etype": "EType", "sclass": "SClass",
+        "population": "Population", "media": "Morphology",
+    }
+    labels = (
+        linked.select("entity_id", lookup(kind_labels, F.col("kind")).alias("label"))
+        .where(F.col("label").isNotNull())
+        .dropDuplicates(["entity_id"])
+    )
+    neurons = linked.where(F.col("kind") == "neuron").select("doc_id", "entity_id")
+    from_entities = linked.where(F.col("kind") != "neuron").select(
+        "doc_id",
+        lookup(triples.PROPERTY_KEYS, F.col("kind")).alias("key"),
+        strip(F.col("entity_id")).alias("value"),
+    ).where(F.col("key").isNotNull())
+    from_attrs = extracted.select("doc_id", F.explode("node_attrs").alias("key", "value"))
+    neuron_props = (
+        neurons.join(from_entities.unionByName(from_attrs), "doc_id")
+        .groupBy("entity_id", "key")
+        .agg(F.max("value").alias("value"))
+        .groupBy("entity_id")
+        .agg(F.map_from_entries(F.sort_array(F.collect_list(F.struct("key", "value"))))
+             .alias("properties"))
+    )
+    pops = linked.where(F.col("kind") == "population").select("doc_id", "entity_id")
+    pop_props = (
+        pops.join(neurons.withColumnRenamed("entity_id", "member_id"), "doc_id")
+        .groupBy("entity_id")
+        .agg(F.countDistinct("member_id").alias("size"))
+        .select("entity_id", F.create_map(
+            F.lit("name"), strip(F.col("entity_id")),
+            F.lit("size"), F.col("size").cast("string"),
+        ).alias("properties"))
+    )
+    props = neuron_props.unionByName(pop_props)
+    return labels.join(props, "entity_id", "left"), props
+
+
+def _rows(df):
+    return sorted(
+        tuple(sorted(v.items()) if isinstance(v, dict) else v for v in r)
+        for r in df.collect()
+    )
+
+
+def _synthetic(spark):
+    kw = {"n_populations": 3, "neurons_per_pop": 40}
+    return (
+        dg.synthetic_documents(spark, 300, 100, 30, **kw),
+        dg.synthetic_entities(spark, **kw),
+        dg.synthetic_alias_edges(spark, **kw),
+    )
+
+
+def _fixture(spark):
+    return (
+        dg.fixture_documents(spark),
+        dg.fixture_entities(spark),
+        dg.fixture_alias_edges(spark),
+    )
+
+
+@pytest.mark.parametrize(
+    "corpus, cfg",
+    [
+        (_fixture, pipeline.PipelineConfig(mention_impl="native")),
+        (_fixture, pipeline.PipelineConfig(mention_impl="arrow")),
+        (_synthetic, pipeline.PipelineConfig()),
+        # node payloads do not depend on neuron sampling
+        (_fixture, pipeline.PipelineConfig(node_proportion=0.5)),
+        (_fixture, pipeline.PipelineConfig(node_set_pops=["NodeA"])),
+    ],
+    ids=["fixture-native", "fixture-arrow", "synthetic", "sampled", "node-set"],
+)
+def test_nodes_equal_doc_id_join_reference(spark, corpus, cfg):
+    from pyspark.sql import functions as F
+
+    from sonata_neo4j_loader_spark.operators import canonicalize, linking, mentions, parse
+
+    docs, entities, aliases = corpus(spark)
+    out = pipeline.build_triples(spark, docs, entities, aliases, cfg)
+
+    parsed = parse.parse_documents(docs).where(F.col("spans_valid"))
+    ext = mentions.extract_documents(parsed, impl=cfg.mention_impl)
+    canonical = canonicalize.apply_canonical_mapping(
+        entities, canonicalize.connected_components(aliases), "entity_id"
+    )
+    linked = linking.link_mentions(mentions.mentions_from_extracted(ext), canonical)
+    ref_nodes, ref_props = _doc_id_join_node_outputs(linked, ext)
+
+    nodes = _rows(out["nodes"])
+    assert nodes == _rows(ref_nodes)
+    assert _rows(out["node_properties"]) == _rows(ref_props)
+    assert any(r[2] for r in nodes)
+
+
+def test_node_label_is_the_entity_type_not_the_mention_kind(spark):
+    # a neuron surface mentioned under another kind still labels the node
+    # from the dictionary; the mention kind only chooses the property key
+    from sonata_neo4j_loader_spark.datagen.documents import DOC_SCHEMA
+
+    docs = spark.createDataFrame(
+        [("odd-kind", [("text", "mtype NodeA#0", "", 0)])], DOC_SCHEMA
+    )
+    out = pipeline.build_triples(
+        spark, docs, dg.fixture_entities(spark), dg.fixture_alias_edges(spark)
+    )
+    assert [(r["entity_id"], r["label"]) for r in out["nodes"].collect()] == [
+        ("neuron:NodeA:0", "Neuron")
+    ]
