@@ -23,10 +23,10 @@ from __future__ import annotations
 
 import logging
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .text import add_shingles, fingerprint, normalized_text
+from .text import add_shingles, fingerprint
 
 _LOG = logging.getLogger(__name__)
 
@@ -203,7 +203,8 @@ def drop_hot_buckets(
     min_bucket_size: int = 2,
 ) -> DataFrame:
     """THE hot-bucket bound, shared by every banded candidate generator
-    (MinHash-LSH bands, SimHash chunks, embedding-LSH bands).
+    (MinHash-LSH bands, SimHash chunks, embedding-LSH bands) and the
+    incremental index probe.
 
     A bucket holding p members yields p² join rows on one shuffle key, so
     web scale needs buckets bounded. Keep only keys with
@@ -212,8 +213,10 @@ def drop_hot_buckets(
     batch CAN pair with a singleton index bucket
     (:func:`minhash_incremental_duplicates` passes 1); over-full buckets
     are degenerate content whose true near-dups usually also share a
-    smaller bucket. Window-free (aggregate-then-left-semi-join) so the
-    bound itself shuffles only the dimension-sized bucket-key set.
+    smaller bucket. The member count is a window over ``keys`` — the
+    bucket self-join's own shuffle key — so the bound rides the join's
+    exchange and the input is read once, not again in a second aggregate
+    branch (guide §2.4: a same-key window needs no extra shuffle).
     ``max_bucket_size=None`` disables the bound entirely (exact
     small-scale mode — what the DuckDB brute-force oracles reproduce).
     NOT silent: opt-out parameter, plan-build log line, skew-fixture
@@ -227,13 +230,12 @@ def drop_hot_buckets(
         label,
         max_bucket_size,
     )
-    small = (
-        df.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where((F.col("n") >= min_bucket_size) & (F.col("n") <= max_bucket_size))
-        .select(*keys)
+    n = F.count(F.lit(1)).over(Window.partitionBy(*keys))
+    return (
+        df.withColumn("_bn", n)
+        .where((F.col("_bn") >= min_bucket_size) & (F.col("_bn") <= max_bucket_size))
+        .drop("_bn")
     )
-    return df.join(small, keys, "left_semi")
 
 
 def banded_postings(
@@ -259,29 +261,33 @@ def banded_postings(
 
 
 def _scored_jaccard(
-    pairs: DataFrame, left_id: str, right_id: str, threshold: float
+    pairs: DataFrame,
+    left_id: str,
+    right_id: str,
+    threshold: float,
+    overlap: tuple[Column, Column, Column] | None = None,
 ) -> DataFrame:
-    """Exact Jaccard of ``pairs``' joined duplicate-free shingle arrays
-    ``sh_a``/``sh_b``; keeps ``(left_id, right_id, jaccard)`` ≥ threshold.
+    """THE exact-Jaccard scorer: keeps ``(left_id, right_id, jaccard)`` ≥
+    threshold, with jaccard = round(m / (n_a + n_b − m), 6).
 
-    ONE array_intersect per pair (r06): the withColumn(jaccard)+where
-    shape evaluated intersect AND union twice each — Catalyst substitutes
-    the jaccard alias into the filter and turns it into a join condition,
-    then the output projection recomputes it (4 heavy array passes per
-    matched pair; plan-verified in plans/r06/minhash_near_dups_after.txt
-    operator (45)/(47)). Now: |A∪B| = |A| + |B| − |A∩B| (both sides are
-    add_shingles outputs, hence duplicate-free, so the sizes ARE set
-    cardinalities — identical ints, identical double division, identical
-    round), and the intersect size is materialized ONCE behind a
-    gen_barrier so the threshold filter compares cheap ints instead of
-    re-running the intersect inside the join.
+    ``overlap`` is ``(m, n_a, n_b)`` = (|A∩B|, |A|, |B|) as columns of
+    ``pairs``; by default they come from the joined duplicate-free shingle
+    arrays ``sh_a``/``sh_b``. Both sides are add_shingles outputs, so the
+    sizes ARE set cardinalities and |A∪B| = |A| + |B| − |A∩B| needs no
+    ``array_union``. The intersect size is materialized ONCE behind a
+    gen_barrier: in the ``withColumn(jaccard).where(jaccard)`` shape
+    Catalyst substitutes the alias into the filter, turns it into a join
+    condition and the output projection recomputes it — 3 array_intersect
+    per matched pair instead of 1; the barrier keeps the threshold filter
+    a comparison of ints above the join.
     """
+    m, n_a, n_b = overlap or (
+        gen_barrier(F.size(F.array_intersect("sh_a", "sh_b"))),
+        F.size("sh_a"),
+        F.size("sh_b"),
+    )
     scored = pairs.select(
-        left_id,
-        right_id,
-        gen_barrier(F.size(F.array_intersect("sh_a", "sh_b"))).alias("_m"),
-        F.size("sh_a").alias("_na"),
-        F.size("sh_b").alias("_nb"),
+        left_id, right_id, m.alias("_m"), n_a.alias("_na"), n_b.alias("_nb")
     )
     return (
         scored.withColumn(
@@ -346,11 +352,11 @@ def minhash_near_duplicates(
     shares a :func:`banded_postings` bucket of ``2..max_bucket_size``
     members — same candidate pairs, same exact string-shingle Jaccard —
     but the plan follows guide §8: decide with small rows, move
-    heavy rows once. The r05 shape attached the full shingle arrays
-    (~1.6 KB/doc) to EVERY candidate pair before the exact verify; at sf1.0
-    that was 9.9 M pairs of which only 2,544 were real (99.97% false
+    heavy rows once. Attaching the full shingle arrays (~1.6 KB/doc) to
+    EVERY candidate pair before the exact verify would move them for
+    9.9 M pairs at sf1.0, of which only 2,544 are real (99.97% false
     positives paying two array joins plus a per-pair ``array_intersect``).
-    This shape:
+    Instead this plan:
 
     * carries a 2048-bit *shingle membership bitmap* — ``_BITMAP_WORDS``
       = 32 scalar long columns, not an array, so the pair filter stays
@@ -367,11 +373,8 @@ def minhash_near_duplicates(
     * exact-verifies only the survivors (``jaccard_verify``, shuffled-hash
       so the array side is never a broadcast build).
 
-    The hot-bucket bound is the same [2, max_bucket_size] membership rule
-    as :func:`drop_hot_buckets`, computed as a count window over
-    (band, bucket) — the self-join's own shuffle key — so the bound rides
-    the join's exchange instead of a second aggregate branch over the
-    posting lineage (guide §2.4: same-key window needs no extra shuffle).
+    Hot (band, bucket) keys are bounded by :func:`drop_hot_buckets`, whose
+    count window rides the self-join's own exchange.
 
     Every derived pair-filter column is wrapped non-nullable
     (``coalesce(…, 0)``): a nullable filter column makes Catalyst infer
@@ -385,23 +388,12 @@ def minhash_near_duplicates(
     disables the bucket bound (exact small-scale mode, same contract as
     :func:`drop_hot_buckets`).
     """
-    from pyspark.sql import Window
-
-    posts = _minhash_postings(
-        df, id_col, text_col, shingle_k, num_hashes, bands, seed
+    posts = drop_hot_buckets(
+        _minhash_postings(df, id_col, text_col, shingle_k, num_hashes, bands, seed),
+        ["band", "bucket"],
+        max_bucket_size,
+        "minhash_near_duplicates",
     )
-    if max_bucket_size is not None:
-        _LOG.info(
-            "minhash_near_duplicates: dropping buckets larger than %d members "
-            "(recall bound; pass max_bucket_size=None for exact)",
-            max_bucket_size,
-        )
-        bucket_w = Window.partitionBy("band", "bucket")
-        posts = (
-            posts.withColumn("_bn", F.count(F.lit(1)).over(bucket_w))
-            .where((F.col("_bn") >= 2) & (F.col("_bn") <= max_bucket_size))
-            .drop("_bn")
-        )
     a, b = (
         posts.selectExpr(
             "band",
@@ -417,12 +409,12 @@ def minhash_near_duplicates(
     t = f"{float(threshold)!r}D"
     size_ok = f"n_a >= n_b * {t} - 1e-9D AND n_b >= n_a * {t} - 1e-9D"
     or_pop = " + ".join(f"bit_count(_a{w} | _b{w})" for w in range(_BITMAP_WORDS))
-    # Single-reference form of the union bound (r06b): with
+    # Single-reference form of the union bound: with
     # m_ub = n_a+n_b−or_pop, the bound  m_ub ≥ t·(n_a+n_b−m_ub)  is
     # algebraically  or_pop ≤ (n_a+n_b)/(1+t).  The two-reference form
-    # made codegen evaluate the 32-word popcount chain TWICE per
-    # co-occurring pair (plan-verified: the chain appeared twice in the
-    # join condition); this form references it once. Still lossless: for
+    # makes codegen evaluate the 32-word popcount chain TWICE per
+    # co-occurring pair (the chain appears twice in the join condition);
+    # this form references it once. Still lossless: for
     # any true pair J ≥ t ⇒ |A∪B| ≤ (n_a+n_b)/(1+t) and
     # or_pop ≤ popcount-bound ≤ |A∪B|; the 1e-9 slack (≥ the old form's
     # effective slack 1e-9/(1+t)) only ever ADMITS extra candidates,
@@ -511,7 +503,6 @@ def minhash_incremental_duplicates(
     text_col: str = "text",
     threshold: float = 0.8,
     max_bucket_size: int | None = 1000,
-    prune_postings: bool = True,
 ) -> DataFrame:
     """Near-dups of a NEW batch against a PRE-BUILT
     :func:`build_minhash_index` — returns ``(new_id, hist_id, jaccard)``.
@@ -521,11 +512,10 @@ def minhash_incremental_duplicates(
     persisted posting table on (band, bucket), then verify candidates
     with true shingle Jaccard. Scale properties:
 
-    * with ``prune_postings`` the batch's posting keys are mapped to sink
-      partition ids with the sink's own ``with_bucket`` and ONLY those
-      partitions are scanned (``part IN (...)`` prunes at the file
-      listing) — probe cost is proportional to the batch's bucket
-      footprint, not the index;
+    * the index is read with the batch's posting keys
+      (``read_materialized(keys=…)``), so ONLY the sink partitions those
+      keys hash to are scanned — probe cost is proportional to the
+      batch's bucket footprint, not the index;
     * ``history`` (the original corpus table) is touched ONLY to fetch
       candidate documents' text for verification — one semi-join on the
       candidate id set, never a full re-shingle of the history;
@@ -533,11 +523,11 @@ def minhash_incremental_duplicates(
       ``min_bucket_size=1`` (unlike the self-join path, a singleton
       history bucket CAN pair with a batch doc).
 
-    With ``prune_postings`` the batch's postings lineage evaluates twice
-    (once to collect the ≤ num_buckets probed partition ids, once in the
-    candidate join) — deliberate: the batch is the SMALL side by
-    definition, and a persist() the caller never sees would leak in a
-    long-lived session (same policy as ``sample_exact_fraction``).
+    The batch's postings lineage evaluates twice (once to collect the
+    ≤ num_buckets probed partition ids, once in the candidate join) —
+    deliberate: the batch is the SMALL side by definition, and a
+    persist() the caller never sees would leak in a long-lived session
+    (same policy as ``sample_exact_fraction``).
     Callers probing with a large batch can persist it themselves.
     """
     from ..sinks import materialize as mat
@@ -553,23 +543,12 @@ def minhash_incremental_duplicates(
         meta.seed,
     ).select(F.col("_id").alias("new_id"), "band", "bucket")
 
-    postings_path = f"{index_path}/postings"
-    visible = set(mat.visible_parts(spark, postings_path))
-    if prune_postings:
-        probed = mat.with_bucket(
-            new_posts.select("band", "bucket").distinct(),
-            ["band", "bucket"],
-            meta.num_buckets,
-        )
-        probed_parts = {
-            r[mat.PART_COL] for r in probed.select(mat.PART_COL).distinct().collect()
-        }
-        visible &= probed_parts
-    index_posts = (
-        spark.read.parquet(postings_path)
-        .where(F.col(mat.PART_COL).isin(sorted(visible)))
-        .select(F.col("doc_id").alias("hist_id"), "band", "bucket")
-    )
+    index_posts = mat.read_materialized(
+        spark,
+        f"{index_path}/postings",
+        keys=new_posts.select("band", "bucket"),
+        num_buckets=meta.num_buckets,
+    ).select(F.col("doc_id").alias("hist_id"), "band", "bucket")
     index_posts = drop_hot_buckets(
         index_posts,
         ["band", "bucket"],
@@ -714,20 +693,15 @@ def simhash_near_duplicates(
     on one shuffle key — short/templated corpora collapse to few simhash
     values, so web scale needs the same hot-bucket bound as
     :func:`minhash_near_duplicates`. Buckets larger than
-    ``max_bucket_size`` are dropped via the aggregate-then-semi-join
-    pattern (not a window); a doc in a degenerate bucket usually shares a
-    *different*, smaller chunk bucket with its true near-dups, and the
-    pair survives through that one. ``max_bucket_size=None`` disables the
-    bound (exact small-scale mode — what the DuckDB oracle reproduces).
-    NOT silent: dropping changes recall, so it is opt-out-able, logged at
-    plan-build time, and the pytest skew fixture pins the behavior.
-
-    .. versionchanged:: round 3
-       ``max_bucket_size`` defaults to 1000, not None: callers relying on
-       the earlier unbounded behavior (clusters over 1000 members keep all
-       internal pairs) must now pass ``max_bucket_size=None`` explicitly.
-       The bound is the web-scale-safe product default; unbounded is the
-       oracle-matching fixture mode.
+    ``max_bucket_size`` are dropped by :func:`drop_hot_buckets`' count
+    window over (chunk, val); a doc in a degenerate bucket usually shares
+    a *different*, smaller chunk bucket with its true near-dups, and the
+    pair survives through that one. The default 1000 is the web-scale-safe
+    product setting; ``max_bucket_size=None`` disables the bound (exact
+    small-scale mode — what the DuckDB oracle reproduces, keeping every
+    internal pair of a cluster over 1000 members). NOT silent: dropping
+    changes recall, so it is opt-out-able, logged at plan-build time, and
+    the pytest skew fixture pins the behavior.
     """
     sh = add_shingles(
         _spread(df.select(F.col(id_col).alias("_id"), text_col), "_id"),
@@ -763,8 +737,8 @@ def simhash_near_duplicates(
     chunked = drop_hot_buckets(
         chunked, ["chunk", "val"], max_bucket_size, "simhash_near_duplicates"
     )
-    # Second-level pigeonhole (optimization r06): joining on (chunk, val)
-    # alone is quadratic in the bucket size, and corpora whose simhash
+    # Second-level pigeonhole: joining on (chunk, val) alone is
+    # quadratic in the bucket size, and corpora whose simhash
     # values cluster (low-entropy bit regions — templated text) produce
     # near-corpus-wide buckets: at 50 K docs the raw within-bucket pair
     # stream measured ~250 s in exact mode. A pair with Hamming ≤ 3 that
@@ -802,9 +776,9 @@ def simhash_near_duplicates(
     b = refined.select(
         "chunk", "val", "piece", "pval", F.col("_id").alias("id_b"), F.col("sh").alias("sh_b")
     )
-    # Hamming filter BEFORE the pair distinct (r06, part of the same
-    # rework): the exact bit_count(xor) verify is two instructions, so it
-    # runs inside the join's codegen stage and the distinct then shuffles
+    # Hamming filter BEFORE the pair distinct: the exact bit_count(xor)
+    # verify is two instructions, so it runs inside the join's codegen
+    # stage and the distinct then shuffles
     # only true near-dup pairs (≤16 occurrences each) instead of the raw
     # candidate stream. Filter-then-distinct is row-identical — the
     # predicate is deterministic per row and hamming is a function of the
@@ -901,12 +875,10 @@ def prefix_index(sh: DataFrame, id_col: str, threshold: float) -> DataFrame:
     drop out of almost every prefix, which is what bounds the hot keys
     of the posting join.
     """
-    from pyspark.sql import Window
-
     # `n` (the doc's distinct-shingle count) is size(shingles) on the doc
     # row — shingle arrays are array_distinct'ed, so this equals the count
-    # window over the exploded postings the r05 shape used, without a
-    # second window pass over the posting set (optimization r06).
+    # window over the exploded postings, without a second window pass
+    # over the posting set.
     posts = sh.select(
         F.col(id_col),
         F.coalesce(F.size("shingles"), F.lit(0)).alias("n"),
@@ -935,7 +907,6 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     shingle_k: int = 1,
     threshold: float = 0.5,
-    exact_bitmap: bool = True,
 ) -> DataFrame:
     """Exact shingle-Jaccard pairs ≥ threshold via a PREFIX-FILTERED
     inverted index (AllPairs/PPJoin prefix principle).
@@ -966,15 +937,15 @@ def ngram_jaccard_pairs(
     sh = add_shingles(
         _spread(df.select(F.col(id_col), text_col), id_col), text_col, shingle_k
     ).select(id_col, "shingles")
-    # Exact-bitmap fast path (optimization r06, guide §8 — decide with
-    # small rows, never move the heavy ones): when the distinct-shingle
-    # UNIVERSE fits a fixed bit budget (k=1 ⇒ universe = the corpus's
+    # Exact-bitmap fast path (guide §8 — decide with small rows, never
+    # move the heavy ones): when the distinct-shingle UNIVERSE fits a
+    # fixed bit budget (k=1 ⇒ universe = the corpus's
     # character set, typically well under 100), assign every shingle a
     # collision-free global bit (position in the sorted universe) and
     # carry each doc's membership bitmap — a few long words — through the
     # posting self-join. ``popcount(bm_a & bm_b)`` is then |A∩B| EXACTLY
-    # (no collisions by construction), so the Jaccard is computed inline
-    # in the join and the two full-shingle-array attach joins plus the
+    # (no collisions by construction), so the Jaccard is scored straight
+    # from the bitmaps and the two full-shingle-array attach joins plus the
     # per-pair ``array_intersect`` verify disappear from the plan
     # entirely. Output identical: same m, same |A∪B| = n_a+n_b−m, same
     # round(·, 6). Docs with a null shingle array produce no postings on
@@ -982,9 +953,7 @@ def ngram_jaccard_pairs(
     # k=1 corpus with > max_bits distinct characters) keep the
     # array-verify path below.
     universe = (
-        _exact_bitmap_universe(sh, _EXACT_JACCARD_MAX_BITS)
-        if exact_bitmap and shingle_k == 1
-        else None
+        _exact_bitmap_universe(sh, _EXACT_JACCARD_MAX_BITS) if shingle_k == 1 else None
     )
     if universe is not None:
         return _ngram_jaccard_pairs_bitmap(sh, universe, id_col, threshold)
@@ -1007,20 +976,8 @@ def ngram_jaccard_pairs(
     )
     sh_a = sh.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"))
     sh_b = sh.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b"))
-    return (
-        cands.join(sh_a, "id_a")
-        .join(sh_b, "id_b")
-        .withColumn("m", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("m")
-                / (F.size("sh_a") + F.size("sh_b") - F.col("m")),
-                6,
-            ),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    return _scored_jaccard(
+        cands.join(sh_a, "id_a").join(sh_b, "id_b"), "id_a", "id_b", threshold
     )
 
 
@@ -1064,8 +1021,8 @@ def _ngram_jaccard_pairs_bitmap(
     # normalize+shingle expression into scan-level filters below the
     # _spread exchange (2 extra serial evaluations per row — measured
     # 12.1 s of this operator's prefix leg alone at sf0.1; see the
-    # helper's doc). Scoped to this leg: the array fallback keeps its
-    # r05 plan (the barrier interacts badly with its verify joins).
+    # helper's doc). Scoped to this leg: the array leg's shingle column
+    # also feeds its verify joins, where the barrier interacts badly.
     shb = (
         sh.select(F.col(id_col), gen_barrier(F.col("shingles")).alias("shingles"))
         .select(
@@ -1148,14 +1105,12 @@ def _ngram_jaccard_pairs_bitmap(
         ),
         F.lit(0),
     )
-    return (
-        a.join(b, "t_bit")
-        .where((F.col("id_a") < F.col("id_b")) & size_ok & is_min_shared)
-        .withColumn("m", m)
-        .withColumn(
-            "jaccard",
-            F.round(F.col("m") / (F.col("n_a") + F.col("n_b") - F.col("m")), 6),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    return _scored_jaccard(
+        a.join(b, "t_bit").where(
+            (F.col("id_a") < F.col("id_b")) & size_ok & is_min_shared
+        ),
+        "id_a",
+        "id_b",
+        threshold,
+        overlap=(m, F.col("n_a"), F.col("n_b")),
     )

@@ -23,12 +23,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# K of the salted strategy: a hot surface form spreads over K reducers
+SALT_BUCKETS = 8
+
 
 def link_mentions(
-    mentions: DataFrame,
-    entities: DataFrame,
-    strategy: str = "broadcast",
-    salt_buckets: int = 8,
+    mentions: DataFrame, entities: DataFrame, strategy: str = "broadcast"
 ) -> DataFrame:
     """mentions(..., surface) ⋈ entities -> mentions + (entity_id, entity_type)."""
     if strategy == "broadcast":
@@ -36,12 +36,12 @@ def link_mentions(
     if strategy == "salted":
         salted_mentions = mentions.withColumn(
             "_salt",
-            F.pmod(F.xxhash64(F.col("doc_id"), F.col("surface")), F.lit(salt_buckets)).cast(
+            F.pmod(F.xxhash64(F.col("doc_id"), F.col("surface")), F.lit(SALT_BUCKETS)).cast(
                 "int"
             ),
         )
         salted_entities = entities.withColumn(
-            "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
+            "_salt", F.explode(F.sequence(F.lit(0), F.lit(SALT_BUCKETS - 1)))
         )
         return salted_mentions.join(
             salted_entities, ["surface", "_salt"], "inner"

@@ -35,7 +35,6 @@ from pyspark.sql.types import (
 # One mention grammar: "<kind> <surface>" produced by the document
 # templates (datagen/documents.py). Kinds map 1:1 to the reference's
 # node attributes + population registry.
-_ENTITY_KINDS = ("neuron", "mtype", "etype", "sclass", "population")
 _ENTITY_RE = r"\b(neuron|mtype|etype|sclass|population)\s+(\S+)"
 _SYNAPSE_RE = r"\bsynapse\s+(\S+#\d+)\s*->\s*(\S+#\d+)"
 _PROP_RE = r"\bprop\s+(\w+)\s+(-?\d+(?:\.\d+)?)"

@@ -385,30 +385,23 @@ def embedding_near_duplicates(
     Skew bound: a dense cluster of near-identical embeddings — exactly the
     expected input for a near-dup pass — lands in ONE (band, bucket) key
     and yields p² join rows there. Buckets larger than ``max_bucket_size``
-    are dropped via aggregate-then-semi-join (``dedup.drop_hot_buckets``);
-    a vector in a degenerate bucket can
-    still pair through its other, smaller band buckets.
-    ``max_bucket_size=None`` disables the bound (exact small-scale mode,
-    what the DuckDB brute-force oracle reproduces). NOT silent: opt-out
-    parameter, plan-build log line, skew-fixture pytest.
-
-    .. versionchanged:: round 3
-       ``max_bucket_size`` defaults to 1000, not None: callers relying on
-       the earlier unbounded behavior (clusters over 1000 members keep all
-       internal pairs) must now pass ``max_bucket_size=None`` explicitly.
-       The bound is the web-scale-safe product default; unbounded is the
-       oracle-matching fixture mode.
+    are dropped by ``dedup.drop_hot_buckets``' count window over
+    (band, bucket); a vector in a degenerate bucket can still pair through
+    its other, smaller band buckets. The default 1000 is the
+    web-scale-safe product setting; ``max_bucket_size=None`` disables the
+    bound (exact small-scale mode, what the DuckDB brute-force oracle
+    reproduces). NOT silent: opt-out parameter, plan-build log line,
+    skew-fixture pytest.
     """
-    # r06 rework (same guide-§8 pattern as dedup.minhash_near_duplicates,
-    # measured there first):
-    # * verify BEFORE the pair dedup — the r05 shape dropDuplicates-ed the
-    #   raw within-bucket join stream while every row still carried BOTH
-    #   64-double vectors (~1 KB/row, tens of GB shuffled at 20 K vecs in
-    #   exact mode), then scored the survivors; scoring first keeps the
+    # Plan shape (guide §8, as in dedup.minhash_near_duplicates):
+    # * verify BEFORE the pair dedup — dropDuplicates over the raw
+    #   within-bucket join stream would shuffle rows that still carry BOTH
+    #   64-double vectors (~1 KB/row, tens of GB at 20 K vecs in exact
+    #   mode) before scoring the survivors; scoring first keeps the
     #   cosine inside the join's stage and the dedup shuffles only
     #   threshold-passing pairs. Identical output: duplicate (id_a, id_b)
     #   rows carry identical vectors, hence identical cos, so
-    #   filter-then-dedup keeps exactly the pairs dedup-then-filter kept;
+    #   filter-then-dedup keeps exactly the pairs dedup-then-filter would;
     # * per-vector L2 norms computed once per posting row instead of per
     #   pair (cos = dot/(norm_a*norm_b), same operand order as cosine() —
     #   bit-identical doubles);
@@ -554,18 +547,16 @@ def ivf_ann_topk_prebuilt(
     nprobe: int = 4,
     query_id_col: str = "query_id",
     vec_col: str = "embedding",
-    prune_lists: bool = True,
 ) -> DataFrame:
     """Approximate top-k against a PRE-BUILT ``build_ivf_index`` index.
 
     Centroids load via the manifest-gated read (tiny, then broadcast into
-    the probe assignment). With ``prune_lists`` the probed centroid ids
-    are mapped to their bucket ids with the sink's own ``with_bucket``
-    (one job over ≤ n_centroids rows) and ONLY those list partitions are
-    scanned — `part IN (...)` prunes at the file listing, so query cost is
-    proportional to the probed lists, not the corpus. Results are
-    identical to the inline ``ivf_ann_topk`` on the same parameters
-    (pinned by the shared driver oracle and pytest).
+    the probe assignment). The lists are read with the probed centroid
+    ids as keys (``read_materialized(keys=…)``, one job over
+    ≤ n_centroids rows), so ONLY the probed lists' partitions are scanned
+    and query cost is proportional to the probed lists, not the corpus.
+    Results are identical to the inline ``ivf_ann_topk`` on the same
+    parameters (pinned by the shared driver oracle and pytest).
     """
     from ..sinks import materialize as mat
 
@@ -575,25 +566,11 @@ def ivf_ann_topk_prebuilt(
     )
     query_probes = ivf_assign(q, cents, nprobe=nprobe, id_col="query_id", vec_col="q_vec")
 
-    lists_path = f"{index_path}/lists"
-    # the sink's own visibility rule (committed, non-tombstoned) — shared
-    # helper so this reader can never diverge from read_materialized
-    visible = set(mat.visible_parts(spark, lists_path))
-    if prune_lists:
-        meta = spark.read.parquet(f"{index_path}/meta").collect()[0]
-        probed = mat.with_bucket(
-            query_probes.select("centroid_id").distinct(),
-            ["centroid_id"],
-            meta.num_buckets,
-        )
-        probed_parts = {
-            r[mat.PART_COL] for r in probed.select(mat.PART_COL).distinct().collect()
-        }
-        visible &= probed_parts
-    lists = (
-        spark.read.parquet(lists_path)
-        .where(F.col(mat.PART_COL).isin(sorted(visible)))
-        .drop(mat.PART_COL)
-        .select("centroid_id", "vec_id", F.col("embedding").alias("c_vec"))
-    )
+    meta = spark.read.parquet(f"{index_path}/meta").collect()[0]
+    lists = mat.read_materialized(
+        spark,
+        f"{index_path}/lists",
+        keys=query_probes.select("centroid_id"),
+        num_buckets=meta.num_buckets,
+    ).select("centroid_id", "vec_id", F.col("embedding").alias("c_vec"))
     return _ivf_rank(lists, query_probes, k)

@@ -38,10 +38,7 @@ ATTRIBUTE_PREDICATES: dict[str, str] = {
 
 
 def linked_attribute_pairs(
-    extracted: DataFrame,
-    entities: DataFrame,
-    strategy: str = "broadcast",
-    salt_buckets: int = 8,
+    extracted: DataFrame, entities: DataFrame, strategy: str = "broadcast"
 ) -> DataFrame:
     """Extraction frame -> linked neuron×attribute pairs (doc_id, subj, kind, obj).
 
@@ -61,7 +58,6 @@ def linked_attribute_pairs(
                 pairs.withColumnRenamed(f"{side}_surface", "surface"),
                 entities,
                 strategy=strategy,
-                salt_buckets=salt_buckets,
             )
             .withColumnRenamed("entity_id", side)
             .drop("surface", "entity_type")
@@ -70,15 +66,12 @@ def linked_attribute_pairs(
 
 
 def attribute_triples(
-    extracted: DataFrame,
-    entities: DataFrame,
-    strategy: str = "broadcast",
-    salt_buckets: int = 8,
+    extracted: DataFrame, entities: DataFrame, strategy: str = "broadcast"
 ) -> DataFrame:
     """Extraction frame -> deduped neuron-attribute triples (MERGE semantics):
     the streaming ingest's entry to the batch plan's one attribute path."""
     return neuron_attribute_triples_from_pairs(
-        linked_attribute_pairs(extracted, entities, strategy, salt_buckets)
+        linked_attribute_pairs(extracted, entities, strategy)
     )
 
 
@@ -187,7 +180,6 @@ def nodes_from_pairs(
     extracted: DataFrame,
     entities: DataFrame,
     strategy: str = "broadcast",
-    salt_buckets: int = 8,
 ) -> DataFrame:
     """The ``nodes`` table (entity_id, label, properties map<string,string>)
     from the unsampled :func:`linked_attribute_pairs`.
@@ -222,9 +214,9 @@ def nodes_from_pairs(
         .select("doc_id", "key", "value", F.explode(neuron_mentions).alias("_m"))
         .select("doc_id", "key", "value", F.col("_m.surface").alias("surface"))
     )
-    from_attrs = linking.link_mentions(
-        attr_rows, entities, strategy=strategy, salt_buckets=salt_buckets
-    ).select("entity_id", "key", "value")
+    from_attrs = linking.link_mentions(attr_rows, entities, strategy=strategy).select(
+        "entity_id", "key", "value"
+    )
     neuron_props = (
         from_pairs.unionByName(from_attrs)
         .groupBy("entity_id", "key")

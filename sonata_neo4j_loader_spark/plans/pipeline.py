@@ -31,14 +31,13 @@ class PipelineConfig:
     node_set_pops: list[str] | None = None
     # 'native' (pure-JVM regexp, default) | 'arrow' (pandas-UDF batches).
     # The two are row-identical (tests/test_triples_golden.py runs both).
-    # Optimization r06 flipped the default to native per guide §4.1 —
-    # prefer built-ins over any Python boundary: at 10M docs/local[32] the
+    # The default is native per guide §4.1 — prefer built-ins over any
+    # Python boundary: at 10M docs/local[32] the
     # full leg measured 48.5/48.6 s (native, back-to-back) vs 55.6/61.4 s
     # (arrow), and native removes the ArrowEvalPython node plus the Python
     # worker pool's scheduling variance from the hot path entirely.
     mention_impl: str = "native"  # 'native' | 'arrow'
     link_strategy: str = "broadcast"  # 'broadcast' | 'salted'
-    salt_buckets: int = 8
 
 
 def build_triples(
@@ -137,9 +136,7 @@ def build_triples(
     # broadcast, and the MERGE dedup is the branch's only exchange — it
     # shuffles the distinct triple set, never every mention row. The
     # unsampled pairs also feed the node payloads below.
-    pairs = triples.linked_attribute_pairs(
-        extracted, entities, cfg.link_strategy, cfg.salt_buckets
-    )
+    pairs = triples.linked_attribute_pairs(extracted, entities, cfg.link_strategy)
     attr = triples.neuron_attribute_triples_from_pairs(pairs).join(
         F.broadcast(neurons.withColumnRenamed("neuron_id", "subj")), "subj", "left_semi"
     ).persist()
@@ -152,7 +149,6 @@ def build_triples(
                 both_link.withColumnRenamed(f"{side}_surface", "surface"),
                 entities,
                 strategy=cfg.link_strategy,
-                salt_buckets=cfg.salt_buckets,
             )
             .withColumnRenamed("entity_id", f"{side}_id")
             .drop("surface", "entity_type")
@@ -194,9 +190,7 @@ def build_triples(
     # unsampled pairs: dimension-sized (one row per graph node), no doc_id
     # join. NOT persisted: persist() plans eagerly, and a caller that only
     # plans or never reads `nodes` would pay for it.
-    nodes = triples.nodes_from_pairs(
-        pairs, extracted, entities, cfg.link_strategy, cfg.salt_buckets
-    )
+    nodes = triples.nodes_from_pairs(pairs, extracted, entities, cfg.link_strategy)
 
     return {
         "nodes": nodes,

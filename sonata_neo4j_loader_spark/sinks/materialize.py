@@ -236,32 +236,37 @@ def materialize(
     )
 
 
-def visible_parts(spark: SparkSession, table_path: str) -> list[int]:
-    """Partition ids a manifest-gated read may see — THE visibility rule.
+def read_materialized(
+    spark: SparkSession,
+    table_path: str,
+    keys: DataFrame | None = None,
+    num_buckets: int | None = None,
+) -> DataFrame:
+    """Read only *visible* partitions — THE visibility rule of the sink.
 
-    Committed partitions whose latest manifest row is not a tombstone
-    (a vacated partition, row_count 0, still has stale files on disk —
-    visibility is manifest-gated, so it is excluded). Shared by
-    :func:`read_materialized` and every external consumer of a
-    materialized table (e.g. the prebuilt IVF index), so the rule cannot
-    silently diverge between readers.
+    A partition is visible iff its latest manifest row commits rows (a
+    vacated partition, tombstoned with row_count 0, still has stale files
+    on disk and stays invisible). With ``keys`` — the caller's probe rows,
+    holding the table's key columns in its ``key_cols`` order, and the
+    ``num_buckets`` the table was written with — only the visible
+    partitions those rows hash to are read: the sink's own
+    :func:`with_bucket` maps them to partition ids (one collect of at most
+    ``num_buckets`` ids), so a probe costs its key footprint, not the
+    table. Either way the filter is `part IN (...)` over the bucket
+    column, which Spark prunes at the file listing — other partition dirs
+    are never scanned.
     """
     done = committed_partitions(spark, table_path)
     if done is None:
         raise FileNotFoundError(f"no manifest at {table_path}")
-    return sorted(p for p, r in done.items() if r["row_count"] > 0)
-
-
-def read_materialized(spark: SparkSession, table_path: str) -> DataFrame:
-    """Read only *committed* partitions (manifest-gated visibility).
-
-    The partition filter is `part IN (...)` over the bucket column, which
-    Spark prunes at the file-listing level — uncommitted partition dirs are
-    never scanned.
-    """
-    parts = visible_parts(spark, table_path)
+    parts = {p for p, r in done.items() if r["row_count"] > 0}
+    if keys is not None:
+        if num_buckets is None:
+            raise ValueError("reading by keys needs the table's num_buckets")
+        probed = with_bucket(keys, keys.columns, num_buckets).select(PART_COL)
+        parts &= {r[PART_COL] for r in probed.distinct().collect()}
     df = spark.read.parquet(table_path)
-    return df.where(F.col(PART_COL).isin(parts)).drop(PART_COL)
+    return df.where(F.col(PART_COL).isin(sorted(parts))).drop(PART_COL)
 
 
 def verify_against_manifest(spark: SparkSession, table_path: str) -> DataFrame:

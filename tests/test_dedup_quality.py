@@ -168,8 +168,8 @@ def test_ngram_prefix_filter_lossless_and_shrinks_hot_postings(spark):
     assert prefix.count() == posts_n * 4 // 6
 
 
-def test_ngram_bitmap_leg_identical_to_array_leg(spark):
-    # Optimization r06: the exact-bitmap leg (global-prefix-order bits,
+def test_ngram_bitmap_leg_identical_to_array_leg(spark, monkeypatch):
+    # The exact-bitmap leg (global-prefix-order bits,
     # popcount intersection, minimal-shared-bit dedup instead of a pair
     # distinct) must be row-identical to the array-verify leg for every
     # threshold — including boundary pairs and docs sharing only hot
@@ -181,20 +181,19 @@ def test_ngram_bitmap_leg_identical_to_array_leg(spark):
     rows = [(i, " ".join(("z",) + combos[5 * i])) for i in range(40)]
     rows.append((40, rows[0][1]))  # an exact twin: a J=1.0 pair at any t
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    for t in (0.3, 0.5, 0.8):
-        arr = {
+
+    def pairs(t):
+        return {
             (r.id_a, r.id_b, r.jaccard)
-            for r in dedup.ngram_jaccard_pairs(
-                df, shingle_k=1, threshold=t, exact_bitmap=False
-            ).collect()
+            for r in dedup.ngram_jaccard_pairs(df, shingle_k=1, threshold=t).collect()
         }
-        bm = {
-            (r.id_a, r.id_b, r.jaccard)
-            for r in dedup.ngram_jaccard_pairs(
-                df, shingle_k=1, threshold=t, exact_bitmap=True
-            ).collect()
-        }
-        assert bm == arr and len(arr) > 0
+
+    bm = {t: pairs(t) for t in (0.3, 0.5, 0.8)}
+    # a zero bit budget fails the universe probe: the array leg runs
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "_EXACT_JACCARD_MAX_BITS", 0)
+        arr = {t: pairs(t) for t in (0.3, 0.5, 0.8)}
+    assert bm == arr and all(arr.values())
     # the bitmap leg must emit each pair exactly once — there is no
     # distinct in its plan to mop up duplicates (plan-shape pin: the
     # main query has no Aggregate at all; dfreq rides the driver probe)

@@ -238,3 +238,30 @@ def test_unreadable_manifest_raises_instead_of_recommitting(spark, tmp_path):
     with pytest.raises(Exception):
         mat.materialize(_triples(spark, 40), str(path), ["subj", "obj"], N_BUCKETS)
     assert not any(p.name.startswith(f"{mat.PART_COL}=") for p in path.iterdir())
+
+
+def test_read_by_keys_scans_only_their_parts(spark, triples_df, tmp_path):
+    import re
+
+    path = str(tmp_path / "edges")
+    mat.materialize(triples_df, path, ["subj", "obj"], N_BUCKETS)
+    keys = triples_df.where(F.col("subj").isin("neuron:P:1", "neuron:P:2")).select(
+        "subj", "obj"
+    )
+    parts = sorted(
+        {r[mat.PART_COL] for r in mat.with_bucket(keys, ["subj", "obj"], N_BUCKETS).collect()}
+    )
+    assert 2 <= len(parts) < N_BUCKETS
+    got = mat.read_materialized(spark, path, keys=keys, num_buckets=N_BUCKETS)
+
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    scan_filters = re.findall(r"FileScan[^\n]*PartitionFilters: \[([^\]]*)\]", plan)
+    listed = [
+        sorted(int(p) for p in m.split(","))
+        for f in scan_filters
+        for m in re.findall(rf"{mat.PART_COL}#\d+ IN \(([^)]*)\)", f)
+    ]
+    assert listed == [parts], plan
+    full = mat.with_bucket(mat.read_materialized(spark, path), ["subj", "obj"], N_BUCKETS)
+    want = full.where(F.col(mat.PART_COL).isin(parts)).drop(mat.PART_COL)
+    assert _sorted_rows(got) == _sorted_rows(want)

@@ -275,6 +275,40 @@ def test_minhash_verify_single_intersect_no_union(spark):
     assert "array_union" not in plan
 
 
+def test_ngram_array_leg_single_intersect(spark, monkeypatch):
+    # the array leg (forced: a zero bit budget fails the universe probe)
+    # scores through dedup._scored_jaccard: ONE array_intersect per pair,
+    # not one in the join condition and two more in the projections
+    from sonata_neo4j_loader_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "_EXACT_JACCARD_MAX_BITS", 0)
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    pairs = dedup.ngram_jaccard_pairs(docs, "doc_id", "text", shingle_k=1, threshold=0.9)
+    plan = pairs._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("array_intersect") == 1, plan.count("array_intersect")
+
+
+@pytest.mark.parametrize("detector", ["simhash", "embedding"])
+def test_bounded_near_dups_plan_no_semi_join(spark, detector):
+    # the hot-bucket bound is a count window over the bucket key, which
+    # rides the bucket self-join's exchange: no aggregate + LeftSemi
+    # branch re-reading the input
+    from sonata_neo4j_loader_spark.operators import dedup, similarity
+
+    if detector == "simhash":
+        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        pairs = dedup.simhash_near_duplicates(docs, max_bucket_size=10)
+    else:
+        vecs = spark.createDataFrame(
+            [(i, [float((i * j) % 7) for j in range(64)]) for i in range(20)],
+            "vec_id long, embedding array<double>",
+        )
+        pairs = similarity.embedding_near_duplicates(vecs, 0.9, max_bucket_size=10)
+    plan = pairs._jdf.queryExecution().optimizedPlan().toString()
+    assert "LeftSemi" not in plan
+    assert "windowspecdefinition" in plan
+
+
 def test_minhash_postings_run_no_lambda_over_shingle_hashes(spark):
     # the MinHash signature and bitmap are min/bit_or aggregates over the
     # exploded shingle hashes: higher-order functions are CodegenFallback

@@ -115,11 +115,6 @@ def test_prebuilt_index_build_query_resume(spark, emb, tmp_path_factory):
     inline = similarity.ivf_ann_topk(emb, q, k=10, n_centroids=16, nprobe=4).collect()
     prebuilt = similarity.ivf_ann_topk_prebuilt(spark, idx, q, k=10, nprobe=4).collect()
     assert sorted(map(tuple, prebuilt)) == sorted(map(tuple, inline))
-    # pruning is a scan lever, not a semantics lever
-    unpruned = similarity.ivf_ann_topk_prebuilt(
-        spark, idx, q, k=10, nprobe=4, prune_lists=False
-    ).collect()
-    assert sorted(map(tuple, unpruned)) == sorted(map(tuple, inline))
 
     again = similarity.build_ivf_index(emb, idx, n_centroids=16, num_buckets=8)
     assert again["lists"].rows_written == 0 and not again["lists"].partitions_written

@@ -14,12 +14,23 @@ from sonata_neo4j_loader_spark.datagen import fixture
 from sonata_neo4j_loader_spark.plans import pipeline
 
 
-@pytest.fixture(scope="module", params=["arrow", "native"])
+# both mention impls, and the salted link strategy end to end
+_CONFIGS = {
+    "arrow": pipeline.PipelineConfig(mention_impl="arrow"),
+    "native": pipeline.PipelineConfig(mention_impl="native"),
+    "salted": pipeline.PipelineConfig(link_strategy="salted"),
+}
+
+
+@pytest.fixture(scope="module", params=list(_CONFIGS))
 def outputs(request, spark):
     docs = dg.fixture_documents(spark)
-    cfg = pipeline.PipelineConfig(mention_impl=request.param)
     return pipeline.build_triples(
-        spark, docs, dg.fixture_entities(spark), dg.fixture_alias_edges(spark), cfg
+        spark,
+        docs,
+        dg.fixture_entities(spark),
+        dg.fixture_alias_edges(spark),
+        _CONFIGS[request.param],
     )
 
 
@@ -29,6 +40,13 @@ def _collect_triples(df):
 
 def test_span_invariant_holds(outputs):
     assert outputs["invariant_violations"].count() == 0
+
+
+def test_output_counts(outputs):
+    # 5 neurons × 5 attribute predicates (MERGE: no duplicate rows), and
+    # the 16-row SYNAPSES_ONTO multiset
+    assert outputs["attribute_triples"].count() == 25
+    assert outputs["synapse_triples"].count() == 16
 
 
 def test_merge_predicates_exact(outputs):
@@ -370,12 +388,16 @@ def _fixture(spark):
     [
         (_fixture, pipeline.PipelineConfig(mention_impl="native")),
         (_fixture, pipeline.PipelineConfig(mention_impl="arrow")),
+        (_fixture, pipeline.PipelineConfig(link_strategy="salted")),
         (_synthetic, pipeline.PipelineConfig()),
         # node payloads do not depend on neuron sampling
         (_fixture, pipeline.PipelineConfig(node_proportion=0.5)),
         (_fixture, pipeline.PipelineConfig(node_set_pops=["NodeA"])),
     ],
-    ids=["fixture-native", "fixture-arrow", "synthetic", "sampled", "node-set"],
+    ids=[
+        "fixture-native", "fixture-arrow", "fixture-salted", "synthetic", "sampled",
+        "node-set",
+    ],
 )
 def test_nodes_equal_doc_id_join_reference(spark, corpus, cfg):
     from pyspark.sql import functions as F

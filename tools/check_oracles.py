@@ -1,7 +1,8 @@
 """Local emulation of the driver's correctness gate.
 
 Runs each ``__spark_entry__.queries()`` entry at sf0.01 on Spark and its
-``oracle_sql()`` twin on DuckDB, compares row count + order-insensitive
+``oracle_sql()`` twin on DuckDB, compares each column's type family
+(integer, floating/decimal, string, bool), row count and order-insensitive
 value content (columns sorted by name, rows sorted, values stringified
 with float rounding).
 
@@ -57,6 +58,24 @@ def canon(v: object) -> str:
     return str(v)
 
 
+# type family by lower-cased base type name, Spark simpleString or DuckDB;
+# any other type (dates, timestamps, nested) must match as "other"
+_FAMILIES = {
+    "integer": {
+        "tinyint", "smallint", "int", "integer", "bigint", "hugeint",
+        "utinyint", "usmallint", "uinteger", "ubigint", "uhugeint",
+    },
+    "floating": {"float", "real", "double", "decimal"},
+    "string": {"string", "varchar"},
+    "bool": {"boolean"},
+}
+
+
+def type_family(type_name: str) -> str:
+    base = type_name.lower().split("(")[0]
+    return next((f for f, names in _FAMILIES.items() if base in names), "other")
+
+
 def frame_signature(cols: list[str], rows: list[tuple]) -> tuple[int, list[str]]:
     order = sorted(range(len(cols)), key=lambda i: cols[i])
     canon_rows = sorted(
@@ -90,15 +109,22 @@ def _check_one(spark, name, fn, oracle_sql: str | None) -> str:
     if oracle_sql is None:
         return f"rows-only  {name}: {len(srows)} rows"
     try:
-        ddf = _duck().execute(oracle_sql)
-        dcols = [d[0] for d in ddf.description]
-        drows = ddf.fetchall()
+        # .types, not execute().description: the latter reports every
+        # numeric column as 'NUMBER'
+        rel = _duck().sql(oracle_sql)
+        dcols, dtypes = rel.columns, rel.types
+        drows = rel.fetchall()
     except Exception as e:  # noqa: BLE001
         return f"FAIL  {name}: duckdb error: {e}"
     sn, ssig = frame_signature(scols, [tuple(r) for r in srows])
     dn, dsig = frame_signature(dcols, drows)
     if sorted(scols) != sorted(dcols):
         return f"FAIL  {name}: columns differ: {sorted(scols)} vs {sorted(dcols)}"
+    sfam = {f.name: type_family(f.dataType.simpleString()) for f in sdf.schema.fields}
+    dfam = {c: type_family(str(t)) for c, t in zip(dcols, dtypes, strict=True)}
+    if sfam != dfam:
+        diff = sorted((c, sfam[c], dfam[c]) for c in sfam if sfam[c] != dfam[c])
+        return f"FAIL  {name}: type families differ (col, spark, duckdb): {diff}"
     if sn != dn:
         return f"FAIL  {name}: row count {sn} vs {dn}"
     if ssig != dsig:
