@@ -65,9 +65,12 @@ def sample_by_hash(
     if proportion <= 0.0:
         return df.where(F.lit(False))
     threshold = int(proportion * _BUCKETS)
-    return df.where(
-        F.pmod(F.xxhash64(F.col(key_col), F.lit(seed)), F.lit(_BUCKETS)) < threshold
-    )
+    return df.where(hash_bucket_expr(key_col, seed) < threshold)
+
+
+def _hash_rank(key_col: str, seed: int, rank_expr: F.Column | None) -> F.Column:
+    """The exact-k samplers' rank: ``rank_expr``, else ``xxhash64(key, seed)``."""
+    return rank_expr if rank_expr is not None else F.xxhash64(F.col(key_col), F.lit(seed))
 
 
 def sample_exact_k(
@@ -97,12 +100,7 @@ def sample_exact_k(
     """
     if k <= 0:
         return df.where(F.lit(False))
-    rank = (
-        rank_expr
-        if rank_expr is not None
-        else F.xxhash64(F.col(key_col), F.lit(seed))
-    )
-    return df.orderBy(rank, F.col(key_col)).limit(k)
+    return df.orderBy(_hash_rank(key_col, seed, rank_expr), F.col(key_col)).limit(k)
 
 
 def sample_exact_fraction(
@@ -154,12 +152,9 @@ def sample_k_per_group(
 
     if k <= 0:
         return df.where(F.lit(False))
-    rank = (
-        rank_expr
-        if rank_expr is not None
-        else F.xxhash64(F.col(key_col), F.lit(seed))
+    w = Window.partitionBy(group_col).orderBy(
+        _hash_rank(key_col, seed, rank_expr), F.col(key_col)
     )
-    w = Window.partitionBy(group_col).orderBy(rank, F.col(key_col))
     # fresh temp name: withColumn would silently REPLACE (and drop would
     # then delete) a caller column that happens to be named the same
     rn = "_rn"

@@ -1,12 +1,26 @@
 """Similarity search over embedding columns (array<float>).
 
+Five operators:
+
 * :func:`brute_force_topk` — exact cosine top-k, the correctness baseline.
-  Query set broadcast against the corpus; ranking via window. O(|Q|·N) —
-  fine for small query sets at any corpus size, the yardstick for recall.
-* :func:`lsh_ann_topk` — random-hyperplane LSH (SimHash-for-vectors) as the
-  scale path: deterministic pseudo-random planes derived from xxhash64 (no
-  stored model), multi-band bucket join, exact cosine re-rank of
-  candidates. Recall is tested against the brute-force baseline.
+  Query set broadcast against the corpus. O(|Q|·N) — fine for small query
+  sets at any corpus size, the yardstick for recall.
+* :func:`lsh_ann_topk` — random-hyperplane LSH (SimHash-for-vectors):
+  deterministic pseudo-random planes derived from xxhash64 (no stored
+  model), multi-band bucket join, exact cosine re-rank of candidates.
+* :func:`ivf_ann_topk` — IVF: a seeded coarse quantizer, each query
+  probes its ``nprobe`` nearest inverted lists and re-ranks within them.
+* :func:`ivf_ann_topk_prebuilt` — the same IVF query against an index
+  :func:`build_ivf_index` persisted through the materialize sink.
+* :func:`embedding_near_duplicates` — cosine ≥ threshold pairs from an
+  LSH bucket self-join.
+
+They share one core: :func:`_lsh_bands` builds the LSH (band, bucket)
+rows, :func:`_cos` is the cosine over per-row norms that
+:func:`_with_norm` attaches before any join, and :func:`_top_k` is the
+per-key ranking window (:func:`_rank_candidates` is the brute/LSH/IVF
+re-rank tail). Recall of the approximate paths is tested against the
+brute-force baseline.
 
 Dot products run as ``aggregate(zip_with(...))`` higher-order expressions —
 JVM-side, no UDF, no explode.
@@ -14,14 +28,10 @@ JVM-side, no UDF, no explode.
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import drop_hot_buckets
-
-_LOG = logging.getLogger(__name__)
+from .dedup import _spread, drop_hot_buckets, gen_barrier
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -42,8 +52,39 @@ def l2_norm(a: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
+def _with_norm(df: DataFrame, vec: str) -> DataFrame:
+    """``df`` + ``_norm_<vec>``, the L2 norm of vector column ``vec``."""
+    return df.withColumn(f"_norm_{vec}", l2_norm(F.col(vec)))
+
+
+def _cos(a: str, b: str) -> Column:
+    """THE cosine of vector columns ``a`` and ``b``: ``dot / (norm_a ·
+    norm_b)`` over the ``_norm_<vec>`` columns :func:`_with_norm` attached
+    to each side BEFORE the join, so a pair pays one array pass (the dot),
+    not three. Every path scores with this one expression tree, so equal
+    inputs give bit-identical doubles (the md5 oracles compare them)."""
+    return dot(F.col(a), F.col(b)) / (F.col(f"_norm_{a}") * F.col(f"_norm_{b}"))
+
+
+def _top_k(
+    df: DataFrame, key: str, score: str, tie: str, k: int, rank: str = "rank"
+) -> DataFrame:
+    """THE top-k ranker: ``df`` + ``rank`` (1..k) for the ``k`` rows per
+    ``key`` with the highest ``score``; ties break on ``tie`` ascending, so
+    the result is deterministic under any partitioning."""
+    w = Window.partitionBy(key).orderBy(F.desc(score), F.asc(tie))
+    return df.withColumn(rank, F.row_number().over(w)).where(F.col(rank) <= k)
+
+
+def _rank_candidates(pairs: DataFrame, k: int) -> DataFrame:
+    """Re-rank tail of the top-k paths: (query_id, vec_id, cos, rank).
+
+    ``pairs`` holds each (query_id, vec_id) candidate at most once, with
+    ``q_vec``/``c_vec`` and their norms; self-matches (same id) drop out."""
+    scored = pairs.where(F.col("vec_id") != F.col("query_id")).select(
+        "query_id", "vec_id", F.round(_cos("q_vec", "c_vec"), 6).alias("cos")
+    )
+    return _top_k(scored, "query_id", "cos", "vec_id", k)
 
 
 def brute_force_topk(
@@ -54,65 +95,35 @@ def brute_force_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
 ) -> DataFrame:
-    """Exact cosine top-k: (query_id, vec_id, cos) — k rows per query.
+    """Exact cosine top-k: (query_id, vec_id, cos, rank) — k rows per query.
 
     Queries are broadcast (small side); corpus is never shuffled until the
     per-query ranking, which partitions by query_id (|Q| partitions).
     Self-matches (same id) are excluded.
     """
-    from .dedup import _spread
-
-    # Optimization r06: precompute each side's L2 norm ONCE per row
-    # instead of re-running the norm aggregates per (query, corpus) pair —
-    # the cosine's three array passes per pair become one (the dot). The
-    # expression tree is unchanged (dot / (norm_q * norm_c), same operand
-    # order), so the doubles — and the rounded output — are bit-identical.
     # _spread: single-row-group corpus files scan as one task (guide §2.5);
     # the O(|Q|·N·dim) scoring loop must not run on one core.
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         F.col(vec_col).alias("q_vec"),
-    ).withColumn("_q_norm", l2_norm(F.col("q_vec")))
-    scored = (
-        _spread(
-            corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("c_vec")),
-            "vec_id",
-        )
-        .withColumn("_c_norm", l2_norm(F.col("c_vec")))
-        .join(F.broadcast(q))
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                dot(F.col("q_vec"), F.col("c_vec"))
-                / (F.col("_q_norm") * F.col("_c_norm")),
-                6,
-            ).alias("cos"),
-        )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cos", "rank")
+    c = _spread(
+        corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("c_vec")),
+        "vec_id",
     )
-
-
-def _md5_plane_components(n_planes: int, dim: int, seed: int) -> list[list[float]]:
-    """Driver-computed plane components from md5 — the cross-engine twin.
-
-    Planes are model-sized metadata (n_planes·dim floats), so computing
-    them once on the driver is like broadcasting a tiny model; a DuckDB
-    oracle recomputes the identical values from the same md5 recipe:
-    ``(('0x'||substr(md5('plane:{seed}:{p}:{j}'),1,15))::BIGINT % 2000001
-    - 1000000) / 1000000.0``.
-    """
-    return [_md5_plane_row(p, dim, seed) for p in range(n_planes)]
+    pairs = _with_norm(c, "c_vec").join(F.broadcast(_with_norm(q, "q_vec")))
+    return _rank_candidates(pairs, k)
 
 
 def _md5_plane_row(plane: int, dim: int, seed: int) -> list[float]:
-    """Components of ONE md5-derived plane (see _md5_plane_components)."""
+    """Components of ONE md5-derived plane — the cross-engine twin.
+
+    Planes are model-sized metadata (n_planes·dim floats), so computing
+    them on the driver is like broadcasting a tiny model; a DuckDB oracle
+    recomputes the identical value of component ``j`` from the same md5
+    recipe: ``(('0x'||substr(md5('plane:{seed}:{plane}:{j}'),1,15))::BIGINT
+    % 2000001 - 1000000) / 1000000.0``.
+    """
     import hashlib as _hl
 
     row = []
@@ -129,8 +140,8 @@ def _plane_bit(
     of (plane, dim, seed) ∈ [-1, 1] — deterministic, model-free.
 
     ``hash_impl='md5'`` embeds driver-computed literal components
-    (:func:`_md5_plane_components`) so a DuckDB oracle reproduces the
-    buckets exactly; the default xxhash64 derives them inline JVM-side.
+    (:func:`_md5_plane_row`) so a DuckDB oracle reproduces the buckets
+    exactly; the default xxhash64 derives them inline JVM-side.
     """
     if hash_impl == "md5":
         comps = F.array(*[F.lit(c) for c in _md5_plane_row(plane, dim, seed)])
@@ -143,14 +154,7 @@ def _plane_bit(
             )
             / 1000000.0,
         )
-    return (
-        F.aggregate(
-            F.zip_with(vec, comps, lambda x, c: x.cast("double") * c),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        >= 0
-    )
+    return dot(vec, comps) >= 0
 
 
 def lsh_bucket_bits(
@@ -166,6 +170,47 @@ def lsh_bucket_bits(
             ).otherwise(F.lit(0).cast("long"))
         )
     return out
+
+
+def _lsh_bands(
+    df: DataFrame,
+    vec_col: str,
+    n_planes: int,
+    bands: int,
+    dim: int,
+    seed: int,
+    hash_impl: str = "xxhash64",
+) -> DataFrame:
+    """THE LSH banding step: ``df`` + ``(band, bucket)``, one row per band.
+
+    The ``n_planes`` sign bits are projected ONCE per row (``_bits``)
+    before the explode; each band's bucket is a shift-and-mask of them.
+    Inlining :func:`lsh_bucket_bits` into every band's struct planned each
+    row's hyperplane products once per band. The bits are a CASE chain
+    ending in ``ELSE 0``, so they are never NULL: a NULL vector lands in
+    bucket 0 of every band, and every pair it forms scores a NULL cosine.
+    """
+    bits_per_band = n_planes // bands
+    mask = (1 << bits_per_band) - 1
+    bits = F.col("_bits")
+    return df.withColumn(
+        "_bits", lsh_bucket_bits(F.col(vec_col), n_planes, dim, seed, hash_impl)
+    ).select(
+        *df.columns,
+        F.inline(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        F.shiftright(bits, b * bits_per_band)
+                        .bitwiseAND(F.lit(mask))
+                        .alias("bucket"),
+                    )
+                    for b in range(bands)
+                ]
+            )
+        ),
+    )
 
 
 def lsh_ann_topk(
@@ -189,49 +234,20 @@ def lsh_ann_topk(
     with |Q|·(expected bucket size)·bands work; band count trades recall
     for cost. ``hash_impl='md5'`` makes buckets DuckDB-reproducible.
     """
-    bits_per_band = n_planes // bands
-
-    def band_structs(vec: Column) -> Column:
-        bits = lsh_bucket_bits(vec, n_planes, dim, seed, hash_impl)
-        mask = (1 << bits_per_band) - 1
-        return F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.shiftright(bits, b * bits_per_band)
-                    .bitwiseAND(F.lit(mask))
-                    .alias("bucket"),
-                )
-                for b in range(bands)
-            ]
-        )
-
-    c = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.explode(band_structs(F.col(vec_col))).alias("bb"),
-    ).select("vec_id", "c_vec", "bb.band", "bb.bucket")
+    c = corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("c_vec"))
     q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.explode(band_structs(F.col(vec_col))).alias("bb"),
-    ).select("query_id", "q_vec", "bb.band", "bb.bucket")
+        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+    )
+
+    def banded(df: DataFrame, vec: str) -> DataFrame:
+        return _lsh_bands(_with_norm(df, vec), vec, n_planes, bands, dim, seed, hash_impl)
+
     cands = (
-        c.join(F.broadcast(q), ["band", "bucket"])
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", "q_vec", "c_vec")
+        banded(c, "c_vec")
+        .join(F.broadcast(banded(q, "q_vec")), ["band", "bucket"])
         .dropDuplicates(["query_id", "vec_id"])
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        cands.select(
-            "query_id",
-            "vec_id",
-            F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("cos"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return _rank_candidates(cands, k)
 
 
 def ivf_assign(
@@ -246,21 +262,16 @@ def ivf_assign(
     Coarse-quantizer step of IVF: broadcast the centroid table (dimension-
     sized), score every (vector, centroid) pair, keep the top-``nprobe``
     per vector — the 10^12-row side is scanned once and never shuffled
-    until the tiny per-vector ranking."""
-    c = centroids.select(
-        F.col("centroid_id"), F.col("centroid_vec")
-    )
-    scored = vectors.join(F.broadcast(c)).select(
+    until the tiny per-vector ranking. Returns (id, vec, centroid_id)."""
+    c = _with_norm(centroids.select("centroid_id", "centroid_vec"), "centroid_vec")
+    scored = _with_norm(vectors, vec_col).join(F.broadcast(c)).select(
         id_col,
         vec_col,
         "centroid_id",
-        cosine(F.col(vec_col), F.col("centroid_vec")).alias("_sim"),
+        _cos(vec_col, "centroid_vec").alias("_sim"),
     )
-    w = Window.partitionBy(id_col).orderBy(F.desc("_sim"), F.asc("centroid_id"))
-    return (
-        scored.withColumn("_r", F.row_number().over(w))
-        .where(F.col("_r") <= nprobe)
-        .select(id_col, vec_col, "centroid_id")
+    return _top_k(scored, id_col, "_sim", "centroid_id", nprobe, "_r").select(
+        id_col, vec_col, "centroid_id"
     )
 
 
@@ -350,23 +361,13 @@ def _ivf_rank(corpus_lists: DataFrame, query_probes: DataFrame, k: int) -> DataF
 
     ``corpus_lists``: (centroid_id, vec_id, c_vec); ``query_probes``:
     (centroid_id, query_id, q_vec). The probe frame is broadcast (query
-    batches are small next to the corpus); ties break on vec_id so the
-    result is deterministic under any partitioning."""
+    batches are small next to the corpus)."""
     cands = (
-        corpus_lists.join(F.broadcast(query_probes), "centroid_id")
-        .where(F.col("vec_id") != F.col("query_id"))
+        _with_norm(corpus_lists, "c_vec")
+        .join(F.broadcast(_with_norm(query_probes, "q_vec")), "centroid_id")
         .dropDuplicates(["query_id", "vec_id"])
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        cands.select(
-            "query_id",
-            "vec_id",
-            F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("cos"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return _rank_candidates(cands, k)
 
 
 def embedding_near_duplicates(
@@ -402,38 +403,15 @@ def embedding_near_duplicates(
     #   threshold-passing pairs. Identical output: duplicate (id_a, id_b)
     #   rows carry identical vectors, hence identical cos, so
     #   filter-then-dedup keeps exactly the pairs dedup-then-filter would;
-    # * per-vector L2 norms computed once per posting row instead of per
-    #   pair (cos = dot/(norm_a*norm_b), same operand order as cosine() —
-    #   bit-identical doubles);
-    # * bucket keys COALESCED non-nullable so Catalyst cannot infer
-    #   isnotnull(<the 12-plane projection expression>) and push it into
-    #   the scan (the plan trap documented in dedup.py); a null-vector
-    #   row gets bucket 0 but every pair it forms dies on the
-    #   null-propagating cosine, exactly as its null key killed it in the
-    #   join before.
-    def band_structs(vec: Column) -> Column:
-        bits = lsh_bucket_bits(vec, n_planes, dim, seed)
-        bpb = n_planes // bands
-        mask = (1 << bpb) - 1
-        return F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.coalesce(
-                        F.shiftright(bits, b * bpb).bitwiseAND(F.lit(mask)),
-                        F.lit(0),
-                    ).alias("bucket"),
-                )
-                for b in range(bands)
-            ]
-        )
-
-    e = corpus.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("vec"),
-        l2_norm(F.col(vec_col)).alias("_norm"),
-        F.explode(band_structs(F.col(vec_col))).alias("bb"),
-    ).select("_id", "vec", "_norm", "bb.band", "bb.bucket")
+    # * each vector's L2 norm is computed once per posting row, not per
+    #   pair (_cos);
+    # * the cosine is scored ONCE per pair behind a gen_barrier: without
+    #   it Catalyst pushes the threshold filter into the join condition
+    #   and the projection scores the pair again (the trap
+    #   dedup._scored_jaccard documents). A NULL vector's pairs score a
+    #   NULL cosine and fail the threshold.
+    side = corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("vec"))
+    e = _lsh_bands(_with_norm(side, "vec"), "vec", n_planes, bands, dim, seed)
     e = drop_hot_buckets(
         e, ["band", "bucket"], max_bucket_size, "embedding_near_duplicates"
     )
@@ -442,28 +420,20 @@ def embedding_near_duplicates(
         "bucket",
         F.col("_id").alias("id_a"),
         F.col("vec").alias("vec_a"),
-        F.col("_norm").alias("_norm_a"),
+        F.col("_norm_vec").alias("_norm_vec_a"),
     )
     b = e.select(
         "band",
         "bucket",
         F.col("_id").alias("id_b"),
         F.col("vec").alias("vec_b"),
-        F.col("_norm").alias("_norm_b"),
+        F.col("_norm_vec").alias("_norm_vec_b"),
     )
     return (
         a.join(b, ["band", "bucket"])
         .where(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cos",
-            F.round(
-                dot(F.col("vec_a"), F.col("vec_b"))
-                / (F.col("_norm_a") * F.col("_norm_b")),
-                6,
-            ),
-        )
-        .where(F.coalesce(F.col("cos") >= threshold, F.lit(False)))
-        .select("id_a", "id_b", "cos")
+        .select("id_a", "id_b", gen_barrier(F.round(_cos("vec_a", "vec_b"), 6)).alias("cos"))
+        .where(F.col("cos") >= threshold)
         .dropDuplicates(["id_a", "id_b"])
     )
 

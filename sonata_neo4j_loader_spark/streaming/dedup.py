@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from . import drain_to_parquet
+
 DELIVERY_SCHEMA = T.StructType(
     [
         T.StructField("event_time", T.TimestampType(), True),
@@ -55,13 +57,4 @@ def run_dedup_to_parquet(
     deduped = dedup_stream(
         spark, input_dir, key_cols=key_cols, watermark_delay=watermark_delay
     )
-    query = (
-        deduped.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
+    return drain_to_parquet(deduped, output_dir, checkpoint_dir)

@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import drain_to_parquet
+
 EVENT_SCHEMA = T.StructType(
     [
         T.StructField("event_time", T.TimestampType(), True),
@@ -105,13 +107,4 @@ def run_attribution_to_parquet(
     joined = attribution_stream(
         spark, clicks_dir, purchases_dir, window, watermark_delay
     )
-    query = (
-        joined.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
+    return drain_to_parquet(joined, output_dir, checkpoint_dir)

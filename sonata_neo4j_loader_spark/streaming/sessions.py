@@ -49,6 +49,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from . import drain_to_parquet
+
 EVENT_SCHEMA = T.StructType(
     [
         T.StructField("event_time", T.TimestampType(), True),
@@ -260,13 +262,4 @@ def run_sessions_to_parquet(
     """Drain available events into finalized-session parquet (append mode);
     re-invoking resumes from the checkpoint like the other streaming sinks."""
     sessions = sessionize_stream(spark, input_dir, gap_seconds, watermark_delay)
-    query = (
-        sessions.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
+    return drain_to_parquet(sessions, output_dir, checkpoint_dir)

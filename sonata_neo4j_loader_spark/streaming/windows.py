@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import drain_to_parquet
+
 SPIKE_EVENT_SCHEMA = T.StructType(
     [
         T.StructField("event_time", T.TimestampType(), True),
@@ -76,13 +78,4 @@ def run_spike_rate_to_parquet(
     its end). Re-invoking resumes from the streaming checkpoint, mirroring
     the batch sink's manifest resume."""
     agg = spike_rate_stream(spark, input_dir, window_duration, watermark_delay)
-    query = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
+    return drain_to_parquet(agg, output_dir, checkpoint_dir)

@@ -27,15 +27,27 @@ def test_no_oracle_column_is_hugeint():
 
 
 @pytest.mark.parametrize(
-    "spark_type, duck_type, verdict",
+    "spark_type, duck_type, verdict, duck_x",
     [
-        ("bigint", "DOUBLE", "FAIL"),
-        ("bigint", "VARCHAR", "FAIL"),
-        ("decimal(10,0)", "DOUBLE", "OK"),
-        ("int", "BIGINT", "OK"),
+        pytest.param("bigint", "DOUBLE", "FAIL", "x", id="bigint-DOUBLE-FAIL"),
+        pytest.param("bigint", "VARCHAR", "FAIL", "x", id="bigint-VARCHAR-FAIL"),
+        pytest.param("decimal(10,0)", "DOUBLE", "OK", "x", id="decimal(10,0)-DOUBLE-OK"),
+        pytest.param("int", "BIGINT", "OK", "x", id="int-BIGINT-OK"),
+        # a decimal against a floating column compares as floats: 1.000
+        # and 1.0 are the same value
+        pytest.param("double", "DECIMAL(18,3)", "OK", "x", id="double-DECIMAL(18,3)-OK"),
+        # decimal against decimal stays an exact compare: values that differ
+        # only past the 9th significant digit (where floats are rounded) fail
+        pytest.param(
+            "decimal(20,10)",
+            "DECIMAL(20,10)",
+            "FAIL",
+            "x + 0.0000000001",
+            id="decimal(20,10)-DECIMAL(20,10)-FAIL",
+        ),
     ],
 )
-def test_type_family_mismatch_fails_the_gate(spark, spark_type, duck_type, verdict):
+def test_type_family_mismatch_fails_the_gate(spark, spark_type, duck_type, verdict, duck_x):
     # equal values stringify equally (1 and 1.0 both canon to "1"), so only
     # the type-family comparison can tell a bigint column from a DOUBLE one
     def frame(spark, _sf_dir):
@@ -43,6 +55,6 @@ def test_type_family_mismatch_fails_the_gate(spark, spark_type, duck_type, verdi
             f"CAST(x AS {spark_type}) AS x"
         )
 
-    oracle = f"SELECT CAST(x AS {duck_type}) AS x FROM (VALUES (1), (2)) v(x)"
+    oracle = f"SELECT CAST({duck_x} AS {duck_type}) AS x FROM (VALUES (1), (2)) v(x)"
     line = check_oracles._check_one(spark, "family", frame, oracle)
     assert line.split()[0] == verdict, line

@@ -21,6 +21,18 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _optimized(spark, df) -> str:
+    """The optimized logical plan with no field elided (wide projections
+    truncate past ``spark.sql.debug.maxToStringFields``)."""
+    key = "spark.sql.debug.maxToStringFields"
+    old = spark.conf.get(key)
+    spark.conf.set(key, 100000)
+    try:
+        return df._jdf.queryExecution().optimizedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_filter_pushdown_to_parquet(spark):
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
     q = li.where(F.col("l_quantity") < 24).select("l_orderkey", "l_quantity")
@@ -309,6 +321,57 @@ def test_bounded_near_dups_plan_no_semi_join(spark, detector):
     assert "windowspecdefinition" in plan
 
 
+def _queries(emb):
+    return emb.where(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+
+
+def test_lsh_plans_each_hyperplane_once_per_row(spark):
+    # similarity._lsh_bands projects the sign bits once per row before the
+    # explode: 12 plane dot products per side plus the re-rank dot. Each
+    # band inlining lsh_bucket_bits planned every product once per band
+    # (3 bands x 12 planes x 2 sides + 1 = 73).
+    from sonata_neo4j_loader_spark.operators import similarity
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    plan = _optimized(
+        spark, similarity.lsh_ann_topk(emb, _queries(emb), k=10, n_planes=12, bands=3)
+    )
+    assert plan.count("zip_with(") <= 2 * 12 + 1, plan.count("zip_with(")
+
+
+def test_embedding_near_dup_scores_no_pair_in_the_join(spark):
+    # the pair cosine is scored once, behind a gen_barrier, above the
+    # bucket self-join: no dot product is pushed into the join condition
+    import re
+
+    from sonata_neo4j_loader_spark.operators import similarity
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    plan = _optimized(
+        spark, similarity.embedding_near_duplicates(emb, 0.9, max_bucket_size=None)
+    )
+    joins = [line for line in plan.splitlines() if re.match(r"[\s:|+-]*Join ", line)]
+    assert joins, plan
+    assert not [line for line in joins if "zip_with(" in line], joins
+
+
+def test_ivf_rerank_scores_over_per_row_norms(spark):
+    # the norms of both sides are attached below the candidate join, so
+    # the operator computing cos above it runs ONE array aggregate per
+    # pair: the dot
+    from sonata_neo4j_loader_spark.operators import similarity
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    plan = _optimized(
+        spark, similarity.ivf_ann_topk(emb, _queries(emb), k=10, n_centroids=16, nprobe=4)
+    )
+    scoring = [line for line in plan.splitlines() if " AS cos#" in line]
+    assert len(scoring) == 1, plan
+    assert scoring[0].count("aggregate(") == 1, scoring[0]
+
+
 def test_minhash_postings_run_no_lambda_over_shingle_hashes(spark):
     # the MinHash signature and bitmap are min/bit_or aggregates over the
     # exploded shingle hashes: higher-order functions are CodegenFallback
@@ -319,19 +382,13 @@ def test_minhash_postings_run_no_lambda_over_shingle_hashes(spark):
     from sonata_neo4j_loader_spark.operators import dedup
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    key = "spark.sql.debug.maxToStringFields"  # wide projections truncate
-    old = spark.conf.get(key)
-    spark.conf.set(key, 100000)
-    try:
-        near, post = (
-            df._jdf.queryExecution().optimizedPlan().toString()
-            for df in (
-                dedup.minhash_near_duplicates(docs, "doc_id", "text", threshold=0.6),
-                dedup.banded_postings(docs, "doc_id", "text"),
-            )
+    near, post = (
+        _optimized(spark, df)
+        for df in (
+            dedup.minhash_near_duplicates(docs, "doc_id", "text", threshold=0.6),
+            dedup.banded_postings(docs, "doc_id", "text"),
         )
-    finally:
-        spark.conf.set(key, old)
+    )
     for plan in (near, post):
         assert "array_min" not in plan
         assert "aggregate(" not in plan

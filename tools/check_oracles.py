@@ -4,7 +4,8 @@ Runs each ``__spark_entry__.queries()`` entry at sf0.01 on Spark and its
 ``oracle_sql()`` twin on DuckDB, compares each column's type family
 (integer, floating/decimal, string, bool), row count and order-insensitive
 value content (columns sorted by name, rows sorted, values stringified
-with float rounding).
+with float rounding; a decimal column compared with a floating one is
+read as floats on both sides, decimal against decimal stays exact).
 
 Queries run on a thread pool (default 4): Spark job submission is
 thread-safe on one session, and a query's DuckDB oracle runs while other
@@ -23,6 +24,7 @@ import os
 import sys
 import threading
 from concurrent.futures import ThreadPoolExecutor
+from decimal import Decimal
 
 import duckdb
 
@@ -71,9 +73,20 @@ _FAMILIES = {
 }
 
 
+def _base_type(type_name: str) -> str:
+    return type_name.lower().split("(")[0]
+
+
 def type_family(type_name: str) -> str:
-    base = type_name.lower().split("(")[0]
+    base = _base_type(type_name)
     return next((f for f, names in _FAMILIES.items() if base in names), "other")
+
+
+def _decimals_as_floats(rows: list[tuple], idx: set[int]) -> list[tuple]:
+    return [
+        tuple(float(v) if i in idx and isinstance(v, Decimal) else v for i, v in enumerate(r))
+        for r in rows
+    ]
 
 
 def frame_signature(cols: list[str], rows: list[tuple]) -> tuple[int, list[str]]:
@@ -116,15 +129,27 @@ def _check_one(spark, name, fn, oracle_sql: str | None) -> str:
         drows = rel.fetchall()
     except Exception as e:  # noqa: BLE001
         return f"FAIL  {name}: duckdb error: {e}"
-    sn, ssig = frame_signature(scols, [tuple(r) for r in srows])
-    dn, dsig = frame_signature(dcols, drows)
     if sorted(scols) != sorted(dcols):
         return f"FAIL  {name}: columns differ: {sorted(scols)} vs {sorted(dcols)}"
-    sfam = {f.name: type_family(f.dataType.simpleString()) for f in sdf.schema.fields}
-    dfam = {c: type_family(str(t)) for c, t in zip(dcols, dtypes, strict=True)}
+    stype = {f.name: f.dataType.simpleString() for f in sdf.schema.fields}
+    dtype = {c: str(t) for c, t in zip(dcols, dtypes, strict=True)}
+    sfam = {c: type_family(t) for c, t in stype.items()}
+    dfam = {c: type_family(t) for c, t in dtype.items()}
     if sfam != dfam:
         diff = sorted((c, sfam[c], dfam[c]) for c in sfam if sfam[c] != dfam[c])
         return f"FAIL  {name}: type families differ (col, spark, duckdb): {diff}"
+    # canon renders Decimal('1.000') as "1.000" but the double 1.0 as "1":
+    # a decimal column against a floating one (same family, other base
+    # type) compares as floats; decimal against decimal stays exact
+    mixed = [
+        c
+        for c in scols
+        if len(b := {_base_type(stype[c]), _base_type(dtype[c])}) == 2 and "decimal" in b
+    ]
+    srows = _decimals_as_floats([tuple(r) for r in srows], {scols.index(c) for c in mixed})
+    drows = _decimals_as_floats(drows, {dcols.index(c) for c in mixed})
+    sn, ssig = frame_signature(scols, srows)
+    dn, dsig = frame_signature(dcols, drows)
     if sn != dn:
         return f"FAIL  {name}: row count {sn} vs {dn}"
     if ssig != dsig:
