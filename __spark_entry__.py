@@ -62,20 +62,15 @@ def _sink_dir(prefix: str) -> str:
     return d
 
 
-# per-query single-slot memo: query name -> (session weakref, sink path).
-# A long-lived driver session re-running a streaming contract query reuses
-# the already-drained sink instead of growing a fresh temp dir + checkpoint
-# per call; a new session re-drains (fresh dirs, cold checkpoint) and the
-# stale sink is reaped by the atexit hook above. A WEAKREF (not id()) keys
-# the memo: CPython recycles a dead session's address, so an id match
-# could silently hand a new session the stale sink without re-draining.
-_STREAM_SINK_CACHE: dict[str, tuple[object, str]] = {}
-
-
 def _drained_sink(
     spark: SparkSession, name: str, drain: Callable[[str], None], key: str = ""
 ) -> str:
     """Memoized drain-to-parquet: run ``drain(sink_dir)`` once per session.
+
+    A long-lived driver session re-running a streaming contract query reuses
+    the already-drained sink instead of growing a fresh temp dir + checkpoint
+    per call; a new session re-drains (fresh dirs, cold checkpoint) and the
+    stale sink is reaped by ``_sink_dir``'s atexit hook.
 
     ``key`` must carry any input the drain closure depends on beyond the
     session (for the events/spike drains: ``sf_dir``) — otherwise a
@@ -83,16 +78,13 @@ def _drained_sink(
     silently read the previous scale's sink. Drains whose input is
     session-only (fixture corpus, synthesized grid) pass the default.
     """
-    import weakref
 
-    memo_key = f"{name}|{key}"
-    cached = _STREAM_SINK_CACHE.get(memo_key)
-    if cached is not None and cached[0]() is spark:
-        return cached[1]
-    sink = _sink_dir(f"{name}_sink_")
-    drain(sink)
-    _STREAM_SINK_CACHE[memo_key] = (weakref.ref(spark), sink)
-    return sink
+    def build() -> str:
+        sink = _sink_dir(f"{name}_sink_")
+        drain(sink)
+        return sink
+
+    return _session_memo(spark, name, key, build)
 
 
 # single-slot memos: name -> (session weakref, key, value). One session at a
@@ -107,15 +99,16 @@ _SESSION_MEMO_LOCKS: dict[str, threading.Lock] = {}
 def _unpersist_all(value) -> None:
     for v in value.values() if isinstance(value, dict) else [value]:
         for df in v if isinstance(v, list) else [v]:
-            try:
+            try:  # a drained sink is a path: no unpersist, skipped here
                 df.unpersist()
             except Exception:
                 pass
 
 
 def _session_memo(spark: SparkSession, name: str, key, build: Callable[[], object]):
-    """``build()``'s persisted result, memoized for the CURRENT session and
-    ``key`` (any input the build reads beyond the session).
+    """``build()``'s result (persisted frames, or a drained sink's path),
+    memoized for the CURRENT session and ``key`` (any input the build reads
+    beyond the session).
 
     Lock-guarded per name: the parallel oracle checker can issue concurrent
     cold calls, and every losing build's persisted frames would leak for the
@@ -1648,9 +1641,8 @@ def events_asof_signup_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def events_sessions_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-adjudicated STATEFUL-STREAMING row: the
-    ``applyInPandasWithState`` gap sessionizer (streaming/sessions.py)
-    drained over the events table must emit exactly the batch
+    """Driver-adjudicated STATEFUL-STREAMING row: the ``session_window``
+    gap sessionizer (streaming/sessions.py) drained over the events table must emit exactly the batch
     ``events_sessions`` result — same oracle SQL. A far-future sentinel
     event per user closes every real session inside the drain (sessions
     starting at the sentinel timestamp are filtered out); ``session_id``

@@ -80,11 +80,16 @@ def _rank_candidates(pairs: DataFrame, k: int) -> DataFrame:
     """Re-rank tail of the top-k paths: (query_id, vec_id, cos, rank).
 
     ``pairs`` holds each (query_id, vec_id) candidate at most once, with
-    ``q_vec``/``c_vec`` and their norms; self-matches (same id) drop out."""
+    ``q_vec``/``c_vec`` and their norms; self-matches (same id) drop out,
+    and so do pairs with a NULL cosine (a NULL vector, or a NULL element):
+    a query with a NULL vector gets no rows."""
     scored = pairs.where(F.col("vec_id") != F.col("query_id")).select(
         "query_id", "vec_id", F.round(_cos("q_vec", "c_vec"), 6).alias("cos")
     )
-    return _top_k(scored, "query_id", "cos", "vec_id", k)
+    # NULLs rank last, so dropping them after the window keeps the same
+    # rows as before it; a filter below the window is pushed into the
+    # brute-force join condition and scores every pair twice
+    return _top_k(scored, "query_id", "cos", "vec_id", k).where(F.col("cos").isNotNull())
 
 
 def brute_force_topk(
@@ -262,16 +267,20 @@ def ivf_assign(
     Coarse-quantizer step of IVF: broadcast the centroid table (dimension-
     sized), score every (vector, centroid) pair, keep the top-``nprobe``
     per vector — the 10^12-row side is scanned once and never shuffled
-    until the tiny per-vector ranking. Returns (id, vec, centroid_id)."""
+    until the tiny per-vector ranking. Returns (id, vec, ``_norm_<vec>``,
+    centroid_id): the norm the centroid scoring computed, for the re-rank
+    (``_ivf_rank``) to reuse."""
     c = _with_norm(centroids.select("centroid_id", "centroid_vec"), "centroid_vec")
+    norm = f"_norm_{vec_col}"
     scored = _with_norm(vectors, vec_col).join(F.broadcast(c)).select(
         id_col,
         vec_col,
+        norm,
         "centroid_id",
         _cos(vec_col, "centroid_vec").alias("_sim"),
     )
     return _top_k(scored, id_col, "_sim", "centroid_id", nprobe, "_r").select(
-        id_col, vec_col, "centroid_id"
+        id_col, vec_col, norm, "centroid_id"
     )
 
 
@@ -359,12 +368,12 @@ def ivf_ann_topk(
 def _ivf_rank(corpus_lists: DataFrame, query_probes: DataFrame, k: int) -> DataFrame:
     """Shared IVF tail: probe-join the inverted lists, exact re-rank.
 
-    ``corpus_lists``: (centroid_id, vec_id, c_vec); ``query_probes``:
-    (centroid_id, query_id, q_vec). The probe frame is broadcast (query
+    ``corpus_lists``: (centroid_id, vec_id, c_vec, _norm_c_vec);
+    ``query_probes``: (centroid_id, query_id, q_vec, _norm_q_vec), as
+    :func:`ivf_assign` returns them. The probe frame is broadcast (query
     batches are small next to the corpus)."""
     cands = (
-        _with_norm(corpus_lists, "c_vec")
-        .join(F.broadcast(_with_norm(query_probes, "q_vec")), "centroid_id")
+        corpus_lists.join(F.broadcast(query_probes), "centroid_id")
         .dropDuplicates(["query_id", "vec_id"])
     )
     return _rank_candidates(cands, k)
@@ -487,7 +496,7 @@ def build_ivf_index(
         nprobe=1,
         id_col="vec_id",
         vec_col="embedding",
-    )
+    ).select("vec_id", "embedding", "centroid_id")
     r_cent = mat.materialize(
         cents,
         f"{index_path}/centroids",
@@ -543,4 +552,4 @@ def ivf_ann_topk_prebuilt(
         keys=query_probes.select("centroid_id"),
         num_buckets=meta.num_buckets,
     ).select("centroid_id", "vec_id", F.col("embedding").alias("c_vec"))
-    return _ivf_rank(lists, query_probes, k)
+    return _ivf_rank(_with_norm(lists, "c_vec"), query_probes, k)

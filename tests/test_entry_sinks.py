@@ -16,14 +16,13 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 def test_drained_sink_reused_within_session(spark):
-    memo_key = f"events_dedup_streamed|{SF_DIR}"
     first = entry.events_dedup_streamed(spark, SF_DIR)
-    sink_a = entry._STREAM_SINK_CACHE[memo_key][1]
+    ref, key, sink_a = entry._SESSION_MEMO["events_dedup_streamed"]
     again = entry.events_dedup_streamed(spark, SF_DIR)
-    sink_b = entry._STREAM_SINK_CACHE[memo_key][1]
+    sink_b = entry._SESSION_MEMO["events_dedup_streamed"][2]
     assert sink_a == sink_b  # no second drain, no new temp dir
     assert first.count() == again.count() > 0
-    ref = entry._STREAM_SINK_CACHE[memo_key][0]
+    assert key == SF_DIR
     assert ref() is spark  # weakref key tracks the LIVE session
 
 
@@ -31,10 +30,10 @@ def test_drained_sink_keyed_on_sf_dir(spark):
     # an sf_dir-dependent drain must NOT hand a different scale factor the
     # previous scale's sink: the memo key carries sf_dir
     a = entry.events_dedup_streamed(spark, SF_DIR)
+    sink_a = entry._SESSION_MEMO["events_dedup_streamed"][2]
     other = "/root/testdata/sf0.01"
     b = entry.events_dedup_streamed(spark, other)
-    sink_a = entry._STREAM_SINK_CACHE[f"events_dedup_streamed|{SF_DIR}"][1]
-    sink_b = entry._STREAM_SINK_CACHE[f"events_dedup_streamed|{other}"][1]
+    sink_b = entry._SESSION_MEMO["events_dedup_streamed"][2]
     assert sink_a != sink_b
     assert a.count() != b.count()  # different corpora, different rows
 

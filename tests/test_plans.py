@@ -360,7 +360,10 @@ def test_embedding_near_dup_scores_no_pair_in_the_join(spark):
 def test_ivf_rerank_scores_over_per_row_norms(spark):
     # the norms of both sides are attached below the candidate join, so
     # the operator computing cos above it runs ONE array aggregate per
-    # pair: the dot
+    # pair: the dot. Each side's norm is the one ivf_assign computed for
+    # the centroid scoring, projected once per vector column
+    import re
+
     from sonata_neo4j_loader_spark.operators import similarity
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
@@ -370,6 +373,9 @@ def test_ivf_rerank_scores_over_per_row_norms(spark):
     scoring = [line for line in plan.splitlines() if " AS cos#" in line]
     assert len(scoring) == 1, plan
     assert scoring[0].count("aggregate(") == 1, scoring[0]
+    norms = re.findall(r" AS (_norm_[a-z_]+)#", plan)
+    assert norms.count("_norm_c_vec") == 1, norms
+    assert norms.count("_norm_q_vec") == 1, norms
 
 
 def test_minhash_postings_run_no_lambda_over_shingle_hashes(spark):

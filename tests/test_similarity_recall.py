@@ -67,6 +67,25 @@ def test_lsh_recall(spark, emb, exact_topk):
     assert _recall(got, exact_topk) >= 0.22
 
 
+@pytest.mark.parametrize("path", ["brute", "lsh", "ivf"])
+def test_null_vector_query_gets_no_rows(spark, emb, path):
+    # a NULL query vector scores a NULL cosine against every candidate;
+    # those pairs drop out, so it gets no rows, and the others keep theirs
+    q = emb.where(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    q = q.unionByName(spark.createDataFrame([(10**9, None)], q.schema))
+    topk = {
+        "brute": similarity.brute_force_topk,
+        "lsh": similarity.lsh_ann_topk,
+        "ivf": similarity.ivf_ann_topk,
+    }[path]
+    got = topk(emb, q, k=5).collect()
+    assert not [r for r in got if r.query_id == 10**9]
+    assert len(got) == 5 * 5
+    assert all(r.cos is not None for r in got)
+
+
 def test_embedding_near_dup_hot_bucket_bound(spark):
     # a dense cluster of 30 same-direction vectors (positive rescales keep
     # every hyperplane sign) lands in ONE bucket per band; with

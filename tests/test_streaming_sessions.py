@@ -1,12 +1,12 @@
-"""Stateful streaming sessionization: gap-close, timeout-close, state reap.
+"""Stateful streaming sessionization: gap-close, watermark-close, state reap.
 
 Three drains over a growing event directory prove the contract:
-1. a session is emitted once a later event closes it by gap and no row
-   the watermark still admits can bridge that gap — within one batch or
-   across batches;
+1. a session is emitted once the watermark passes its last event + gap,
+   so no row the watermark still admits can bridge that gap — within one
+   batch or across batches;
 2. an open session survives in the state store across drains;
-3. the event-time timeout (watermark past last_event + gap) finalizes an
-   open session with no further events — idle-user state is reaped.
+3. the watermark passing last_event + gap finalizes an open session with
+   no further events from its user — idle-user state is reaped.
 """
 
 from __future__ import annotations
@@ -146,14 +146,15 @@ def test_gap_and_timeout_sessionization(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
 
     # batch 1, user 7: two events 2 min apart, then one 18 min later —
-    # the in-batch gap closes the first session immediately; the third
-    # event stays open in state
+    # the watermark (00:15) passes the first session's last + gap (00:12);
+    # the third event stays open in state
     _write(spark, src, [(ts(0), 7, 1.0), (ts(2), 7, 2.0), (ts(20), 7, 3.0)])
     got = _drain(spark, src, out, ckpt)
     assert got == [(7, ts(0), ts(2), 2, 3.0)]
 
-    # batch 2: an event 30 min after the open session closes it by gap
-    # (cross-batch close via state), and itself becomes the open session
+    # batch 2: an event 30 min after the open session moves the watermark
+    # (00:45) past it (cross-batch close via state), and itself becomes the
+    # open session
     _write(spark, src, [(ts(50), 7, 4.0)])
     got = _drain(spark, src, out, ckpt)
     assert got == [
@@ -162,8 +163,8 @@ def test_gap_and_timeout_sessionization(spark, tmp_path):
     ]
 
     # batch 3: only an unrelated user arrives, far in the future — the
-    # watermark passes 00:50 + gap, so user 7's open session finalizes by
-    # TIMEOUT (no further events needed) and its state is removed
+    # watermark passes 00:50 + gap, so user 7's open session finalizes
+    # with no further events of its own and its state is removed
     _write(spark, src, [(ts(40, hour=1), 9, 9.0)])
     got = _drain(spark, src, out, ckpt)
     assert (7, ts(50), ts(50), 1, 4.0) in got
@@ -171,23 +172,61 @@ def test_gap_and_timeout_sessionization(spark, tmp_path):
     assert not any(u == 9 for u, *_ in got)
 
 
-def test_delay_seconds_parses_spark_interval_forms():
-    assert S._delay_seconds("10 minutes") == 600.0
-    assert S._delay_seconds("interval 10 minutes") == 600.0
-    assert S._delay_seconds("1 hour 30 minutes") == 5400.0
-    assert S._delay_seconds("interval 1 hour 30 minutes") == 5400.0
-    assert S._delay_seconds("500 milliseconds") == 0.5
+def test_event_exactly_one_gap_after_the_last_joins_the_session(spark, tmp_path):
+    """The batch twin splits on ``gap > G``: an event exactly G after the
+    session's last event joins it, one microsecond more starts a new one.
+    So 00:00, 00:10 (exactly the 10 min gap) are one session, and
+    00:20:00.000001 (G + 1 us after 00:10, 2G + 1 us after the start)
+    opens the next. User 9's far-future event moves the watermark past
+    both."""
+    src = str(tmp_path / "events")
+    out = str(tmp_path / "sessions")
+    ckpt = str(tmp_path / "ckpt")
+
+    late = ts(20).replace(microsecond=1)
+    _write(
+        spark,
+        src,
+        [(ts(0), 7, 1.0), (ts(10), 7, 2.0), (late, 7, 4.0), (ts(0, hour=3), 9, 9.0)],
+    )
+    assert _drain(spark, src, out, ckpt) == [
+        (7, ts(0), ts(10), 2, 3.0),
+        (7, late, late, 1, 4.0),
+    ]
+
+
+def _watermark_delay(df):
+    """The delay of the stream's event-time watermark, as Spark parsed it."""
+    plan = df._jdf.queryExecution().logical().toString()
+    line = next(ln for ln in plan.splitlines() if "EventTimeWatermark" in ln)
+    return line.rsplit(", ", 1)[1]
+
+
+def test_delay_seconds_parses_spark_interval_forms(spark, tmp_path):
+    """Spark parses the delay when the stream is defined; each interval
+    form it accepts lands on the watermark with its amount intact."""
+    src = str(tmp_path)
+    for delay, parsed in (
+        ("10 minutes", "10 minutes"),
+        ("interval 10 minutes", "10 minutes"),
+        ("1 hour 30 minutes", "1 hours 30 minutes"),
+        ("interval 1 hour 30 minutes", "1 hours 30 minutes"),
+        ("500 milliseconds", "0.5 seconds"),
+    ):
+        df = S.sessionize_stream(spark, src, 600.0, delay)
+        assert df.isStreaming
+        assert _watermark_delay(df) == parsed
+
+
+def test_delay_seconds_rejects_bad_spellings_and_negatives(spark, tmp_path):
+    """A malformed or negative delay fails at call time, before any query
+    starts."""
     import pytest as _pytest
+    from pyspark.errors import AnalysisException, IllegalArgumentException
 
-    with _pytest.raises(ValueError, match="unsupported watermark delay"):
-        S._delay_seconds("10 fortnights")
-    with _pytest.raises(ValueError, match="unsupported watermark delay"):
-        S._delay_seconds("minutes")
-
-
-def test_delay_seconds_rejects_bad_spellings_and_negatives():
-    import pytest as _pytest
-
-    for bad in ("10 minutess", "-10 minutes", "nan minutes"):
-        with _pytest.raises(ValueError, match="unsupported watermark delay"):
-            S._delay_seconds(bad)
+    src = str(tmp_path)
+    for bad in ("10 fortnights", "minutes", "10 minutess", "nan minutes"):
+        with _pytest.raises(AnalysisException, match="CANNOT_PARSE_INTERVAL"):
+            S.sessionize_stream(spark, src, 600.0, bad)
+    with _pytest.raises(IllegalArgumentException, match="should not be negative"):
+        S.sessionize_stream(spark, src, 600.0, "-10 minutes")

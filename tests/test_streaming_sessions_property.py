@@ -2,10 +2,11 @@
 
 Random event sets, a random two-drop split, and random tolerated-late
 deferrals (events held back into drop 2 by at most the watermark delay)
-— the documented equality contract (streaming/sessions.py: delay <= gap
-implies stream == batch) probed on shapes no hand-picked fixture covers:
-cross-batch open-session continuation, late rows sorting before the open
-session's last event, duplicate timestamps, single-event users.
+— the documented equality contract (streaming/sessions.py: stream ==
+batch for any watermark delay, below and above the gap) probed on shapes
+no hand-picked fixture covers: cross-batch open-session continuation,
+late rows sorting before the open session's last event, late rows
+bridging two held sessions, duplicate timestamps, single-event users.
 
 Real Spark streams per example — max_examples stays small.
 """
@@ -21,8 +22,6 @@ from sonata_neo4j_loader_spark.streaming import sessions as S
 
 T0 = datetime(2024, 1, 1)
 GAP_S = 1800.0          # 30 min session gap
-DELAY = "10 minutes"    # watermark delay (<= gap, the contract bound)
-DELAY_MIN = 10
 SENTINEL = T0 + timedelta(days=30)
 
 events_strategy = st.lists(
@@ -56,25 +55,41 @@ def _batch_sessions(events):
     return out
 
 
-@settings(
+_PROPERTY = settings(
     max_examples=5,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
+
+
+@_PROPERTY
 @given(events=events_strategy, data=st.data())
 def test_stream_equals_batch_on_random_two_drop_splits(spark, events, data, tmp_path_factory):
+    """Watermark delay (10 min) below the 30 min gap."""
+    _check_two_drop_split(spark, events, data, tmp_path_factory, delay_min=10)
+
+
+@_PROPERTY
+@given(events=events_strategy, data=st.data())
+def test_stream_equals_batch_when_delay_exceeds_gap(spark, events, data, tmp_path_factory):
+    """Watermark delay (45 min) above the 30 min gap: late rows can land in
+    the gap between two held sessions and join them."""
+    _check_two_drop_split(spark, events, data, tmp_path_factory, delay_min=45)
+
+
+def _check_two_drop_split(spark, events, data, tmp_path_factory, delay_min):
     tmp = tmp_path_factory.mktemp("sess_prop")
     src, out, ckpt = str(tmp / "src"), str(tmp / "out"), str(tmp / "ckpt")
 
     # random split point in time order; then defer a random subset of
-    # drop-1 events within DELAY_MIN of drop-1's max into drop 2 —
-    # tolerated-late rows the kernel must merge exactly as batch would
+    # drop-1 events within delay_min of drop-1's max into drop 2 —
+    # tolerated-late rows the stream must merge exactly as batch would
     ordered = sorted(events, key=lambda e: e[1])
     cut = data.draw(st.integers(min_value=0, max_value=len(ordered)))
     drop1, drop2 = list(ordered[:cut]), list(ordered[cut:])
     if drop1:
         tau = max(m for _, m in drop1)
-        deferable = [e for e in drop1 if e[1] > tau - DELAY_MIN]
+        deferable = [e for e in drop1 if e[1] > tau - delay_min]
         mask = data.draw(
             st.lists(st.booleans(), min_size=len(deferable), max_size=len(deferable))
         )
@@ -102,9 +117,9 @@ def test_stream_equals_batch_on_random_two_drop_splits(spark, events, data, tmp_
 
     write(drop1)
     if drop1:
-        S.run_sessions_to_parquet(spark, src, out, ckpt, GAP_S, DELAY)
+        S.run_sessions_to_parquet(spark, src, out, ckpt, GAP_S, f"{delay_min} minutes")
     write(drop2, with_sentinels=True)
-    S.run_sessions_to_parquet(spark, src, out, ckpt, GAP_S, DELAY)
+    S.run_sessions_to_parquet(spark, src, out, ckpt, GAP_S, f"{delay_min} minutes")
 
     streamed = {
         (r.user_id, r.session_start, r.session_end): (r.n_events, r.sum_value)
