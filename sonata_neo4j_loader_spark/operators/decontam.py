@@ -10,14 +10,12 @@ whitespace-tokenized, short-doc-guarded) so the gram definition is the
 one the rest of the text stack already certifies.
 
 Scale posture: the eval side is benchmark-sized (thousands of docs, not
-the corpus), so its distinct gram set is BROADCAST by default and the
+the corpus), so its distinct gram set is always BROADCAST and the
 corpus-scale train gram stream is probed map-side — the only shuffle in
 the whole operator is the final map-side-combined ``groupBy(doc_id)``.
 Per-doc grams are deduplicated with ``array_distinct`` BEFORE the
 explode, so the join input carries each (doc, gram) once and the hit
-count needs no post-join distinct. With ``broadcast_eval=False`` the
-probe becomes a gram-keyed shuffle join for eval sets too large to
-broadcast; gram keys are near-unique, so no skew handling is needed.
+count needs no post-join distinct.
 """
 
 from __future__ import annotations
@@ -44,15 +42,14 @@ def contamination_report(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 8,
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """``(id, n_hits)`` for every CONTAMINATED training document —
     ``n_hits`` = how many of the doc's distinct n-grams occur anywhere
     in the eval set. Clean documents are absent (filter semantics; the
     caller anti-joins or left-joins as needed)."""
-    eval_grams = doc_ngrams(eval_df, id_col, text_col, n).select("gram").distinct()
-    if broadcast_eval:
-        eval_grams = F.broadcast(eval_grams)
+    eval_grams = F.broadcast(
+        doc_ngrams(eval_df, id_col, text_col, n).select("gram").distinct()
+    )
     hits = doc_ngrams(train, id_col, text_col, n).join(eval_grams, "gram")
     return hits.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_hits"))
 
@@ -63,12 +60,9 @@ def decontaminate(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 8,
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """The training corpus with contaminated documents REMOVED (left-anti
     join against the report's id set — doc-keyed, report is dimension-
     sized: one row per contaminated doc, not per gram)."""
-    report = contamination_report(
-        train, eval_df, id_col, text_col, n, broadcast_eval
-    )
+    report = contamination_report(train, eval_df, id_col, text_col, n)
     return train.join(report.select(id_col), id_col, "left_anti")

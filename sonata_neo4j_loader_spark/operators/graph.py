@@ -11,9 +11,10 @@ measures in-engine over the ``(subj, pred, obj)`` edge table:
   call — the rank frame is node-scale and may exceed broadcast limits)
   plus one groupBy, the dangling mass is a broadcast 1-row scalar frame
   (no per-iteration driver action), and the node/out-degree dimensions
-  are computed once and persisted. An EAGER ``localCheckpoint`` every few
-  rounds truncates the growing lineage — same discipline as the
-  connected-components loop (operators/canonicalize.py).
+  are computed once and persisted. An EAGER ``localCheckpoint`` every
+  :data:`PAGERANK_CHECKPOINT_EVERY` rounds truncates the growing lineage —
+  same discipline as the connected-components loop
+  (operators/canonicalize.py), which checkpoints every round.
 
 Edges are treated as a multiset (SYNAPSES_ONTO is CREATE semantics —
 parallel edges carry proportionally more rank), matching what Cypher
@@ -25,13 +26,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: PageRank rounds between eager checkpoints: a round is cheap (one join +
+#: one groupBy), so lineage may grow a few rounds before it is truncated
+PAGERANK_CHECKPOINT_EVERY = 5
+
 
 def transitive_closure(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     max_iterations: int = 20,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """All ``(src, dst)`` pairs connected by a directed path of ≥1 edges.
 
@@ -43,8 +47,9 @@ def transitive_closure(
     at scale, where a semi-naive frontier loop would take ``d``
     shuffle rounds on a deep hierarchy. Each round is one self-join
     keyed on the middle node plus one map-side-combined ``distinct``;
-    lineage is truncated with an eager ``localCheckpoint`` on the same
-    cadence as :func:`pagerank` and the connected-components loop.
+    lineage is truncated with an eager ``localCheckpoint`` every round,
+    as in the connected-components loop: the round's count action runs
+    over the checkpoint instead of re-running the self-join.
     Convergence is detected by a per-round count action (⌈log₂ d⌉
     driver round-trips total, not per-path-length).
 
@@ -67,9 +72,7 @@ def transitive_closure(
             )
             .select(F.col("a.src").alias("src"), F.col("b.dst").alias("dst"))
         )
-        paths = paths.unionByName(doubled).distinct()
-        if (i + 1) % checkpoint_every == 0:
-            paths = paths.localCheckpoint(eager=True)
+        paths = paths.unionByName(doubled).distinct().localCheckpoint(eager=True)
         n_next = paths.count()
         if n_next == n_paths:
             break
@@ -160,7 +163,6 @@ def pagerank(
     dst: str = "obj",
     damping: float = 0.85,
     n_iterations: int = 20,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """Damped PageRank with uniform dangling-mass redistribution.
 
@@ -228,12 +230,12 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-        if (i + 1) % checkpoint_every == 0:
+        if (i + 1) % PAGERANK_CHECKPOINT_EVERY == 0:
             # eager: actually materializes, bounding plan growth; a lazy
             # checkpoint would re-run everything since the last one at the
             # next action
             ranks = ranks.localCheckpoint(eager=True)
-    if n_iterations % checkpoint_every != 0:
+    if n_iterations % PAGERANK_CHECKPOINT_EVERY != 0:
         ranks = ranks.localCheckpoint(eager=True)
     # returned frame is checkpoint-rooted — safe to release the caches now
     out_deg.unpersist()

@@ -49,6 +49,24 @@ def link_mentions(
     raise ValueError(f"unknown strategy: {strategy}")
 
 
+def link_columns(
+    df: DataFrame,
+    entities: DataFrame,
+    columns: dict[str, str],
+    strategy: str = "broadcast",
+) -> DataFrame:
+    """Link each ``surface_col`` of ``columns`` ({surface_col: id_col}) via
+    :func:`link_mentions`: the surface column is replaced by ``id_col``
+    (its canonical entity id); rows with any unlinked surface are dropped."""
+    for surface_col, id_col in columns.items():
+        df = (
+            link_mentions(df.withColumnRenamed(surface_col, "surface"), entities, strategy)
+            .withColumnRenamed("entity_id", id_col)
+            .drop("surface", "entity_type")
+        )
+    return df
+
+
 def link_surfaces(
     surfaces: DataFrame, entities: DataFrame, strategy: str = "broadcast"
 ) -> DataFrame:

@@ -32,17 +32,28 @@ from pyspark.sql.types import (
     StructType,
 )
 
+# ASCII character classes, written out: Python ``re`` (the arrow impl)
+# reads \s \S \w \d as Unicode classes and Java (the native impl) as
+# ASCII, so NBSP or U+2003 would split a surface in one impl and not the
+# other. Java 17's \b also counts letters like é as word characters;
+# ``_B`` is the ASCII leading word boundary both engines agree on.
+_S = r"[ \t\n\x0B\f\r]"
+_NS = r"[^ \t\n\x0B\f\r]"
+_W = r"[A-Za-z0-9_]"
+_D = r"[0-9]"
+_B = rf"(?<!{_W})"
+
 # One mention grammar: "<kind> <surface>" produced by the document
 # templates (datagen/documents.py). Kinds map 1:1 to the reference's
 # node attributes + population registry.
-_ENTITY_RE = r"\b(neuron|mtype|etype|sclass|population)\s+(\S+)"
-_SYNAPSE_RE = r"\bsynapse\s+(\S+#\d+)\s*->\s*(\S+#\d+)"
-_PROP_RE = r"\bprop\s+(\w+)\s+(-?\d+(?:\.\d+)?)"
-_AFF_RE = r"\bafferent_section_type\s+(\w+)"
+_ENTITY_RE = rf"{_B}(neuron|mtype|etype|sclass|population){_S}+({_NS}+)"
+_SYNAPSE_RE = rf"{_B}synapse{_S}+({_NS}+#{_D}+){_S}*->{_S}*({_NS}+#{_D}+)"
+_PROP_RE = rf"{_B}prop{_S}+({_W}+){_S}+(-?{_D}+(?:\.{_D}+)?)"
+_AFF_RE = rf"{_B}afferent_section_type{_S}+({_W}+)"
 # Plain node *properties* (not entities): the reference copies these onto
 # the Neuron node via ``SET n += node`` (neo4j_operations.py:339; values
 # gathered at data_extraction.py:52-58). They never hit the dictionary.
-_NODE_ATTR_RE = r"\b(layer|region)\s+(\S+)"
+_NODE_ATTR_RE = rf"{_B}(layer|region){_S}+({_NS}+)"
 
 def _sql_re(pattern: str) -> str:
     """Escape a regex for embedding inside a SQL string literal."""

@@ -6,12 +6,13 @@ Arrow-batched ``mapInPandas`` stages. Uncompressed raster images (PPM P6
 and 24-bit BMP) decode for REAL via the pure-numpy parsers below
 (``decode_image`` / ``decode_image_stats``) — header parse, row padding,
 bottom-up order, and BGR swizzle are all genuine. Codecs that need an
-external library (JPEG/PNG/audio/video) remain STUBBED:
-``deterministic=True`` substitutes a seeded fake decoder so the
-Spark-side plumbing — schema, batch shape, partitioning — is real and
-testable; ``deterministic=False`` decodes PPM/BMP image payloads and
-raises ``NotImplementedError`` only where Pillow/librosa/ffmpeg would
-genuinely be required.
+external library (JPEG/PNG/audio/video) remain STUBBED: in
+``extract_features``, ``deterministic=True`` substitutes a seeded fake
+decoder so the Spark-side plumbing — schema, batch shape, partitioning —
+is real and testable; ``deterministic=False`` decodes PPM/BMP image
+payloads and raises ``NotImplementedError`` only where
+Pillow/librosa/ffmpeg would genuinely be required. ``resize_media``
+computes the target geometry only and leaves payload bytes alone.
 
 Batch-shape contract: ``mapInPandas`` receives an iterator of
 pandas.DataFrame batches (one per Arrow record batch, bounded by
@@ -111,22 +112,16 @@ def resize_media(
     media: DataFrame,
     max_width: int = 224,
     max_height: int = 224,
-    deterministic: bool = True,
 ) -> DataFrame:
     """Aspect-preserving downscale for image/video rows (audio passes
     through). The geometry — scale factor, rounded target dimensions — is
     real and vectorized (numpy over the Arrow batch); the pixel resample
-    itself is where Pillow/ffmpeg would run and is stubbed like the other
-    decode kernels. Output schema = input schema, so resize composes
-    anywhere in the media pipeline."""
+    itself is where Pillow/ffmpeg would run, so only the metadata dims
+    change and payloads pass through as they are. Output schema = input
+    schema, so resize composes anywhere in the media pipeline."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if not deterministic:
-                raise NotImplementedError(
-                    "real pixel resampling requires Pillow/ffmpeg; "
-                    "not available in this environment"
-                )
             visual = pdf["media_type"].isin(["image", "video"]).to_numpy()
             # MEDIA_SCHEMA permits null dims (natural for audio rows):
             # resize only rows that are visual AND fully dimensioned,

@@ -147,24 +147,6 @@ def exclusive_prefix_sum(
     )
 
 
-def unpersist_prefix_scan(df: DataFrame) -> None:
-    """Backwards-compatible no-op.
-
-    The r05 :func:`exclusive_prefix_sum` parked a ``persist()`` on an
-    ancestor and required callers to release it through this hook; the
-    r06 rewrite holds no cache at all, so there is nothing to release.
-    Kept so existing callers (and the build_vocab contract) stay valid;
-    still releases the cache when handed a frame produced by the old
-    implementation. Safe to call more than once.
-    """
-    cached = getattr(df, "_prefix_scan_cache", None)
-    if cached is not None:
-        try:
-            cached.unpersist()
-        except Exception:
-            pass
-
-
 def packed_documents(
     docs: DataFrame,
     budget: int,

@@ -39,11 +39,9 @@ def redact_pii(
     df: DataFrame,
     text_col: str = "text",
     out_col: str = "redacted_text",
-    patterns: dict[str, tuple[str, str]] | None = None,
-    with_counts: bool = True,
 ) -> DataFrame:
-    """Append ``out_col`` with all PII classes replaced by their tokens,
-    plus (when ``with_counts``) one ``n_<class>`` int column per class.
+    """Append ``out_col`` with every :data:`PII_PATTERNS` class replaced by
+    its token, plus one ``n_<class>`` int column per class.
 
     Counts are class-SEQUENTIAL: each class is counted on the text as it
     stands just before that class's replacement, so ``n_<class>`` is the
@@ -53,14 +51,10 @@ def redact_pii(
     that swallowed it, not as an IP; counting every class on the original
     text would double-report such spans).
     """
-    pats = patterns or PII_PATTERNS
     cols = [df[c] for c in df.columns]
     cur = F.col(text_col)
-    for name, (pattern, token) in pats.items():
-        if with_counts:
-            cols.append(
-                F.regexp_count(cur, F.lit(pattern)).cast("int").alias(f"n_{name}")
-            )
+    for name, (pattern, token) in PII_PATTERNS.items():
+        cols.append(F.regexp_count(cur, F.lit(pattern)).cast("int").alias(f"n_{name}"))
         cur = F.regexp_replace(cur, pattern, token)
     cols.append(cur.alias(out_col))
     return df.select(*cols)

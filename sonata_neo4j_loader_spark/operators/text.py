@@ -126,17 +126,15 @@ def quality_score(col: str = "text") -> Column:
     return F.round(score, 6).alias("quality_score")
 
 
-def fingerprint(col: str = "text", normalize: bool = True) -> Column:
+def fingerprint(col: str = "text") -> Column:
     """Document fingerprint: 64-bit hash of the normalized text.
 
-    Normalization = lowercase + collapse whitespace — so formatting-only
-    variants collide (the useful property for dedup). xxhash64 keeps it
-    JVM-side; the exact-dedup operator uses the same normalization.
+    Normalization (:func:`normalized_text`) = lowercase + collapse
+    whitespace — so formatting-only variants collide (the useful property
+    for dedup). xxhash64 keeps it JVM-side; the exact-dedup operator uses
+    the same normalization.
     """
-    c: Column = F.col(col)
-    if normalize:
-        c = F.regexp_replace(F.trim(F.lower(c)), r"\s+", " ")
-    return F.xxhash64(c).alias("fingerprint")
+    return F.xxhash64(normalized_text(col)).alias("fingerprint")
 
 
 def normalized_text(col: str = "text") -> Column:

@@ -51,28 +51,18 @@ def linked_attribute_pairs(
     ``entities``, whose ids must already be canonical. The attribute
     triples and the node payloads are both projections of this frame.
     """
-    pairs = mentions.attribute_pairs_from_extracted(extracted)
-    for side in ("subj", "obj"):
-        pairs = (
-            linking.link_mentions(
-                pairs.withColumnRenamed(f"{side}_surface", "surface"),
-                entities,
-                strategy=strategy,
-            )
-            .withColumnRenamed("entity_id", side)
-            .drop("surface", "entity_type")
-        )
-    return pairs
+    return linking.link_columns(
+        mentions.attribute_pairs_from_extracted(extracted),
+        entities,
+        {"subj_surface": "subj", "obj_surface": "obj"},
+        strategy,
+    )
 
 
-def attribute_triples(
-    extracted: DataFrame, entities: DataFrame, strategy: str = "broadcast"
-) -> DataFrame:
+def attribute_triples(extracted: DataFrame, entities: DataFrame) -> DataFrame:
     """Extraction frame -> deduped neuron-attribute triples (MERGE semantics):
     the streaming ingest's entry to the batch plan's one attribute path."""
-    return neuron_attribute_triples_from_pairs(
-        linked_attribute_pairs(extracted, entities, strategy)
-    )
+    return neuron_attribute_triples_from_pairs(linked_attribute_pairs(extracted, entities))
 
 
 def _lookup(mapping: dict[str, str], col: F.Column) -> F.Column:

@@ -29,9 +29,9 @@ Scale posture:
   Zipf-skewed) term key at all. The only exchange is the doc-keyed
   regroup, high-cardinality and naturally balanced, with the per-doc
   list bounded by document size — the same bound the parser already
-  assumes. For a vocabulary too large to broadcast, pass
-  ``broadcast_vocab=False`` and let AQE's skew-join handling split the
-  stopword keys (the semantics are identical; the plan is not).
+  assumes. The vocabulary is always broadcast: no caller has one too
+  large to broadcast, and a shuffle join on the Zipf-skewed term key
+  would be the one to need skew handling.
 """
 
 from __future__ import annotations
@@ -54,11 +54,8 @@ def build_vocab(
 
     ``min_count`` drops rare terms before ranking; ``max_size`` keeps
     only the top-``max_size`` terms (TakeOrderedAndProject — the cut is
-    deterministic under the same total order). Since optimization r06 the
-    prefix-sum ranking holds no persisted state (the r05 version leaked
-    one persist per invocation — ADVICE.md r05);
-    :func:`operators.packing.unpersist_prefix_scan` remains a valid no-op
-    on the result.
+    deterministic under the same total order). The prefix-sum ranking
+    holds no persisted state, so the result needs no cleanup.
     """
     counts = (
         df.select(F.explode(text.word_ngrams(text_col, 1)).alias("term"))
@@ -91,7 +88,6 @@ def encode_documents(
     text_col: str = "text",
     unk_id: int = -1,
     out_col: str = "token_ids",
-    broadcast_vocab: bool = True,
 ) -> DataFrame:
     """Encode each document as token ids: ``(id, token_ids, n_tokens,
     n_unk)`` with ``token_ids`` in original token order and every
@@ -106,9 +102,7 @@ def encode_documents(
         F.col(id_col),
         F.posexplode_outer(text.word_ngrams(text_col, 1)).alias("pos", "term"),
     )
-    v = vocab.select("term", "term_id")
-    if broadcast_vocab:
-        v = F.broadcast(v)
+    v = F.broadcast(vocab.select("term", "term_id"))
     enc = toks.join(v, "term", "left").select(
         id_col,
         "pos",

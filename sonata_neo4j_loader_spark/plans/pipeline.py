@@ -73,7 +73,7 @@ def build_triples(
     # applied per matched dictionary row either way. The per-frame
     # apply_canonical_mapping calls are gone from the hot path.
     if alias_edges is not None:
-        mapping = canonicalize.connected_components(alias_edges).persist()
+        mapping = canonicalize.connected_components(alias_edges)
         entities = canonicalize.apply_canonical_mapping(entities, mapping, "entity_id")
 
     # The dictionary is dimension-sized and reused by three link passes —
@@ -142,17 +142,12 @@ def build_triples(
     ).persist()
 
     # stage 5c: synapse endpoints -> canonical ids -> endpoint-existence joins
-    both_link = synapse_rows
-    for side in ("src", "tgt"):
-        both_link = (
-            linking.link_mentions(
-                both_link.withColumnRenamed(f"{side}_surface", "surface"),
-                entities,
-                strategy=cfg.link_strategy,
-            )
-            .withColumnRenamed("entity_id", f"{side}_id")
-            .drop("surface", "entity_type")
-        )
+    both_link = linking.link_columns(
+        synapse_rows,
+        entities,
+        {"src_surface": "src_id", "tgt_surface": "tgt_id"},
+        cfg.link_strategy,
+    )
     syn = triples.synapse_triples(both_link, neurons)
     syn = sampling.sample_by_hash(syn, "doc_id", cfg.edge_proportion, SAMPLE_SEED)
     syn = syn.persist()

@@ -46,9 +46,8 @@ def start_incremental_attribute_triples(
     """
     from ..datagen.documents import DOC_SCHEMA
 
-    mapping = None
     if alias_edges is not None:
-        mapping = canonicalize.connected_components(alias_edges).persist()
+        mapping = canonicalize.connected_components(alias_edges)
         entities = canonicalize.apply_canonical_mapping(
             entities, mapping, "entity_id"
         ).persist()
@@ -72,11 +71,10 @@ def start_incremental_attribute_triples(
         query.awaitTermination()
     finally:
         # the sink is parquet on disk; nothing downstream reads through the
-        # cached mapping or dictionary, so holding them past the drain
-        # would leak two cached frames per call in a long-lived session
-        if mapping is not None:
+        # cached dictionary, so holding it past the drain would leak a
+        # cached frame per call in a long-lived session
+        if alias_edges is not None:
             entities.unpersist()
-            mapping.unpersist()
     return query
 
 

@@ -20,3 +20,19 @@ def test_uses_are_name_tokens_and_fstring_interpolations():
 
 def test_package_has_no_unreferenced_top_level_names():
     assert dead_code.unreferenced() == []
+
+
+def test_bool_switch_is_passed_by_keyword_or_position():
+    defs = (
+        "def f(x, a=True, *, b=False):\n    pass\n"
+        "class C:\n    def m(self, c=False):\n        pass\n"
+    )
+    assert dead_code.bool_params(defs) == [("f", "a", 1), ("f", "b", None), ("m", "c", 0)]
+    calls = dead_code.call_args("f(1, False)\nmod.f(1, b=True)\nC().m()\ng(*xs)\n")
+    assert calls["f"] == [(2, set()), (1, {"b"})]
+    assert calls["m"] == [(0, set())]
+    assert calls["g"][0][0] > 1000
+
+
+def test_package_has_no_unset_bool_switches():
+    assert dead_code.unset_bool_params() == []

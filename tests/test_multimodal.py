@@ -81,8 +81,6 @@ def test_resize_preserves_null_dims(spark):
 def test_real_codec_path_is_gated(media):
     with pytest.raises(Exception, match="NotImplementedError|Pillow"):
         multimodal.extract_features(media, deterministic=False).collect()
-    with pytest.raises(Exception, match="NotImplementedError|Pillow|ffmpeg"):
-        multimodal.resize_media(media, deterministic=False).collect()
 
 
 # ---------------------------------------------------------------------------

@@ -89,9 +89,6 @@ def test_prefix_sum_holds_no_cache_and_reevaluates_identically(spark):
     spark.catalog.clearCache()
     second = sorted((r.doc_id, r.bin_id, r.bin_offset) for r in out.collect())
     assert first == second
-    # the compat no-op stays callable and idempotent
-    packing.unpersist_prefix_scan(out)
-    packing.unpersist_prefix_scan(out)
 
 
 def test_prefix_sum_struct_order_key(spark):

@@ -224,7 +224,7 @@ def test_pagerank_materializes_edge_input_once(spark):
         [(i % 7, (i + 1) % 7) for i in range(100)], "subj long, obj long"
     ).coalesce(2)
     edges = spark.createDataFrame(base.rdd.mapPartitions(bump), base.schema)
-    graph.pagerank(edges, n_iterations=8, checkpoint_every=3).count()
+    graph.pagerank(edges, n_iterations=8).count()
     # 2 partitions; allow each to evaluate a couple of times while the
     # persist warms (nodes-union branches can race the cache) — the broken
     # shape (rescan per iteration) would be >= 8 * 2 = 16

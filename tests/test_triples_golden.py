@@ -199,6 +199,21 @@ def test_rich_aggregates(outputs):
         assert dist == pytest.approx(stats["afferent_distribution"])
 
 
+def test_all_plain_triples_is_every_golden_triple(outputs):
+    """``all_plain_triples`` (what ``entry()`` returns) is exactly the golden
+    attribute sets, the SYNAPSES_ONTO multiset and one row per aggregated
+    group pair of each aggregate table, with no row lost or repeated."""
+    want = [t for ts in fixture.golden_triples().values() for t in ts]
+    for pred, attr, prefix in [
+        ("AGGREGATED_SYNAPSE_MTYPE", "mtype", "mtype"),
+        ("AGGREGATED_SYNAPSE_RICH_MTYPE", "mtype", "mtype"),
+        ("AGGREGATED_SYNAPSE_SCLASS", "synapse_class", "sclass"),
+    ]:
+        want += [(f"{prefix}:{a}", pred, f"{prefix}:{b}") for a, b in fixture.golden_aggregates(attr)]
+    got = _collect_triples(pipeline.all_plain_triples(outputs))
+    assert sorted(got) == sorted(want)
+
+
 def test_rich_aggregate_null_afferent_type(spark):
     # untyped synapses count towards n_synapses and every average but get
     # no distribution entry; a pair with no typed synapse keeps a NULL map

@@ -25,7 +25,6 @@ def _docs(spark):
 def test_vocab_ids_contiguous_and_ordered(spark):
     v = vocab.build_vocab(_docs(spark))
     rows = sorted(v.collect(), key=lambda r: r.term_id)
-    packing.unpersist_prefix_scan(v)
     # ids contiguous from 0
     assert [r.term_id for r in rows] == list(range(len(rows)))
     # ordered by (count desc, term asc): counts non-increasing, ties
@@ -45,19 +44,15 @@ def test_vocab_is_parallelism_invariant(spark):
     v2 = vocab.build_vocab(docs.repartition(7), min_count=1)
     got1 = sorted(map(tuple, v1.collect()))
     got2 = sorted(map(tuple, v2.collect()))
-    packing.unpersist_prefix_scan(v1)
-    packing.unpersist_prefix_scan(v2)
     assert got1 == got2
 
 
 def test_min_count_and_max_size(spark):
     v = vocab.build_vocab(_docs(spark), min_count=2)
     rows = {r.term: (r.term_id, r["count"]) for r in v.collect()}
-    packing.unpersist_prefix_scan(v)
     assert set(rows) == {"the", "cat", "sat", "dog", "a"}
     v2 = vocab.build_vocab(_docs(spark), min_count=2, max_size=2)
     rows2 = sorted(v2.collect(), key=lambda r: r.term_id)
-    packing.unpersist_prefix_scan(v2)
     # top-2 under (count desc, term asc): the(3), a(2) beats cat/dog/sat
     # alphabetically
     assert [(r.term, r.term_id) for r in rows2] == [("the", 0), ("a", 1)]
@@ -68,7 +63,6 @@ def test_encode_roundtrip_unk_and_empty_docs(spark):
     v = vocab.build_vocab(docs, min_count=2)
     id2term = {r.term_id: r.term for r in v.collect()}
     out = {r.doc_id: r for r in vocab.encode_documents(docs, v).collect()}
-    packing.unpersist_prefix_scan(v)
     assert set(out) == {0, 1, 2, 3, 4, 5}  # every doc survives
     # doc 0: 'the cat sat on the mat' -> on/mat are OOV (count 1)
     r0 = out[0]
@@ -94,7 +88,6 @@ def test_encode_is_partition_invariant(spark):
         (r.doc_id, list(r.token_ids))
         for r in vocab.encode_documents(docs.repartition(2, "doc_id"), v).collect()
     )
-    packing.unpersist_prefix_scan(v)
     assert e1 == e2
 
 
@@ -107,7 +100,6 @@ def test_encode_broadcasts_vocab(spark):
         .executedPlan()
         .toString()
     )
-    packing.unpersist_prefix_scan(v)
     # the Zipf-skewed term key must never shuffle: vocab joins in broadcast
     assert "BroadcastHashJoin" in plan, plan
 
@@ -118,7 +110,5 @@ def test_encode_composes_with_packing(spark):
     enc = vocab.encode_documents(docs, v)
     packed = packing.packed_documents(enc, budget=8, token_col="n_tokens")
     rows = {r.doc_id: r.bin_id for r in packed.collect()}
-    packing.unpersist_prefix_scan(packed)
-    packing.unpersist_prefix_scan(v)
     # doc order 0..5 with token counts 6,3,5,0,0,1 -> prefixes 0,6,9,14,14,14
     assert [rows[i] for i in range(6)] == [0, 0, 1, 1, 1, 1]
