@@ -1142,18 +1142,17 @@ def minhash_dup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dups with the md5 hash twin (60-bit, first 15 hex chars
-    of md5) so DuckDB recomputes the identical simhash values and the
-    oracle adjudicates the full (id_a, id_b, hamming) frame — banding +
-    bit_count verify on the Spark side vs brute all-pairs in the oracle.
-    The engine hot path defaults to xxhash64 (operators/dedup.py)."""
+    """SimHash near-dups over the operator's md5 shingle hash (60-bit, first
+    15 hex chars of the seed-prefixed md5), so DuckDB recomputes the
+    identical simhash values and the oracle adjudicates the full (id_a,
+    id_b, hamming) frame — banding + bit_count verify on the Spark side vs
+    brute all-pairs in the oracle."""
     docs = _t(spark, sf_dir, "documents")
     # max_bucket_size=None = exact mode, matching the brute all-pairs
     # oracle; the web-scale hot-bucket bound (default 1000) is covered by
     # the skewed-fixture pytest (tests/test_dedup_quality.py).
     return dedup.simhash_near_duplicates(
-        docs, "doc_id", "text", max_hamming=3, hash_impl="md5",
-        max_bucket_size=None,
+        docs, "doc_id", "text", max_hamming=3, max_bucket_size=None
     )
 
 
@@ -1166,31 +1165,28 @@ def ann_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hyperplane-LSH ANN with the md5 plane twin: the DuckDB oracle
+    """Hyperplane-LSH ANN over the operator's md5 planes: the DuckDB oracle
     recomputes the identical hyperplanes, buckets, band join, and rounded
     cosine re-rank — full value adjudication of the approximate index, not
-    just a recall bound (recall-vs-brute stays pytest-pinned for the
-    default xxhash64 path)."""
+    just a recall bound (recall vs brute force stays pytest-pinned)."""
     emb = _t(spark, sf_dir, "embeddings")
     queries_df = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    return similarity.lsh_ann_topk(emb, queries_df, k=10, hash_impl="md5")
+    return similarity.lsh_ann_topk(emb, queries_df, k=10)
 
 
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style ANN (coarse quantizer + in-list re-rank) — the third
-    scale path next to brute force and hyperplane LSH. md5 centroid pick:
-    the DuckDB oracle reproduces centroids, inverted-list assignment,
-    query probes, and the rounded cosine re-rank exactly (recall vs brute
-    force stays pytest-pinned for the default xxhash64 path)."""
+    scale path next to brute force and hyperplane LSH. The operator picks
+    centroids by md5, so the DuckDB oracle reproduces centroids,
+    inverted-list assignment, query probes, and the rounded cosine
+    re-rank exactly (recall vs brute force stays pytest-pinned)."""
     emb = _t(spark, sf_dir, "embeddings")
     queries_df = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    return similarity.ivf_ann_topk(
-        emb, queries_df, k=10, n_centroids=16, nprobe=4, hash_impl="md5"
-    )
+    return similarity.ivf_ann_topk(emb, queries_df, k=10, n_centroids=16, nprobe=4)
 
 
 def ann_ivf_prebuilt_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1206,9 +1202,7 @@ def ann_ivf_prebuilt_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
 
     def drain(sink: str) -> None:
-        similarity.build_ivf_index(
-            emb, sink, n_centroids=16, hash_impl="md5", num_buckets=8
-        )
+        similarity.build_ivf_index(emb, sink, n_centroids=16, num_buckets=8)
 
     idx = _drained_sink(spark, "ann_ivf_prebuilt", drain, key=sf_dir)
     queries_df = emb.where(F.col("vec_id") < 5).select(
@@ -1243,16 +1237,16 @@ def embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Media decode/feature plumbing with the md5 metadata twin, so the
-    DuckDB oracle re-derives media_type/duration → n_frames_sampled and
-    adjudicates the full frame (the feature *values* come from the stubbed
-    decoder and are pinned by pytest instead; feature_dim is contractual).
-    Engine default metadata hash is xxhash64 (operators/multimodal.py)."""
+    """Media decode/feature plumbing over the md5 metadata hash
+    (operators/multimodal.py ``_twin_hash``), so the DuckDB oracle
+    re-derives media_type/duration → n_frames_sampled and adjudicates the
+    full frame (the feature *values* come from the stubbed decoder and are
+    pinned by pytest instead; feature_dim is contractual)."""
     docs = _t(spark, sf_dir, "documents")
     refs = docs.select(
         F.format_string("img://doc/%d.png", F.col("doc_id")).alias("media_ref")
     )
-    media = multimodal.synthesize_media(spark, refs, hash_impl="md5")
+    media = multimodal.synthesize_media(spark, refs)
     feats = multimodal.extract_features(media, dim=8)
     return feats.select(
         "media_ref",
@@ -1265,19 +1259,18 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_decoded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL image decode, driver-adjudicated end-to-end: synthesize
     genuine PPM-P6 / 24-bit-BMP payloads (format, dimensions and pixel
-    ramp derived from the md5 twin hash), then ``decode_image_stats``
+    ramp derived from the md5 metadata hash), then ``decode_image_stats``
     parses the BYTES — header, BMP row padding, bottom-up order, BGR
     swizzle — and emits decoded dimensions + per-channel means. The
     DuckDB oracle recomputes every stat in closed form from the ramp
     definition (generate_series + avg) with no decoder of its own, so a
     decode bug anywhere shows up as a value mismatch. Channel sums are
-    exact in float64, making the means bit-deterministic cross-engine.
-    (Engine default hash is xxhash64; md5 here for the oracle twin.)"""
+    exact in float64, making the means bit-deterministic cross-engine."""
     docs = _t(spark, sf_dir, "documents")
     refs = docs.select(
         F.format_string("img://doc/%d.png", F.col("doc_id")).alias("media_ref")
     )
-    media = multimodal.synthesize_image_payloads(spark, refs, hash_impl="md5")
+    media = multimodal.synthesize_image_payloads(spark, refs)
     return multimodal.decode_image_stats(media)
 
 
@@ -3664,19 +3657,14 @@ def docs_mixture_resampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``resample_by_group``): upweight English 2.5× and downweight
     unidentified-language docs to 0.25× — the data-MIXING primitive that
     turns per-source target weights into a concrete training corpus. One
-    JVM projection + explode, NO shuffle; md5 hash twin so the DuckDB
-    oracle reproduces the exact copy multiset (engine hot path defaults
-    to xxhash64; partition-invariance is pytest-pinned)."""
+    JVM projection + explode, NO shuffle; the operator's md5 bucket lets
+    the DuckDB oracle reproduce the exact copy multiset
+    (partition-invariance is pytest-pinned)."""
     from sonata_neo4j_loader_spark.operators import sampling
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", text.lang_id("text"))
     out = sampling.resample_by_group(
-        docs,
-        "lang_id",
-        {"en": 2.5, "und": 0.25},
-        "doc_id",
-        hash_impl="md5",
-        seed=7,
+        docs, "lang_id", {"en": 2.5, "und": 0.25}, "doc_id", seed=7
     )
     return out.select("doc_id", "lang_id", "copy_id")
 
@@ -3706,14 +3694,12 @@ def docs_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     80/10/10 train/val/test as a pure function of (doc_id, seed) — one
     narrow projection, no shuffle, partition-invariant and stable under
     incremental ingest (unlike ``randomSplit``, whose seed is
-    per-partition). md5 hash twin so the DuckDB oracle reproduces the
-    exact assignment; engine hot path defaults to xxhash64."""
+    per-partition). The operator's md5 bucket lets the DuckDB oracle
+    reproduce the exact assignment."""
     from sonata_neo4j_loader_spark.operators import splits
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    return splits.assign_splits(
-        docs, "doc_id", _SPLIT_FRACS, seed=13, hash_impl="md5"
-    )
+    return splits.assign_splits(docs, "doc_id", _SPLIT_FRACS, seed=13)
 
 
 def docs_split_leakproof(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3730,9 +3716,7 @@ def docs_split_leakproof(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
     pairs = _minhash_pairs(spark, sf_dir)
-    return splits.assign_splits_by_cluster(
-        docs, pairs, "doc_id", _SPLIT_FRACS, seed=13, hash_impl="md5"
-    )
+    return splits.assign_splits_by_cluster(docs, pairs, "doc_id", _SPLIT_FRACS, seed=13)
 
 
 def docs_tokenized(spark: SparkSession, sf_dir: str) -> DataFrame:

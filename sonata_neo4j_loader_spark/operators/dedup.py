@@ -616,9 +616,7 @@ def near_dup_survivors(
 # SimHash
 # ---------------------------------------------------------------------------
 
-def simhash_expr(
-    shingles_col: str, seed: int = 42, hash_impl: str = "xxhash64"
-) -> Column:
+def simhash_expr(shingles_col: str, seed: int = 42) -> Column:
     """64-bit SimHash of a shingle-array column, as bigint.
 
     Per-bit vote: sum over shingles of ±1 by bit of the shingle hash;
@@ -627,26 +625,19 @@ def simhash_expr(
     this is authored as SQL): one ``aggregate`` over the shingle array with
     a 64-long accumulator — no explode, no shuffle.
 
-    ``hash_impl``: ``'xxhash64'`` (default, fastest, JVM-only) or
-    ``'md5'`` — a 60-bit hash from the first 15 hex chars of the
+    The shingle hash is a 60-bit value from the first 15 hex chars of the
     seed-prefixed md5, which DuckDB reproduces exactly
     (``('0x'||substr(md5('{seed}:'||s),1,15))::BIGINT``), making the
-    whole simhash value cross-engine-verifiable. Bits 60-63 of the md5
-    variant are always 0 (votes stay negative), so chunk banding and
-    Hamming math are unaffected.
+    whole simhash value cross-engine-verifiable. Bits 60-63 are always 0
+    (votes stay negative), so chunk banding and Hamming math are
+    unaffected.
     """
-    if hash_impl == "xxhash64":
-        hash_sql = f"xxhash64(s, {seed})"
-    elif hash_impl == "md5":
-        # seed threads into the hashed string so distinct seeds give
-        # independent families here too; the DuckDB twin is
-        # ('0x'||substr(md5('{seed}:'||s),1,15))::BIGINT
-        hash_sql = (
-            f"cast(conv(substr(md5(concat('{int(seed)}:', s)), 1, 15), 16, 10)"
-            " as bigint)"
-        )
-    else:
-        raise ValueError(f"unknown hash_impl: {hash_impl}")
+    # the seed threads into the hashed string so distinct seeds give
+    # independent hash families
+    hash_sql = (
+        f"cast(conv(substr(md5(concat('{int(seed)}:', s)), 1, 15), 16, 10)"
+        " as bigint)"
+    )
     return F.expr(
         f"""
         aggregate(
@@ -679,14 +670,13 @@ def simhash_near_duplicates(
     shingle_k: int = 5,
     max_hamming: int = 3,
     seed: int = 42,
-    hash_impl: str = "xxhash64",
     max_bucket_size: int | None = 1000,
 ) -> DataFrame:
     """Near-dup pairs with SimHash Hamming distance ≤ ``max_hamming``.
 
     Candidate generation: 16-bit chunk banding (two signatures within
     Hamming ≤ 3 must agree on ≥1 of 4 chunks — pigeonhole); exact
-    ``bit_count(xor)`` verification on candidates. ``hash_impl='md5'``
+    ``bit_count(xor)`` verification on candidates. The md5 shingle hash
     makes the output DuckDB-reproducible (see :func:`simhash_expr`).
 
     Skew bound: a (chunk, val) bucket holding p docs yields p² join rows
@@ -707,7 +697,7 @@ def simhash_near_duplicates(
         _spread(df.select(F.col(id_col).alias("_id"), text_col), "_id"),
         text_col,
         shingle_k,
-    ).select("_id", simhash_expr("shingles", seed, hash_impl).alias("sh"))
+    ).select("_id", simhash_expr("shingles", seed).alias("sh"))
     # Join keys are COALESCED non-nullable (same plan trap as
     # minhash_near_duplicates): nullable key columns derived from `sh`
     # make Catalyst infer isnotnull(<the full simhash aggregate>) and push

@@ -62,31 +62,25 @@ FEATURE_SCHEMA = StructType(
 )
 
 
-def _twin_hash(ref_col: str, hash_impl: str) -> F.Column:
-    """The cross-engine twin-hash convention, in ONE place.
-
-    ``'md5'`` → the 60-bit md5 prefix DuckDB reproduces exactly
-    (``('0x'||substr(md5(ref),1,15))::BIGINT``); anything else → the fast
-    JVM xxhash64. Every oracle twin in this module derives from this
-    expression — keep the prefix length in lockstep with the SQL side.
+def _twin_hash(ref_col: str) -> F.Column:
+    """The cross-engine twin-hash convention, in ONE place: the 60-bit md5
+    prefix DuckDB reproduces exactly
+    (``('0x'||substr(md5(ref),1,15))::BIGINT``). Every oracle twin in this
+    module derives from this expression — keep the prefix length in
+    lockstep with the SQL side.
     """
-    if hash_impl == "md5":
-        return F.conv(F.substring(F.md5(F.col(ref_col)), 1, 15), 16, 10).cast("bigint")
-    return F.xxhash64(F.col(ref_col))
+    return F.conv(F.substring(F.md5(F.col(ref_col)), 1, 15), 16, 10).cast("bigint")
 
 
-def synthesize_media(
-    spark, refs: DataFrame, ref_col: str = "media_ref", hash_impl: str = "xxhash64"
-) -> DataFrame:
+def synthesize_media(spark, refs: DataFrame, ref_col: str = "media_ref") -> DataFrame:
     """Deterministic fake media table for the given refs (payload = seeded
     bytes, metadata derived from the ref hash). Real pipelines read these
     from object storage; shape is identical.
 
-    ``hash_impl='md5'`` derives the metadata from a 60-bit md5 prefix that
-    DuckDB reproduces exactly (see :func:`_twin_hash`), so the whole media
-    table is cross-engine-verifiable; the default xxhash64 stays the fast
-    JVM path."""
-    h = _twin_hash(ref_col, hash_impl)
+    The metadata derives from a 60-bit md5 prefix that DuckDB reproduces
+    exactly (see :func:`_twin_hash`), so the whole media table is
+    cross-engine-verifiable."""
+    h = _twin_hash(ref_col)
     return refs.select(
         F.col(ref_col).alias("media_ref"),
         F.element_at(
@@ -379,17 +373,17 @@ def _ramp_pixels(seed: int, width: int, height: int) -> np.ndarray:
 
 
 def synthesize_image_payloads(
-    spark, refs: DataFrame, ref_col: str = "media_ref", hash_impl: str = "xxhash64"
+    spark, refs: DataFrame, ref_col: str = "media_ref"
 ) -> DataFrame:
     """Deterministic raster payloads (real PPM/BMP bytes) for the refs.
 
     Like ``synthesize_media`` but the payload is a genuinely decodable
     image: format, dimensions and pixel ramp all derive from the ref hash
-    (:func:`_twin_hash` — ``'md5'`` is the DuckDB-reproducible twin).
+    (:func:`_twin_hash`, the DuckDB-reproducible md5 prefix).
     Encoding runs in an Arrow-batched ``mapInPandas`` kernel;
     partitioning does not affect results (per-row pure function).
     """
-    h = _twin_hash(ref_col, hash_impl)
+    h = _twin_hash(ref_col)
     spec = refs.select(
         F.col(ref_col).alias("media_ref"),
         F.when(F.pmod(h, F.lit(2)) == 0, F.lit("ppm")).otherwise(F.lit("bmp")).alias("fmt"),

@@ -37,9 +37,15 @@ def hash_bucket_expr(
     md5 twins) can never drift apart on substring width, seed-prefix
     format, or bucket count.
 
-    ``hash_impl="xxhash64"`` is the JVM hot path; ``"md5"`` is the
-    engine-portable twin — first 8 hex chars of ``md5('<seed>:<key>')``
-    as a big-endian integer, reproducible in any SQL engine with md5.
+    Two recipes, each with its callers:
+
+    * ``hash_impl="xxhash64"`` — :func:`sample_by_hash`, the KG pipeline's
+      node/edge sampler. Below proportion 1 it hashes every synapse row,
+      and xxhash64 is one JVM hash where md5 is a digest plus string work.
+    * ``"md5"`` — :func:`resample_by_group` and ``splits.split_expr``,
+      whose outputs the DuckDB oracles reproduce: the first 8 hex chars of
+      ``md5('<seed>:<key>')`` as a big-endian integer, which any SQL
+      engine with md5 recomputes.
     """
     key = F.col(key_col) if isinstance(key_col, str) else key_col
     if hash_impl == "md5":
@@ -174,7 +180,6 @@ def resample_by_group(
     key_col: str,
     default_rate: float = 1.0,
     seed: int = 42,
-    hash_impl: str = "xxhash64",
     copy_col: str = "copy_id",
 ) -> DataFrame:
     """Deterministic mixture resampling: emit each row ``rate(group)``
@@ -193,13 +198,14 @@ def resample_by_group(
 
     Scale shape: one narrow JVM projection + ``explode`` — NO shuffle at
     any rate; output amplification is bounded by ``max(rates)``.
-    Fractional thresholds are precomputed as integers against the 2^20
-    hash-bucket space, so an engine-portable oracle (``hash_impl="md5"``)
-    reproduces the exact copy set.
+    Rows hash with the md5 recipe of :func:`hash_bucket_expr` and
+    fractional thresholds are precomputed as integers against the 2^20
+    hash-bucket space, so a SQL oracle with md5 reproduces the exact copy
+    set.
     """
     import math
 
-    bucket = hash_bucket_expr(key_col, seed, hash_impl)
+    bucket = hash_bucket_expr(key_col, seed, "md5")
 
     def n_copies(rate: float) -> F.Column:
         if rate < 0:

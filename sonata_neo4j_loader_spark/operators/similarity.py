@@ -6,7 +6,7 @@ Five operators:
   Query set broadcast against the corpus. O(|Q|·N) — fine for small query
   sets at any corpus size, the yardstick for recall.
 * :func:`lsh_ann_topk` — random-hyperplane LSH (SimHash-for-vectors):
-  deterministic pseudo-random planes derived from xxhash64 (no stored
+  deterministic pseudo-random planes derived from md5 (no stored
   model), multi-band bucket join, exact cosine re-rank of candidates.
 * :func:`ivf_ann_topk` — IVF: a seeded coarse quantizer, each query
   probes its ``nprobe`` nearest inverted lists and re-ranks within them.
@@ -121,7 +121,7 @@ def brute_force_topk(
 
 
 def _md5_plane_row(plane: int, dim: int, seed: int) -> list[float]:
-    """Components of ONE md5-derived plane — the cross-engine twin.
+    """Components of ONE md5-derived LSH hyperplane.
 
     Planes are model-sized metadata (n_planes·dim floats), so computing
     them on the driver is like broadcasting a tiny model; a DuckDB oracle
@@ -138,39 +138,19 @@ def _md5_plane_row(plane: int, dim: int, seed: int) -> list[float]:
     return row
 
 
-def _plane_bit(
-    vec: Column, plane: int, dim: int, seed: int, hash_impl: str = "xxhash64"
-) -> Column:
-    """Sign bit of <vec, plane_p> with plane components derived from a hash
-    of (plane, dim, seed) ∈ [-1, 1] — deterministic, model-free.
+def lsh_bucket_bits(vec: Column, n_planes: int, dim: int, seed: int = 42) -> Column:
+    """Pack ``n_planes`` hyperplane sign bits into a bigint bucket key.
 
-    ``hash_impl='md5'`` embeds driver-computed literal components
-    (:func:`_md5_plane_row`) so a DuckDB oracle reproduces the buckets
-    exactly; the default xxhash64 derives them inline JVM-side.
+    Bit ``p`` is the sign of <vec, plane_p>; the plane components are
+    driver-computed md5 literals (:func:`_md5_plane_row`), so a DuckDB
+    oracle reproduces the buckets exactly.
     """
-    if hash_impl == "md5":
-        comps = F.array(*[F.lit(c) for c in _md5_plane_row(plane, dim, seed)])
-    else:
-        comps = F.transform(
-            F.sequence(F.lit(0), F.lit(dim - 1)),
-            lambda j: (
-                F.pmod(F.xxhash64(F.lit(plane), j, F.lit(seed)), F.lit(2000001)).cast("double")
-                - 1000000.0
-            )
-            / 1000000.0,
-        )
-    return dot(vec, comps) >= 0
-
-
-def lsh_bucket_bits(
-    vec: Column, n_planes: int, dim: int, seed: int = 42, hash_impl: str = "xxhash64"
-) -> Column:
-    """Pack ``n_planes`` hyperplane sign bits into a bigint bucket key."""
     out = F.lit(0).cast("long")
     for p in range(n_planes):
+        comps = F.array(*[F.lit(c) for c in _md5_plane_row(p, dim, seed)])
         out = out.bitwiseOR(
             F.when(
-                _plane_bit(vec, p, dim, seed, hash_impl),
+                dot(vec, comps) >= 0,
                 F.shiftleft(F.lit(1).cast("long"), p),
             ).otherwise(F.lit(0).cast("long"))
         )
@@ -184,7 +164,6 @@ def _lsh_bands(
     bands: int,
     dim: int,
     seed: int,
-    hash_impl: str = "xxhash64",
 ) -> DataFrame:
     """THE LSH banding step: ``df`` + ``(band, bucket)``, one row per band.
 
@@ -199,7 +178,7 @@ def _lsh_bands(
     mask = (1 << bits_per_band) - 1
     bits = F.col("_bits")
     return df.withColumn(
-        "_bits", lsh_bucket_bits(F.col(vec_col), n_planes, dim, seed, hash_impl)
+        "_bits", lsh_bucket_bits(F.col(vec_col), n_planes, dim, seed)
     ).select(
         *df.columns,
         F.inline(
@@ -229,7 +208,6 @@ def lsh_ann_topk(
     n_planes: int = 12,
     bands: int = 3,
     seed: int = 42,
-    hash_impl: str = "xxhash64",
 ) -> DataFrame:
     """Approximate top-k: hyperplane-LSH bucket join + exact re-rank.
 
@@ -237,7 +215,7 @@ def lsh_ann_topk(
     vectors agreeing on any full band become candidates; exact cosine
     re-ranks. At 10^12 scale the bucket join replaces the O(|Q|·N) scan
     with |Q|·(expected bucket size)·bands work; band count trades recall
-    for cost. ``hash_impl='md5'`` makes buckets DuckDB-reproducible.
+    for cost. The md5 planes make the buckets DuckDB-reproducible.
     """
     c = corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("c_vec"))
     q = queries.select(
@@ -245,7 +223,7 @@ def lsh_ann_topk(
     )
 
     def banded(df: DataFrame, vec: str) -> DataFrame:
-        return _lsh_bands(_with_norm(df, vec), vec, n_planes, bands, dim, seed, hash_impl)
+        return _lsh_bands(_with_norm(df, vec), vec, n_planes, bands, dim, seed)
 
     cands = (
         banded(c, "c_vec")
@@ -290,26 +268,20 @@ def ivf_centroids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
-    hash_impl: str = "xxhash64",
 ) -> DataFrame:
     """Deterministic coarse centroids: the ``n_centroids`` corpus vectors
-    with the smallest ``xxhash64(id, seed)`` — a seeded reservoir-style
-    pick that needs one pass and no iterative k-means (good enough for a
-    coarse quantizer; swap in k-means rounds if cluster balance matters).
+    with the smallest ``md5('{seed}:' || cast(id as string))`` — a seeded
+    reservoir-style pick that needs one pass and no iterative k-means (good
+    enough for a coarse quantizer; swap in k-means rounds if cluster
+    balance matters). A DuckDB oracle reproduces it with ``ORDER BY
+    md5('{seed}:' || CAST(id AS VARCHAR))``.
 
     ``orderBy().limit(n)`` plans TakeOrderedAndProject — per-partition
     top-n then a driver-side merge of n·P rows — instead of the
     single-partition shuffle a global window would need. The row_number
     that mints ``centroid_id`` runs *after* the limit, over exactly
-    ``n_centroids`` rows.
-
-    ``hash_impl='md5'`` ranks by ``md5('{seed}:' || cast(id as string))`` —
-    the DuckDB-reproducible twin (``ORDER BY md5('{seed}:' || CAST(id AS
-    VARCHAR))``); the seed stays meaningful in both hash families."""
-    if hash_impl == "md5":
-        rank = F.md5(F.concat(F.lit(f"{int(seed)}:"), F.col(id_col).cast("string")))
-    else:
-        rank = F.xxhash64(F.col(id_col), F.lit(seed))
+    ``n_centroids`` rows."""
+    rank = F.md5(F.concat(F.lit(f"{int(seed)}:"), F.col(id_col).cast("string")))
     picked = (
         corpus.select(F.col(id_col), F.col(vec_col))
         .orderBy(rank, F.col(id_col))
@@ -332,7 +304,6 @@ def ivf_ann_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     seed: int = 42,
-    hash_impl: str = "xxhash64",
 ) -> DataFrame:
     """IVF-style approximate top-k: coarse quantizer + in-list exact re-rank.
 
@@ -345,7 +316,7 @@ def ivf_ann_topk(
     Centroid selection (``ivf_centroids``) plans TakeOrderedAndProject —
     per-partition top-n + driver merge, no single-partition window shuffle.
     """
-    cents = ivf_centroids(corpus, n_centroids, id_col, vec_col, seed, hash_impl)
+    cents = ivf_centroids(corpus, n_centroids, id_col, vec_col, seed)
     corpus_lists = ivf_assign(
         corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("c_vec")),
         cents,
@@ -462,7 +433,6 @@ def build_ivf_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
-    hash_impl: str = "xxhash64",
     num_buckets: int = 8,
 ) -> dict:
     """Train the IVF coarse quantizer and persist it through the
@@ -477,8 +447,9 @@ def build_ivf_index(
       partitions (``ivf_ann_topk_prebuilt`` prunes at the file-listing
       level via the manifest-gated part filter);
     * ``meta`` — one row of build parameters (num_buckets, n_centroids,
-      seed, hash_impl) the query side needs to reproduce the bucket
-      mapping and validate probe compatibility.
+      seed); the query side reads ``num_buckets`` to reproduce the bucket
+      mapping. Older indexes carry a fourth column naming the centroid
+      hash; nothing reads it.
 
     Resume comes free from the sink's contract: a re-run fingerprint-skips
     unchanged partitions, so an appended corpus rewrites only the lists
@@ -489,7 +460,7 @@ def build_ivf_index(
     from ..sinks import materialize as mat
 
     spark = corpus.sparkSession
-    cents = ivf_centroids(corpus, n_centroids, id_col, vec_col, seed, hash_impl)
+    cents = ivf_centroids(corpus, n_centroids, id_col, vec_col, seed)
     lists = ivf_assign(
         corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")),
         cents,
@@ -512,8 +483,8 @@ def build_ivf_index(
         stage="ivf_lists",
     )
     spark.createDataFrame(
-        [(int(num_buckets), int(n_centroids), int(seed), hash_impl)],
-        "num_buckets int, n_centroids int, seed int, hash_impl string",
+        [(int(num_buckets), int(n_centroids), int(seed))],
+        "num_buckets int, n_centroids int, seed int",
     ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/meta")
     return {"centroids": r_cent, "lists": r_lists}
 

@@ -29,9 +29,10 @@ Scale posture:
   corpus: the corpus itself is never shuffled. The components step
   inherits ``connected_components``' auto local/distributed strategy.
 
-Fractions are converted to integer thresholds over the 2^20 hash-bucket
-space up front, so an engine-portable oracle (``hash_impl="md5"``)
-reproduces the exact assignment.
+Every split hashes its key with the md5 recipe of
+:func:`operators.sampling.hash_bucket_expr`, and fractions are converted
+to integer thresholds over the 2^20 hash-bucket space up front, so any
+SQL engine with md5 (the DuckDB oracle) reproduces the exact assignment.
 """
 
 from __future__ import annotations
@@ -75,14 +76,13 @@ def split_expr(
     key_col: str | Column,
     fractions: dict[str, float],
     seed: int = 42,
-    hash_impl: str = "xxhash64",
 ) -> Column:
     """Column expression assigning a split name per row (no shuffle).
 
     One CASE with ascending cumulative thresholds — the first threshold
     the bucket falls under wins, the last split is the fallthrough.
     """
-    bucket = hash_bucket_expr(key_col, seed, hash_impl)
+    bucket = hash_bucket_expr(key_col, seed, "md5")
     pairs = split_thresholds(fractions)
     if len(pairs) == 1:
         return F.lit(pairs[0][0])
@@ -97,7 +97,6 @@ def assign_splits(
     key_col: str,
     fractions: dict[str, float],
     seed: int = 42,
-    hash_impl: str = "xxhash64",
     split_col: str = "split",
 ) -> DataFrame:
     """Append ``split_col`` with a deterministic hash split on ``key_col``.
@@ -105,9 +104,7 @@ def assign_splits(
     Realized sizes converge to the fractions; every decision is a pure
     function of (key, seed) — partition-invariant and incremental-safe.
     """
-    return df.withColumn(
-        split_col, split_expr(key_col, fractions, seed, hash_impl)
-    )
+    return df.withColumn(split_col, split_expr(key_col, fractions, seed))
 
 
 def assign_splits_by_cluster(
@@ -118,7 +115,6 @@ def assign_splits_by_cluster(
     a_col: str = "id_a",
     b_col: str = "id_b",
     seed: int = 42,
-    hash_impl: str = "xxhash64",
     split_col: str = "split",
     group_col: str = "group_id",
 ) -> DataFrame:
@@ -137,4 +133,4 @@ def assign_splits_by_cluster(
     grouped = apply_canonical_mapping(
         df.withColumn(group_col, F.col(id_col)), mapping, group_col
     )
-    return assign_splits(grouped, group_col, fractions, seed, hash_impl, split_col)
+    return assign_splits(grouped, group_col, fractions, seed, split_col)

@@ -65,7 +65,7 @@ def test_md5_twin_matches_python_recompute(spark):
 
     docs = _docs(spark, 2_000)
     out = sampling.resample_by_group(
-        docs, "lang", {"en": 1.5}, "doc_id", hash_impl="md5", seed=7
+        docs, "lang", {"en": 1.5}, "doc_id", seed=7
     )
     got = sorted((r.doc_id, r.copy_id) for r in out.where(F.col("lang") == "en").collect())
     thr = int(round(0.5 * (1 << 20)))

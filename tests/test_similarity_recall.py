@@ -1,9 +1,9 @@
 """ANN recall pinned against exact brute force (sf0.01 embeddings).
 
 The approximate paths (hyperplane LSH, IVF coarse quantizer) are
-hash-seeded and not SQL-expressible, so the driver gate checks them
-rows-only; this test supplies the missing quality bound: recall@10 vs
-the exact ranking.
+md5-seeded, so the DuckDB oracles recompute their exact rows; this test
+supplies the quality bound the oracles cannot: recall@10 vs the exact
+ranking.
 """
 
 from __future__ import annotations
@@ -138,6 +138,29 @@ def test_prebuilt_index_build_query_resume(spark, emb, tmp_path_factory):
     again = similarity.build_ivf_index(emb, idx, n_centroids=16, num_buckets=8)
     assert again["lists"].rows_written == 0 and not again["lists"].partitions_written
     assert again["centroids"].rows_written == 0
+
+
+def test_prebuilt_index_with_the_older_meta_schema(spark, emb, tmp_path_factory):
+    # indexes built while the centroid hash was a parameter carry a fourth
+    # meta column naming it; the query side reads only num_buckets, so such
+    # an index must answer exactly like the inline build
+    idx = str(tmp_path_factory.mktemp("ivf_idx_old_meta"))
+    similarity.build_ivf_index(emb, idx, n_centroids=16, num_buckets=8)
+    meta = spark.read.parquet(f"{idx}/meta").collect()[0]
+    spark.createDataFrame(
+        [(meta.num_buckets, meta.n_centroids, meta.seed, "md5")],
+        "num_buckets int, n_centroids int, seed int, hash_impl string",
+    ).coalesce(1).write.mode("overwrite").parquet(f"{idx}/meta")
+    assert spark.read.parquet(f"{idx}/meta").columns == [
+        "num_buckets", "n_centroids", "seed", "hash_impl"
+    ]
+
+    q = emb.where(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    inline = similarity.ivf_ann_topk(emb, q, k=10, n_centroids=16, nprobe=4).collect()
+    prebuilt = similarity.ivf_ann_topk_prebuilt(spark, idx, q, k=10, nprobe=4).collect()
+    assert inline and sorted(map(tuple, prebuilt)) == sorted(map(tuple, inline))
 
 
 def test_prebuilt_prune_scans_only_probed_buckets(spark, emb, tmp_path_factory):

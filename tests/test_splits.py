@@ -48,7 +48,7 @@ def test_md5_twin_matches_python_recompute(spark):
     import hashlib
 
     docs = spark.range(2_000).select(F.col("id").alias("doc_id"))
-    out = splits.assign_splits(docs, "doc_id", FRACS, seed=13, hash_impl="md5")
+    out = splits.assign_splits(docs, "doc_id", FRACS, seed=13)
     got = {r.doc_id: r.split for r in out.collect()}
     thr = splits.split_thresholds(FRACS)
     for i in range(2_000):
