@@ -23,9 +23,6 @@ per-document row, never as a corpus-scale self-join.
   (``a < b`` by construction, no post-hoc ``least``/``greatest``), and
   the count is a second map-side-combined shuffle on the pair key — a
   corpus-universal hot pair partial-aggregates to one row per map task.
-* PMI is an opt-in third projection: per-entity document frequencies
-  are dimension-sized (one row per graph node) and broadcast onto the
-  pair counts; the document total rides as a broadcast 1-row scalar.
 """
 
 from __future__ import annotations
@@ -39,16 +36,10 @@ def cooccurrence_edges(
     doc_col: str = "doc_id",
     entity_col: str = "entity_id",
     min_count: int = 1,
-    include_pmi: bool = False,
 ) -> DataFrame:
     """``(entity_a, entity_b, n_docs)`` for every unordered entity pair
     mentioned together in at least ``min_count`` documents
     (``entity_a < entity_b`` lexicographically).
-
-    With ``include_pmi`` the pointwise mutual information
-    ``ln(N·c_ab / (c_a·c_b))`` is appended (rounded to 6 decimals),
-    where ``N`` counts documents with at least one linked entity and
-    ``c_x`` counts documents mentioning ``x``.
     """
     per_doc = linked.groupBy(F.col(doc_col).alias("doc")).agg(
         F.sort_array(F.collect_set(F.col(entity_col))).alias("ents")
@@ -66,45 +57,8 @@ def cooccurrence_edges(
     pairs = per_doc.select(F.explode(pair_arr).alias("p")).select(
         "p.entity_a", "p.entity_b"
     )
-    counts = (
+    return (
         pairs.groupBy("entity_a", "entity_b")
         .agg(F.count(F.lit(1)).alias("n_docs"))
         .where(F.col("n_docs") >= min_count)
-    )
-    if not include_pmi:
-        return counts
-    ent_docs = (
-        per_doc.select(F.explode("ents").alias("entity"))
-        .groupBy("entity")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    total = per_doc.agg(F.count(F.lit(1)).alias("_n_total"))
-    return (
-        counts.join(
-            F.broadcast(ent_docs.select(F.col("entity").alias("entity_a"), F.col("c").alias("_ca"))),
-            "entity_a",
-        )
-        .join(
-            F.broadcast(ent_docs.select(F.col("entity").alias("entity_b"), F.col("c").alias("_cb"))),
-            "entity_b",
-        )
-        .crossJoin(F.broadcast(total))
-        .select(
-            "entity_a",
-            "entity_b",
-            "n_docs",
-            # cast to double BEFORE multiplying: long*long overflows int64
-            # at 10^12-doc scale (N·c_ab ~ 10^19 > Long.MAX — ANSI throws,
-            # non-ANSI wraps negative and log() returns garbage); doubles
-            # carry the magnitude fine and the ratio stays exact at any
-            # fixture scale that fits 2^53
-            F.round(
-                F.log(
-                    F.col("_n_total").cast("double")
-                    * F.col("n_docs")
-                    / (F.col("_ca").cast("double") * F.col("_cb"))
-                ),
-                6,
-            ).alias("pmi"),
-        )
     )

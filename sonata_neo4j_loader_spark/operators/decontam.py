@@ -53,16 +53,3 @@ def contamination_report(
     hits = doc_ngrams(train, id_col, text_col, n).join(eval_grams, "gram")
     return hits.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_hits"))
 
-
-def decontaminate(
-    train: DataFrame,
-    eval_df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 8,
-) -> DataFrame:
-    """The training corpus with contaminated documents REMOVED (left-anti
-    join against the report's id set — doc-keyed, report is dimension-
-    sized: one row per contaminated doc, not per gram)."""
-    report = contamination_report(train, eval_df, id_col, text_col, n)
-    return train.join(report.select(id_col), id_col, "left_anti")

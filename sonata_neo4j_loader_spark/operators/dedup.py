@@ -526,8 +526,7 @@ def minhash_incremental_duplicates(
     The batch's postings lineage evaluates twice (once to collect the
     ≤ num_buckets probed partition ids, once in the candidate join) —
     deliberate: the batch is the SMALL side by definition, and a
-    persist() the caller never sees would leak in a long-lived session
-    (same policy as ``sample_exact_fraction``).
+    persist() the caller never sees would leak in a long-lived session.
     Callers probing with a large batch can persist it themselves.
     """
     from ..sinks import materialize as mat

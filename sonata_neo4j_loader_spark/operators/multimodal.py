@@ -1,18 +1,15 @@
 """Multimodal columns: opaque binary payloads + typed metadata.
 
 Images/audio/video are carried as ``binary`` columns with a metadata
-struct; decode / feature-extract / resize / frame-sample run as
-Arrow-batched ``mapInPandas`` stages. Uncompressed raster images (PPM P6
-and 24-bit BMP) decode for REAL via the pure-numpy parsers below
-(``decode_image`` / ``decode_image_stats``) — header parse, row padding,
-bottom-up order, and BGR swizzle are all genuine. Codecs that need an
-external library (JPEG/PNG/audio/video) remain STUBBED: in
-``extract_features``, ``deterministic=True`` substitutes a seeded fake
-decoder so the Spark-side plumbing — schema, batch shape, partitioning —
-is real and testable; ``deterministic=False`` decodes PPM/BMP image
-payloads and raises ``NotImplementedError`` only where
-Pillow/librosa/ffmpeg would genuinely be required. ``resize_media``
-computes the target geometry only and leaves payload bytes alone.
+struct; decode / feature-extract / frame-sample run as Arrow-batched
+``mapInPandas`` stages. Uncompressed raster images (PPM P6 and 24-bit BMP)
+decode for REAL via the pure-numpy parsers below (``decode_image`` /
+``decode_image_stats``) — header parse, row padding, bottom-up order, and
+BGR swizzle are all genuine. Codecs that need an external library
+(JPEG/PNG/audio/video) remain STUBBED: ``extract_features`` derives each
+feature vector from a seeded fake decoder, so the Spark-side plumbing —
+schema, batch shape, partitioning — is real and testable without
+Pillow/librosa/ffmpeg.
 
 Batch-shape contract: ``mapInPandas`` receives an iterator of
 pandas.DataFrame batches (one per Arrow record batch, bounded by
@@ -39,17 +36,6 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
-)
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_ref", StringType(), False),
-        StructField("media_type", StringType(), False),  # image|audio|video
-        StructField("payload", BinaryType(), True),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("duration_ms", IntegerType(), True),
-    ]
 )
 
 FEATURE_SCHEMA = StructType(
@@ -102,90 +88,17 @@ def _fake_feature(ref: str, media_type: str, dim: int) -> np.ndarray:
     return rng.standard_normal(dim).astype(np.float32)
 
 
-def resize_media(
-    media: DataFrame,
-    max_width: int = 224,
-    max_height: int = 224,
-) -> DataFrame:
-    """Aspect-preserving downscale for image/video rows (audio passes
-    through). The geometry — scale factor, rounded target dimensions — is
-    real and vectorized (numpy over the Arrow batch); the pixel resample
-    itself is where Pillow/ffmpeg would run, so only the metadata dims
-    change and payloads pass through as they are. Output schema = input
-    schema, so resize composes anywhere in the media pipeline."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            visual = pdf["media_type"].isin(["image", "video"]).to_numpy()
-            # MEDIA_SCHEMA permits null dims (natural for audio rows):
-            # resize only rows that are visual AND fully dimensioned,
-            # pass everything else through unchanged — nulls included.
-            w_ser = pdf["width"].astype("Int32")
-            h_ser = pdf["height"].astype("Int32")
-            w = w_ser.to_numpy(dtype="float64", na_value=np.nan)
-            h = h_ser.to_numpy(dtype="float64", na_value=np.nan)
-            valid = visual & np.isfinite(w) & np.isfinite(h)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                scale = np.minimum(1.0, np.minimum(max_width / w, max_height / h))
-                new_w = np.maximum(1.0, np.floor(w * scale))
-                new_h = np.maximum(1.0, np.floor(h * scale))
-            w_out, h_out = w_ser.copy(), h_ser.copy()
-            w_out[valid] = new_w[valid].astype("int64")
-            h_out[valid] = new_h[valid].astype("int64")
-            out = pdf.copy()
-            out["width"] = w_out
-            out["height"] = h_out
-            yield out
-
-    return media.mapInPandas(kernel, MEDIA_SCHEMA)
-
-
 def extract_features(
     media: DataFrame,
     dim: int = 16,
     frame_stride_ms: int = 1000,
-    deterministic: bool = True,
 ) -> DataFrame:
-    """Decode + feature-extract (+ frame-sample for video) via mapInPandas.
-
-    With ``deterministic=False``, image rows whose payload is PPM/BMP
-    decode for REAL (pure-numpy parsers below) and yield a ``dim``-bin
-    normalized grayscale-luma histogram; audio/video rows and
-    externally-coded images (JPEG/PNG/...) raise ``NotImplementedError``
-    — the only remaining stub, and a genuinely-external dependency
-    (Pillow/librosa/ffmpeg, not in this container).
-    """
+    """Feature-extract (+ frame-sample for video) via mapInPandas: a
+    ``dim``-vector per row from the seeded fake decoder, and one sampled
+    frame per ``frame_stride_ms`` of a video (at least one)."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if not deterministic:
-                feats = []
-                for t, payload in zip(
-                    pdf["media_type"], pdf["payload"], strict=True
-                ):
-                    if t != "image":
-                        raise NotImplementedError(
-                            "audio/video decoding requires librosa/ffmpeg; "
-                            "not available in this environment"
-                        )
-                    try:
-                        _, px = decode_image(bytes(payload))
-                    except ValueError as e:
-                        raise NotImplementedError(
-                            "externally-coded image formats require Pillow "
-                            f"(payload not PPM/BMP: {e})"
-                        ) from e
-                    feats.append(_luma_histogram(px, dim).tolist())
-                n_frames = [None] * len(pdf)
-                yield pd.DataFrame(
-                    {
-                        "media_ref": pdf["media_ref"],
-                        "media_type": pdf["media_type"],
-                        "feature": feats,
-                        "n_frames_sampled": pd.array(n_frames, dtype="Int32"),
-                    }
-                )
-                continue
             feats = [
                 _fake_feature(r, t, dim).tolist()
                 for r, t in zip(pdf["media_ref"], pdf["media_type"], strict=True)
@@ -242,21 +155,18 @@ def encode_ppm(pixels: np.ndarray) -> bytes:
     ).tobytes()
 
 
-def encode_bmp(pixels: np.ndarray, top_down: bool = False) -> bytes:
+def encode_bmp(pixels: np.ndarray) -> bytes:
     """Encode an (H, W, 3) uint8 RGB array as a 24-bit uncompressed BMP.
 
-    BMP stores rows bottom-up by default (``top_down=True`` writes the
-    negative-height variant), channels as BGR, each row zero-padded to a
-    4-byte boundary — the decoder must undo all three.
+    Rows bottom-up (positive height), channels as BGR, each row
+    zero-padded to a 4-byte boundary — the decoder must undo all three.
     """
     import struct
 
     h, w, c = pixels.shape
     if c != 3:
         raise ValueError("24-bit BMP encodes 3-channel RGB")
-    bgr = np.ascontiguousarray(pixels[:, :, ::-1], dtype=np.uint8)
-    if not top_down:
-        bgr = bgr[::-1]
+    bgr = np.ascontiguousarray(pixels[::-1, :, ::-1], dtype=np.uint8)
     row = w * 3
     stride = (row + 3) & ~3
     data = np.zeros((h, stride), dtype=np.uint8)
@@ -268,7 +178,7 @@ def encode_bmp(pixels: np.ndarray, top_down: bool = False) -> bytes:
         "<IiiHHIIiiII",
         40,
         w,
-        h if not top_down else -h,
+        h,
         1,
         24,
         0,
@@ -317,8 +227,9 @@ def _decode_bmp(buf: bytes) -> np.ndarray:
     import struct
 
     # header fields below end at byte 34 — length-check up front so a
-    # truncated header raises the documented ValueError, not struct.error
-    # (extract_features' external-codec gate catches only ValueError)
+    # truncated header raises decode_image's documented ValueError, not
+    # struct.error. A negative height marks top-down rows: encode_bmp never
+    # writes one, but outside payloads do.
     if len(buf) < 34:
         raise ValueError("truncated BMP header")
     off = struct.unpack_from("<I", buf, 10)[0]
@@ -349,9 +260,8 @@ def _decode_bmp(buf: bytes) -> np.ndarray:
 def decode_image(payload: bytes) -> tuple[str, np.ndarray]:
     """Decode a PPM-P6 or 24-bit-BMP payload to ``(fmt, HxWx3 uint8 RGB)``.
 
-    Raises ``ValueError`` for any other magic — the caller decides whether
-    that means "needs an external codec" (``extract_features``) or a bad
-    row.
+    Raises ``ValueError`` for any other magic and for a malformed header
+    or truncated pixel data.
     """
     if payload[:2] == b"P6":
         return "ppm", _decode_ppm(payload)
@@ -471,14 +381,3 @@ def decode_image_stats(
 
     return media.select(ref_col, payload_col).mapInPandas(kernel, DECODE_STATS_SCHEMA)
 
-
-def _luma_histogram(pixels: np.ndarray, bins: int) -> np.ndarray:
-    """Normalized integer-luma histogram of an (H, W, 3) uint8 RGB array.
-
-    Integer BT.601 luma ((299R + 587G + 114B) // 1000 ∈ [0, 255]) so the
-    feature is bit-deterministic; bin = luma * bins // 256.
-    """
-    flat = pixels.reshape(-1, 3).astype(np.int64)
-    luma = (flat[:, 0] * 299 + flat[:, 1] * 587 + flat[:, 2] * 114) // 1000
-    hist = np.bincount(luma * bins // 256, minlength=bins).astype(np.float32)
-    return hist / np.float32(flat.shape[0])

@@ -138,15 +138,3 @@ def parse_edge_population_name(
         .withColumn("target_pop", F.when(is_default, fallback).otherwise(parts.getItem(1)))
     )
 
-
-def reassemble_spans(exploded: DataFrame) -> DataFrame:
-    """Inverse of ``explode``: (doc_id, kind, text, media_ref, offset) -> documents.
-
-    Shuffle may deliver span rows in any order; ``array_sort`` restores the
-    per-row sequence (SURVEY.md §4 custom-invariant item 4).
-    """
-    return (
-        exploded.groupBy("doc_id")
-        .agg(F.collect_list(F.struct("kind", "text", "media_ref", "offset")).alias("spans"))
-        .withColumn("spans", F.expr(_SORT))
-    )

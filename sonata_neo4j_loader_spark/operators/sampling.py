@@ -109,32 +109,6 @@ def sample_exact_k(
     return df.orderBy(_hash_rank(key_col, seed, rank_expr), F.col(key_col)).limit(k)
 
 
-def sample_exact_fraction(
-    df: DataFrame, proportion: float, key_col: str, seed: int = 42
-) -> DataFrame:
-    """Exact-count fractional sample: exactly ``floor(total · p)`` rows.
-
-    ≙ ``int(total * proportion)`` in the reference (data_extraction.py:119).
-    Needs one counting pass (the reference pays the same: ``total`` comes
-    from the edge population size) + one TakeOrdered pass. The counting
-    pass runs on a key-only projection, so Catalyst prunes it down to a
-    parquet-metadata count when the input is a plain scan — cheaper than
-    caching the full rows, and no retained ``persist()`` on a frame the
-    caller owns (a long-lived session would otherwise leak one cached
-    frame per call). Caveat: the two passes re-evaluate the input's
-    lineage, so a truly NONDETERMINISTIC upstream could yield a ``k``
-    computed from different rows than the sample pass sees — such inputs
-    should be persisted/checkpointed by the caller first (the library's
-    own sources are deterministic).
-    """
-    if proportion >= 1.0:
-        return df
-    if proportion <= 0.0:
-        return df.where(F.lit(False))
-    k = int(df.select(key_col).count() * proportion)
-    return sample_exact_k(df, k, key_col, seed)
-
-
 def sample_k_per_group(
     df: DataFrame,
     group_col: str,

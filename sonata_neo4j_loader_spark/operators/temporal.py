@@ -158,13 +158,12 @@ def asof_join_bucketed(
     right_ts: str,
     right_payload: list[str],
     bucket_seconds: int = 24 * 3600,
-    tolerance_seconds: float | None = None,
 ) -> DataFrame:
     """Skew-proof two-phase as-of join: identical semantics to
-    :func:`asof_join` (including the largest-payload tie discipline and
-    ``tolerance_seconds``), but every window partitions on (key, time
-    bucket), so one pathological key's history spreads across buckets
-    instead of landing on a single reducer.
+    :func:`asof_join` without a tolerance (including the largest-payload
+    tie discipline), but every window partitions on (key, time bucket),
+    so one pathological key's history spreads across buckets instead of
+    landing on a single reducer.
 
     Phase 1 (seed derivation): the last right row per (key, bucket) —
     a bounded per-bucket window — then, over the per-key *bucket summary*
@@ -237,8 +236,7 @@ def asof_join_bucketed(
     rhs = rb.select(key, "_b", "_ts", *right_payload).withColumn("_side", F.lit(0))
     seed_rhs = seeds.withColumn("_side", F.lit(0))
     rhs_all = rhs.unionByName(seed_rhs)
-    out = _carry_right(_pad_union(lhs, rhs_all), [key, "_b"], right_payload).drop("_b")
-    return _apply_tolerance(out, left_ts, right_payload, tolerance_seconds)
+    return _carry_right(_pad_union(lhs, rhs_all), [key, "_b"], right_payload).drop("_b")
 
 
 def range_join_binned(

@@ -46,15 +46,12 @@ def build_vocab(
     df: DataFrame,
     text_col: str = "text",
     min_count: int = 1,
-    max_size: int | None = None,
 ) -> DataFrame:
     """``(term, term_id, count)`` — contiguous ids ``0..V-1`` assigned by
     (count desc, term asc), so id order is deterministic, ties are
     broken on the term string, and the most frequent term is id 0.
 
-    ``min_count`` drops rare terms before ranking; ``max_size`` keeps
-    only the top-``max_size`` terms (TakeOrderedAndProject — the cut is
-    deterministic under the same total order). The prefix-sum ranking
+    ``min_count`` drops rare terms before ranking. The prefix-sum ranking
     holds no persisted state, so the result needs no cleanup.
     """
     counts = (
@@ -63,8 +60,6 @@ def build_vocab(
         .agg(F.count(F.lit(1)).alias("count"))
         .where(F.col("count") >= min_count)
     )
-    if max_size is not None:
-        counts = counts.orderBy(F.col("count").desc(), "term").limit(max_size)
     # global rank without a global window: exclusive prefix sum of 1s in
     # (count desc, term) order == the 0-based row number
     keyed = counts.select(

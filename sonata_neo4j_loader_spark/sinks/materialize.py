@@ -135,9 +135,19 @@ def committed_partitions(spark: SparkSession, table_path: str) -> dict[int, Row]
     Only a missing manifest means "nothing committed": any other read
     failure (a corrupt or foreign file under ``_manifest``) is raised, never
     mistaken for a cold table that would be re-committed from seq 1.
+
+    A cold table is found with Hadoop's ``FileSystem.exists`` (the session's
+    Hadoop conf, so any scheme Spark reads), not by reading: Spark's reader
+    logs a WARN and a full ``FileNotFoundException`` trace for a missing
+    path before it raises ``PATH_NOT_FOUND``. That error stays caught for a
+    manifest deleted between the check and the read.
     """
+    path = _manifest_path(table_path)
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    if not jpath.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf()).exists(jpath):
+        return None
     try:
-        rows = spark.read.schema(MANIFEST_SCHEMA).parquet(_manifest_path(table_path)).collect()
+        rows = spark.read.schema(MANIFEST_SCHEMA).parquet(path).collect()
     except AnalysisException as e:
         if e.getCondition() != "PATH_NOT_FOUND":
             raise

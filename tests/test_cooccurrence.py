@@ -1,7 +1,6 @@
 from __future__ import annotations
 
 import itertools
-import math
 
 from sonata_neo4j_loader_spark.operators import cooccurrence
 
@@ -9,7 +8,7 @@ LINKED = [
     # doc 1 mentions a,b,c (b twice: repeat mentions count ONE doc)
     (1, "a"), (1, "b"), (1, "b"), (1, "c"),
     (2, "a"), (2, "b"),
-    (3, "c"),            # singleton doc: no pairs, counts toward N
+    (3, "c"),            # singleton doc: no pairs
     (4, "a"), (4, "c"),
 ]
 
@@ -19,13 +18,10 @@ def _py_pairs(linked):
     for d, e in linked:
         docs.setdefault(d, set()).add(e)
     pair_n: dict[tuple[str, str], int] = {}
-    ent_n: dict[str, int] = {}
     for ents in docs.values():
-        for e in ents:
-            ent_n[e] = ent_n.get(e, 0) + 1
         for a, b in itertools.combinations(sorted(ents), 2):
             pair_n[(a, b)] = pair_n.get((a, b), 0) + 1
-    return docs, pair_n, ent_n
+    return pair_n
 
 
 def test_cooccurrence_counts(spark):
@@ -34,8 +30,7 @@ def test_cooccurrence_counts(spark):
         (r.entity_a, r.entity_b): r.n_docs
         for r in cooccurrence.cooccurrence_edges(df).collect()
     }
-    _, pair_n, _ = _py_pairs(LINKED)
-    assert got == pair_n
+    assert got == _py_pairs(LINKED)
 
 
 def test_cooccurrence_min_count_filters(spark):
@@ -47,22 +42,6 @@ def test_cooccurrence_min_count_filters(spark):
     assert got == {("a", "b"): 2, ("a", "c"): 2}
 
 
-def test_cooccurrence_pmi(spark):
-    df = spark.createDataFrame(LINKED, "doc_id bigint, entity_id string")
-    rows = cooccurrence.cooccurrence_edges(df, include_pmi=True).collect()
-    docs, pair_n, ent_n = _py_pairs(LINKED)
-    n_total = len(docs)
-    for r in rows:
-        want = round(
-            math.log(
-                n_total * pair_n[(r.entity_a, r.entity_b)]
-                / (ent_n[r.entity_a] * ent_n[r.entity_b])
-            ),
-            6,
-        )
-        assert r.pmi == want
-
-
 def test_cooccurrence_empty_input(spark):
     df = spark.createDataFrame([], "doc_id bigint, entity_id string")
-    assert cooccurrence.cooccurrence_edges(df, include_pmi=True).count() == 0
+    assert cooccurrence.cooccurrence_edges(df).count() == 0

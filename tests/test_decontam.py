@@ -43,14 +43,6 @@ def test_duplicate_grams_count_once(spark):
     assert {(r.doc_id, r.n_hits) for r in got} == {(1, 2)}
 
 
-def test_decontaminate_removes_flagged_docs(spark):
-    train, eval_df = _frames(spark)
-    kept = sorted(
-        r.doc_id for r in decontam.decontaminate(train, eval_df, n=4).collect()
-    )
-    assert kept == [2, 4]
-
-
 def test_eval_side_broadcasts_and_single_shuffle(spark):
     # the corpus-scale gram stream must be probed map-side against a
     # broadcast eval gram set; the only hash exchange is the final

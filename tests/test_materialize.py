@@ -240,6 +240,18 @@ def test_unreadable_manifest_raises_instead_of_recommitting(spark, tmp_path):
     assert not any(p.name.startswith(f"{mat.PART_COL}=") for p in path.iterdir())
 
 
+def test_cold_table_is_found_without_reading_the_manifest(spark, tmp_path, monkeypatch):
+    """A read of the missing ``_manifest`` would log a FileNotFoundException
+    trace before PATH_NOT_FOUND; a cold table must be decided without one."""
+    from pyspark.sql import DataFrameReader
+
+    def no_read(self, *paths):
+        raise AssertionError(f"read {paths}")
+
+    monkeypatch.setattr(DataFrameReader, "parquet", no_read)
+    assert mat.committed_partitions(spark, str(tmp_path / "cold")) is None
+
+
 def test_read_by_keys_scans_only_their_parts(spark, triples_df, tmp_path):
     import re
 

@@ -1,12 +1,13 @@
-"""Multimodal plumbing: schema, batch shape, determinism, stub gating.
+"""Multimodal plumbing: schema, batch shape, determinism, raster decode.
 
-The decode kernels are stubbed (no Pillow/ffmpeg here) — what MUST be
-real and tested is the Spark side: mapInPandas schemas, partitioning
-independence, the resize geometry, and the explicit NotImplementedError
-on the real-codec path.
+The feature kernel is stubbed (no Pillow/ffmpeg here) — what MUST be
+real and tested is the Spark side (mapInPandas schemas, partitioning
+independence, frame sampling) and the pure-numpy PPM/BMP decoder.
 """
 
 from __future__ import annotations
+
+import struct
 
 import pytest
 from pyspark.sql import functions as F
@@ -42,47 +43,6 @@ def test_frame_sampling_only_for_video(media):
             assert r.n_frames_sampled is None
 
 
-def test_resize_geometry(media):
-    out = {r.media_ref: r for r in multimodal.resize_media(media, 224, 224).collect()}
-    for r in media.collect():
-        o = out[r.media_ref]
-        if r.media_type == "audio":
-            assert (o.width, o.height) == (r.width, r.height)
-            continue
-        assert o.width <= 224 and o.height <= 224
-        if r.width > 224 or r.height > 224:
-            # aspect preserved within floor-rounding
-            scale = min(224 / r.width, 224 / r.height)
-            assert o.width == max(1, int(r.width * scale))
-            assert o.height == max(1, int(r.height * scale))
-        else:
-            assert (o.width, o.height) == (r.width, r.height)
-        assert o.payload == r.payload  # stub never touches pixels
-
-
-def test_resize_preserves_null_dims(spark):
-    # MEDIA_SCHEMA permits null width/height (natural for audio, possible
-    # for any external media table) — resize must pass nulls through, not
-    # crash on NaN→Int32 conversion.
-    rows = [
-        ("a://1", "audio", None, None, None, 5000),
-        ("i://2", "image", None, None, 400, 5000),  # half-dimensioned
-        ("i://3", "image", None, 640, 480, None),
-        ("v://4", "video", None, None, None, 9000),
-    ]
-    media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    out = {r.media_ref: r for r in multimodal.resize_media(media, 224, 224).collect()}
-    assert (out["a://1"].width, out["a://1"].height) == (None, None)
-    assert (out["i://2"].width, out["i://2"].height) == (None, 400)
-    assert (out["i://3"].width, out["i://3"].height) == (224, 168)
-    assert (out["v://4"].width, out["v://4"].height) == (None, None)
-
-
-def test_real_codec_path_is_gated(media):
-    with pytest.raises(Exception, match="NotImplementedError|Pillow"):
-        multimodal.extract_features(media, deterministic=False).collect()
-
-
 # ---------------------------------------------------------------------------
 # REAL raster decode (PPM P6 / 24-bit BMP, pure numpy) — no longer stubbed
 # ---------------------------------------------------------------------------
@@ -104,8 +64,11 @@ def test_encode_decode_roundtrip_all_paddings():
         assert fmt == "ppm" and np.array_equal(out, px)
         fmt, out = multimodal.decode_image(multimodal.encode_bmp(px))
         assert fmt == "bmp" and np.array_equal(out, px), (w, h)
-        # negative-height (top-down) BMP variant
-        fmt, out = multimodal.decode_image(multimodal.encode_bmp(px, top_down=True))
+        # negative-height (top-down) BMP variant: rows stored first-to-last,
+        # the height field (offset 22) negated
+        buf = bytearray(multimodal.encode_bmp(px[::-1]))
+        struct.pack_into("<i", buf, 22, -h)
+        fmt, out = multimodal.decode_image(bytes(buf))
         assert fmt == "bmp" and np.array_equal(out, px)
 
 
@@ -152,39 +115,11 @@ def test_decode_stats_partition_invariant_and_correct(spark):
         assert row.n_pixels == m.width * m.height
 
 
-def test_real_feature_path_decodes_ppm_bmp(spark):
-    # the deterministic=False gate is now NARROW: decodable image payloads
-    # produce a REAL luma-histogram feature; only external codecs raise
-    import numpy as np
-
-    refs = spark.range(12).select(
-        F.format_string("img://doc/%d.png", F.col("id")).alias("media_ref")
-    )
-    imgs = multimodal.synthesize_image_payloads(spark, refs)
-    media = imgs.select(
-        "media_ref",
-        F.lit("image").alias("media_type"),
-        "payload",
-        "width",
-        "height",
-        F.lit(None).cast("int").alias("duration_ms"),
-    )
-    rows = multimodal.extract_features(media, dim=16, deterministic=False).collect()
-    assert len(rows) == 12
-    payloads = {r.media_ref: bytes(r.payload) for r in imgs.collect()}
-    for r in rows:
-        assert len(r.feature) == 16
-        assert abs(sum(r.feature) - 1.0) < 1e-5
-        _, px = multimodal.decode_image(payloads[r.media_ref])
-        exp = multimodal._luma_histogram(px, 16)
-        assert np.allclose(r.feature, exp)
-
-
 def test_decode_rejects_truncated_and_degenerate_headers():
     import pytest as _pytest
 
     # a 'BM' magic with a truncated header must raise the documented
-    # ValueError (struct.error would escape extract_features' codec gate)
+    # ValueError, not struct.error
     for bad in (b"BM", b"BM" + b"\x00" * 20):
         with _pytest.raises(ValueError, match="truncated"):
             multimodal.decode_image(bad)

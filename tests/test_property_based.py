@@ -4,8 +4,8 @@ pure-Python oracles.
 * connected components (the distributed star-contraction path) against a
   from-scratch union-find on random graphs — shapes no hand-picked fixture
   covers (SURVEY.md §5: the golden layer the reference lacks);
-* the per-row span-sequence invariant through explode -> shuffle ->
-  reassemble on randomly ordered span arrays;
+* the per-row span-sequence invariant through ``parse_documents`` (the
+  frame ``build_triples`` audits) on randomly ordered span arrays;
 * the as-of join and binned range join against brute-force python
   re-derivations on random timestamp layouts (ties, duplicates, empty
   sides, sub-gap clusters).
@@ -106,9 +106,8 @@ def test_span_invariant_through_reassembly(spark, docs, data):
         "media_ref:string,offset:int>>"
     )
     documents = spark.createDataFrame(rows, schema)
-    exploded = documents.selectExpr("doc_id", "inline(spans)")
-    rebuilt = parse.reassemble_spans(exploded)
-    assert parse.audit_span_invariant(documents, rebuilt).count() == 0
+    parsed = parse.parse_documents(documents).select("doc_id", "spans")
+    assert parse.audit_span_invariant(documents, parsed).count() == 0
 
 
 # ---------------------------------------------------------------------------

@@ -24,14 +24,6 @@ def test_exact_k_edge_counts(spark):
     assert sampling.sample_exact_k(df, 99, "k").count() == 10
 
 
-def test_exact_fraction_count(spark):
-    df = spark.range(1000).select(F.col("id").alias("k"))
-    out = sampling.sample_exact_fraction(df, 0.25, "k")
-    assert out.count() == 250  # exactly floor(total * p), unlike Bernoulli
-    assert sampling.sample_exact_fraction(df, 1.0, "k").count() == 1000
-    assert sampling.sample_exact_fraction(df, 0.0, "k").count() == 0
-
-
 def test_exact_k_seed_changes_selection(spark):
     df = spark.range(1000).select(F.col("id").alias("k"))
     a = {r.k for r in sampling.sample_exact_k(df, 50, "k", seed=1).collect()}
